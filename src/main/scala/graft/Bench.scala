@@ -22,8 +22,9 @@ object Bench {
         "be read as regressions (re-run solo before comparing)")
     else None
 
-  /** The serving-session config Bench measures under — shared with the
-    * Dev* probes so their timings are comparable to bench numbers. */
+  /** The serving-session config Bench measures under — shared with
+    * Verify, Inspect, the DevBenchSubset/DevJobProbe tools and the
+    * perfbench harness so their plans and timings match bench numbers. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     SparkSession.builder()
@@ -211,8 +212,7 @@ object Bench {
       "{" + core + s""","notes":${Verify.q(note)}}""" + "\n")
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] bench_out.json write failed: $e") }
-    PipelineQueries.clearCaches()
-    spark.stop()
-    println(line)
+    try { Artifacts.clear(); spark.stop() }
+    finally println(line)
   }
 }

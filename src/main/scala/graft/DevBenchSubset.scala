@@ -57,7 +57,7 @@ object DevBenchSubset {
         s"""{"queries":$qs,"jobs":$js,"floor_sec":$floorSec,"sf":${Verify.q(sfDir)}}""" + "\n")
       println(s"[subset] wrote $path (floor_sec $floorSec)")
     }
-    PipelineQueries.clearCaches()
+    Artifacts.clear()
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time one named query (optionally after warmup) and dump its
   * formatted physical plan — the `.explain`-and-iterate loop of the
   * build instructions. Usage:
@@ -16,30 +14,7 @@ object Inspect {
       .getOrElse("/root/testdata/sf0.01")
     val doExplain = args.contains("--explain")
     val cold = args.contains("--cold")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-mode scan parallelism: the testdata tables are single
-      // small parquet files, and the default 4 MB file-open cost floors
-      // maxSplitBytes so a 2 MB table scans as ONE task (the partial
-      // aggregate then runs single-threaded while DuckDB splits by row
-      // group). 128 KB lets bytes/parallelism drive the split; cluster
-      // deployments keep the default (many-file inputs split by file)
-      .config("spark.sql.files.openCostInBytes", "131072")
-      // dictionaries are classic broadcast dims at bench scale; at true
-      // cluster scale AQE falls back to SMJ automatically past the limit
-      .config("spark.sql.autoBroadcastJoinThreshold", "134217728")
-      // interactive serving: results are page-sized and every shuffle is
-      // a fixed, small partition count (this session's cpu count), so
-      // AQE's per-exchange re-planning only adds a scheduler round-trip
-      // per stage (~1 extra job per query at the local-mode floor);
-      // batch/pipeline sessions at corpus scale should keep AQE on
-      // (skew-join splitting, partition coalescing)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("WARN")
     if (!cold) SparkEntry.warmup(spark, sfDir)
     val fn = SparkEntry.queries(name)

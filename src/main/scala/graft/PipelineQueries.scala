@@ -67,14 +67,14 @@ object PipelineQueries {
 
   // MinHash pairs (docs + planted dup) shared by q_doc_minhash and
   // q_doc_clusters — computed once per sfDir. minhashDedup returns an
-  // eagerly-materialized (localCheckpoint'd) frame, so the cache holds no
-  // persist of its own; [[clearCaches]] releases the references at the
-  // end of a Verify/Bench run (library users: call it on context close).
-  private val pairsCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  // eagerly-materialized (localCheckpoint'd) frame, so the entry holds no
+  // persist of its own; [[Artifacts.clear]] releases the references at
+  // the end of a Verify/Bench run (library users: call it on context
+  // close).
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    pairsCache.computeIfAbsent(dir, { _ =>
+    Artifacts("minhashPairs", dir) {
       Dedup.minhashDedup(minhashCorpus(s, dir), "doc_id", "text", threshold = 0.8)
-    })
+    }
 
   /** Documents plus a planted exact duplicate of doc 0 (id 1000000) —
     * the corpus every MinHash gate runs over. Shared with
@@ -136,65 +136,59 @@ object PipelineQueries {
   // canonical corpus, one eager materialization per sfDir: this frame
   // is BOTH the gate's DSIR input and the corpus the exported
   // `pipeline_lambda` table is fit on — one derivation, both sides.
-  private val pipeCleanCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def pipelineCleaned(s: SparkSession, dir: String): DataFrame =
-    pipeCleanCache.computeIfAbsent(dir, { _ =>
+    Artifacts("pipelineCleaned", dir) {
       graft.ops.Curation.cleanedStage(pipelineCanon(s, dir), pipeBench(s, dir),
           "doc_id", "text", pipelinePairs(s, dir))
         .localCheckpoint(eager = true)
-    })
+    }
 
   // Stages 1–3 of the composed curation chain (normalize → LR cut →
   // canonical exact dedup), one eager materialization per sfDir: the
   // canonical corpus feeds the pair build, the gate AND the oracle-aux
-  // export — one derivation everywhere (the pairsCache treatment).
-  private val pipeCanonCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  // export — one derivation everywhere (the minhashPairs treatment).
   private def pipelineCanon(s: SparkSession, dir: String): DataFrame =
-    pipeCanonCache.computeIfAbsent(dir, { _ =>
+    Artifacts("pipelineCanon", dir) {
       graft.ops.Curation.normalizedSurvivors(
           pipelineCorpus(s, dir), qlrModel(s, dir), "doc_id", "text")
         .localCheckpoint(eager = true)
-    })
+    }
 
   // MinHash pairs over the pipeline's canonical corpus — the
   // `pipeline_pairs` oracle seam (minhashDedup localCheckpoints, so the
-  // cache holds no persist; [[clearCaches]] releases the references).
-  private val pipePairsCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  // entry holds no persist; [[Artifacts.clear]] releases the references).
   private def pipelinePairs(s: SparkSession, dir: String): DataFrame =
-    pipePairsCache.computeIfAbsent(dir, { _ =>
+    Artifacts("pipelinePairs", dir) {
       Dedup.minhashDedup(pipelineCanon(s, dir), "doc_id", "text", threshold = 0.8)
-    })
+    }
 
   // The pipeline's DSIR λ table — a FITTED POLICY ARTIFACT (the qlrModel
   // treatment): fit ONCE per sfDir on the cached cleaned stage against
   // the normalized bench target, exported verbatim as the
   // `pipeline_lambda` oracle seam, and applied (never refit) by the
   // gate. λ is bounded by the feature-bucket count, so the eager
-  // materialization is plan-small; [[clearCaches]] releases it.
-  private val pipeLambdaCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  // materialization is plan-small; [[Artifacts.clear]] releases it.
   private def pipelineLambda(s: SparkSession, dir: String): DataFrame =
-    pipeLambdaCache.computeIfAbsent(dir, { _ =>
+    Artifacts("pipelineLambda", dir) {
       graft.ops.Dsir.logRatioWeights(pipelineCleaned(s, dir),
           graft.ops.Curation.normalizedBench(pipeBench(s, dir), "text"),
           "doc_id", "text")
         .localCheckpoint(eager = true)
-    })
+    }
 
-  // One BPE training run per sfDir — the cache OWNER for both trainer
+  // One BPE training run per sfDir — the artifact OWNER for both trainer
   // artifacts (merge table, segmented vocabulary) and every consumer of
   // the learned tokenizer (q_doc_bpe_merges / _encode / _tokens /
   // q_doc_pack_bpe). The merge table is a driver-local literal frame;
   // the segmented vocabulary is eagerly localCheckpoint'd so no
-  // consumer re-runs the k sequential training rounds ([[clearCaches]]
-  // releases the references — the semanticFoldCache treatment).
-  private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
+  // consumer re-runs the k sequential training rounds ([[Artifacts.clear]]
+  // releases the references).
   private def bpeArtifacts(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bpeCache.computeIfAbsent(dir, { _ =>
+    Artifacts("bpeArtifacts", dir) {
       val (m, seg) = TextAnalysis.bpeTrainArtifacts(docsPar(s, dir), "text",
         merges = 8)
       (m, seg.localCheckpoint(eager = true))
-    })
+    }
 
   /** Documents plus TWO plants for the SimHash pair gate: an exact copy
     * of doc 0 (id 1000000 — hamming 0, guarantees the gate is never
@@ -224,13 +218,12 @@ object PipelineQueries {
   // state (and re-paid the same cost five times). At corpus scale the
   // file count provides this parallelism for free, so the barrier is
   // input plumbing, not operator work — materialize it once per sfDir.
-  private val docsCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def docsPar(s: SparkSession, dir: String): DataFrame =
-    docsCache.computeIfAbsent(dir, { _ =>
+    Artifacts("docsPar", dir) {
       docs(s, dir).select("doc_id", "text")
         .repartition(s.sparkContext.defaultParallelism)
         .localCheckpoint(eager = true)
-    })
+    }
 
   // Shared (doc_id, term, tf) aggregate + doc count for the term-stats
   // gates: tf-idf and unigram surprisal both start from the same token
@@ -238,37 +231,32 @@ object PipelineQueries {
   // substrate once and derives every term metric from it. The cached
   // frame is localCheckpoint'd (eager), so each gate's timed work is
   // its own term-keyed aggregation, not a re-explode of the corpus.
-  private val tfCache = new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Long)]()
   private def termFreq(s: SparkSession, dir: String): (DataFrame, Long) =
-    tfCache.computeIfAbsent(dir, { _ =>
+    Artifacts("termFreq", dir) {
       val d = docsPar(s, dir)
       (TextAnalysis.termFrequencies(d, "doc_id", "text")
         .localCheckpoint(eager = true), d.count())
-    })
+    }
 
   // Synthetic PNG source shared by q_mm_features runs: encoding 500 PNGs
   // is input *generation* (a stand-in for reading media files), not part
   // of the decode/featurize operator under test — materialize it once per
   // sfDir so the timed query measures the operator.
-  private val mediaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Dataset[Multimodal.MediaRow]]()
   private def syntheticMedia(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[Multimodal.MediaRow] =
-    mediaCache.computeIfAbsent(dir, { _ =>
+    Artifacts("syntheticMedia", dir) {
       // repartition: the single-file source would otherwise encode AND
       // decode every image on one task (file count provides this at scale)
       Multimodal.syntheticMedia(
           docs(s, dir).repartition(s.sparkContext.defaultParallelism), "doc_id", "text")
         .localCheckpoint(eager = true)
-    })
+    }
 
-  private val audioCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Dataset[Multimodal.MediaRow]]()
   private def syntheticAudio(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[Multimodal.MediaRow] =
-    audioCache.computeIfAbsent(dir, { _ =>
+    Artifacts("syntheticAudio", dir) {
       Multimodal.syntheticAudio(
           docs(s, dir).repartition(s.sparkContext.defaultParallelism), "doc_id", "text")
         .localCheckpoint(eager = true)
-    })
+    }
 
   // Norm-carrying embedding substrate shared by the three embedding-pair
   // gates (near_dup / dedup_keep / top_pairs), the same
@@ -278,39 +266,24 @@ object PipelineQueries {
   // consumer repays identically — compute them once per sfDir and let
   // each gate's timed work be its own O(n²)/component pass. The "__n"
   // column is candidatePairs' precomputed-norm contract.
-  private val embParCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def embNormed(s: SparkSession, dir: String): DataFrame =
-    embParCache.computeIfAbsent(dir, { _ =>
+    Artifacts("embNormed", dir) {
       emb(s, dir).select(col("vec_id"), col("embedding"), col("label"),
           sqrt(graft.functions.DotProduct(col("embedding"), col("embedding"))).as("__n"))
         .repartition(s.sparkContext.defaultParallelism)
         .localCheckpoint(eager = true)
-    })
+    }
 
   // Row count of the embeddings table per sfDir: a pipeline counts its
   // input once, not once per operator — candidatePairs' brute-vs-LSH
   // routing probe rides this instead of a fresh count job per query.
-  private val embCountCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def embCount(s: SparkSession, dir: String): Long =
-    embCountCache.computeIfAbsent(dir, { _ => Long.box(emb(s, dir).count()) })
+    Artifacts("embCount", dir)(emb(s, dir).count())
 
   // Same once-per-input counting for the documents table — boilerplate's
   // df-threshold needs the corpus size.
-  private val docsCountCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def docsCount(s: SparkSession, dir: String): Long =
-    docsCountCache.computeIfAbsent(dir, { _ => Long.box(docsPar(s, dir).count()) })
-
-  /** Drop cached intermediate frames (their checkpoint blocks are freed
-    * once unreferenced). Harness lifecycle hook — not needed between
-    * queries. */
-  def clearCaches(): Unit = {
-    pairsCache.clear(); mediaCache.clear(); audioCache.clear()
-    docsCache.clear(); tfCache.clear(); embCountCache.clear()
-    docsCountCache.clear(); embParCache.clear(); pcaCache.clear()
-    qlrCache.clear(); pipeCanonCache.clear(); pipePairsCache.clear()
-    bpeCache.clear(); pipeCleanCache.clear(); pipeLambdaCache.clear()
-    RdfQueries.clearCaches()
-  }
+    Artifacts("docsCount", dir)(docsPar(s, dir).count())
 
   // One fitted PCA model per sfDir, shared by the q_emb_pca gate and
   // [[exportOracleAux]]'s policy dump: the moment merge's FP sum order
@@ -318,11 +291,10 @@ object PipelineQueries {
   // so a re-fit could differ in low bits and flip a 4-dp-rounded
   // coordinate between the gate and the oracle's exported basis. One
   // fit per dir makes them read the SAME model by construction.
-  private val pcaCache = new java.util.concurrent.ConcurrentHashMap[String, graft.ops.PcaModel]()
   private def pcaModel(s: SparkSession, dir: String): graft.ops.PcaModel =
-    pcaCache.computeIfAbsent(dir, { _ =>
+    Artifacts("pcaModel", dir) {
       graft.ops.Pca.fit(emb(s, dir), "embedding", k = 8, whiten = true)
-    })
+    }
 
   // One LR fit per sfDir, shared by the q_doc_quality_lr gate and
   // [[exportOracleAux]]'s qlr_model dump — both sides read the SAME e8
@@ -336,10 +308,8 @@ object PipelineQueries {
   // non-vacuous learned cut. The heavy schedule (5000 full-batch
   // iters) runs on the DRIVER over the ≤100-doc training slice; the
   // corpus never sees an iteration.
-  private val qlrCache = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.ops.QualityClassifier.LrModel]()
   private def qlrModel(s: SparkSession, dir: String): graft.ops.QualityClassifier.LrModel =
-    qlrCache.computeIfAbsent(dir, { _ =>
+    Artifacts("qlrModel", dir) {
       val ratioE4 = round(TextAnalysis.stopwordCount(col("text")).cast("double")
         * 10000 /
         greatest(TextAnalysis.tokenCount(col("text")).cast("double"), lit(1.0)))
@@ -348,7 +318,7 @@ object PipelineQueries {
         .withColumn("label", (ratioE4 >= 700L).cast("int"))
       graft.ops.QualityClassifier.train(labeled, "doc_id", "text", "label",
         iters = 5000, lr = 8.0)
-    })
+    }
 
   /** The synthetic media parameters as Spark derives them from the
     * corpus text (Multimodal.syntheticPng: w = 8 + h mod 24,

@@ -21,15 +21,6 @@ object RdfQueries {
 
   private def rctx(s: SparkSession, dir: String) = Rdfize.ctx(s, dir)
 
-  // One materialized semantic score fold per sfDir, shared by every
-  // q_rdf_semantic_contract invocation — the cache OWNER for that
-  // gate's substrate (localCheckpoint blocks are freed once the
-  // reference drops; [[clearCaches]] is wired into
-  // PipelineQueries.clearCaches' harness lifecycle hook).
-  private val semanticFoldCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[graft] def clearCaches(): Unit = semanticFoldCache.clear()
-
   /** Decode a subject-hash set to sorted IRI strings.
     *
     * The sort is presentational (gate determinism), so it runs as a
@@ -492,15 +483,15 @@ object RdfQueries {
       val opts = QueryOpts(
         filters = Seq(FilterQ(p = "semantic", o = "NATION_3 NATION_3")), size = 10)
       // the fold feeds the law aggregate AND the page — shared as ONE
-      // eagerly-checkpointed frame per sfDir (the pairsCache cache-owner
-      // idiom, released by clearCaches) so the ANN subtree never
+      // eagerly-checkpointed frame per sfDir (an [[Artifacts]] entry,
+      // released by Artifacts.clear) so the ANN subtree never
       // re-evaluates per law and no per-call persist can leak a cached
       // plan into the session (the round-10 shape did exactly that)
-      val folded = semanticFoldCache.computeIfAbsent(dir, { _ =>
+      val folded = Artifacts("semanticFold", dir) {
         QueryEngine.scoreChain(ctx, opts).get
           .groupBy("s").agg(max("score").as("score"))
           .localCheckpoint(true)
-      })
+      }
       val pageDf = QueryEngine.wantedPage(ctx, opts,
         folded.select("s"), Some(folded))
       val sem = ctx.semantic.get.select(col("hash").as("s"), lit(1).as("__m"))

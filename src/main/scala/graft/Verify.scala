@@ -1,34 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-mode scan parallelism: the testdata tables are single
-      // small parquet files, and the default 4 MB file-open cost floors
-      // maxSplitBytes so a 2 MB table scans as ONE task (the partial
-      // aggregate then runs single-threaded while DuckDB splits by row
-      // group). 128 KB lets bytes/parallelism drive the split; cluster
-      // deployments keep the default (many-file inputs split by file)
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.autoBroadcastJoinThreshold", "134217728")
-      // interactive serving: results are page-sized and every shuffle is
-      // a fixed, small partition count (this session's cpu count), so
-      // AQE's per-exchange re-planning only adds a scheduler round-trip
-      // per stage (~1 extra job per query at the local-mode floor);
-      // batch/pipeline sessions at corpus scale should keep AQE on
-      // (skew-join splitting, partition coalescing)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session()
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // auxiliary oracle inputs (e.g. the MinHash pair table DuckDB's
@@ -56,7 +34,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Verify.q(k)}: ${Verify.q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    PipelineQueries.clearCaches()
+    Artifacts.clear()
     spark.stop()
   }
 

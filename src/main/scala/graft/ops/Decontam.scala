@@ -17,6 +17,20 @@ import org.apache.spark.sql.functions._
   */
 object Decontam {
 
+  /** The per-row rebuild cutoff shared by [[stripDupSpans]] and
+    * [[graft.ops.TextAnalysis.stripBoilerplateLines]]: while elements ×
+    * flagged positions stays at or below it, each element is tested
+    * with a direct exists() probe over the flagged set; above it, the
+    * rebuild slices the sorted gaps between flagged positions instead.
+    * Measured, not assumed: a gaps-only rebuild ran ~20% slower on the
+    * sf1 corpus, because its per-gap slice allocations beat the
+    * constant-light exists() lambda only when the product is large.
+    * 4·10⁶ interpreted probes cost single-digit milliseconds and cover
+    * every realistic document; the gap path removes the quadratic-CPU
+    * hazard (a heavily duplicated document near the maxTokens cap would
+    * pay ~10¹³ probes). */
+  private[ops] val RebuildExistsCutoff = 4000000L
+
   /** Distinct word n-grams per row: (id, gram). Rows shorter than `n`
     * words contribute nothing. */
   private[ops] def grams(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
@@ -157,17 +171,10 @@ object Decontam {
     val starts = grams.join(dup, "gram")
       .groupBy(col("id"))
       .agg(collect_set(col("gpos")).as("__starts"))
-    // row-local rebuild, two regimes switched on the ACTUAL cost model
-    // (measured, not assumed — a gaps-only rebuild ran ~20% slower on
-    // the sf1 corpus because its per-gap slice allocations beat the
-    // constant-light exists() lambda only when the product below is
-    // large):
-    //  - tokens × |starts| ≤ 4·10⁶ (every realistic document): the
-    //    direct per-token exists() test — that many interpreted probes
-    //    cost single-digit milliseconds;
-    //  - beyond it (the quadratic-CPU hazard: a heavily duplicated
-    //    document near the maxTokens cap would pay ~10¹³ probes):
-    //    expand the start set once into a sorted distinct
+    // row-local rebuild, two regimes switched at [[RebuildExistsCutoff]]:
+    //  - tokens × |starts| at or below it: the direct per-token
+    //    exists() test;
+    //  - beyond it: expand the start set once into a sorted distinct
     //    covered-position array, fence it with -1 and |toks|, and
     //    slice the token array over the UNCOVERED gaps between
     //    consecutive boundaries — O(tokens + n·|starts|), each token
@@ -189,7 +196,7 @@ object Decontam {
     val uncovered = (t: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =>
       t =!= "" && !exists(col("__starts"), s => i >= s && i <= s + lit(n - 1))
     val keptToks = when(
-      size(col("__starts")).cast("long") * size(col("__toks")) <= 4000000L,
+      size(col("__starts")).cast("long") * size(col("__toks")) <= RebuildExistsCutoff,
       filter(col("__toks"), uncovered)).otherwise(gapToks)
     df.select(col(idCol).as("id"), col(textCol))
       .join(starts, Seq("id"), "left")

@@ -141,6 +141,11 @@ object TextAnalysis {
     * boilerplate relation is NOT bounded small at corpus scale, so no
     * broadcast assumption), and one per-document reassembly aggregate.
     * Nothing pairwise, nothing driver-side except the document count.
+    *
+    * Rows with a null `idCol` carry no document identity: their lines
+    * are excluded from the line doc-frequency, and they pass through
+    * uncleaned (all lines kept), since the id-keyed join-back can never
+    * match them.
     */
   def stripBoilerplateLines(df: DataFrame, idCol: String, textCol: String,
       minDocs: Int = 3, maxDocFrac: Double = 0.5,
@@ -183,16 +188,13 @@ object TextAnalysis {
     val bpos = s1.join(boiler, s1("line") === col("b"))
       .groupBy(col(idCol))
       .agg(array_distinct(flatten(collect_list(col("poss")))).as("__bpos"))
-    // row-local rebuild in O(lines + |bpos|): sort the flagged-position
-    // set once, fence it with -1 and |lines|, and slice the line array
-    // over the UNCOVERED gaps between consecutive boundaries — each
-    // line is copied once (the former per-line exists() membership scan
-    // was O(lines × |bpos|)). Blank lines are never flagged, so they
+    // row-local rebuild, two regimes switched at
+    // [[Decontam.RebuildExistsCutoff]]: the per-line exists() membership
+    // test while lines × |bpos| stays at or below it, and above it the
+    // sorted flagged positions fenced with -1 and |lines|, slicing the
+    // line array over the UNCOVERED gaps between consecutive boundaries
+    // (each line copied once). Blank lines are never flagged, so they
     // survive inside the gaps.
-    // row-local rebuild, two regimes on the actual cost model (the
-    // stripDupSpans rationale): the per-line exists() membership test
-    // while lines × |bpos| stays small (every realistic document), the
-    // sorted-boundary gap slices only where the product explodes
     val gapLines = {
       val b = concat(array(lit(-1)), col("__bp"),
         array(size(col("__lines"))))
@@ -202,7 +204,7 @@ object TextAnalysis {
         (lo, hi) => slice(col("__lines"), lo + lit(2), hi - lo - lit(1))))
     }
     val keptLines = when(
-      size(col("__bp")).cast("long") * size(col("__lines")) <= 4000000L,
+      size(col("__bp")).cast("long") * size(col("__lines")) <= Decontam.RebuildExistsCutoff,
       filter(col("__lines"), (l, i) => !exists(col("__bp"), p => p === i)))
       .otherwise(gapLines)
     df.select(col(idCol), col(textCol))
