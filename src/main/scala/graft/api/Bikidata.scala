@@ -7,6 +7,8 @@ import graft.ingest.{Build, Quad}
 import graft.semantic.{Embedder, HashingEmbedder, Semantic, SemanticMaintenance}
 import graft.store.{Graph, MutationResult, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.JsonMethods
 
 /** Public API facade — the Spark-native counterpart of the reference's
   * package surface (/root/reference/src/bikidata/__init__.py:1-28):
@@ -17,9 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `BIKIDATA_DB` env var, main.py:18) with a long-lived [[EngineContext]];
   * queries accept either the JSON opts dict of the reference or the typed
   * [[QueryOpts]]. Results are JSON-shape-compatible with the reference
-  * envelope. A per-instance result cache keyed by the canonical opts JSON
-  * md5 mirrors the reference's Redis cache (workers.py:89-107) without
-  * the external dependency.
+  * envelope. [[queryJson]] holds the serving tier's one result cache,
+  * keyed by the store epoch and the decoded opts: the in-JVM counterpart
+  * of the reference's Redis cache keyed by the md5 of the canonical opts
+  * (workers.py:89-107, 117-119).
   */
 final class Bikidata(
     val spark: SparkSession,
@@ -34,12 +37,19 @@ final class Bikidata(
 
   // size-bounded LRU with the reference's 7-day expiry
   // (workers.py:104-107: `cache.set(key, ..., ex=604800)`); the clock is
-  // injectable so expiry is testable without waiting a week
-  private val cache = new TtlLruCache(cacheSize, cacheTtlMillis, clock)
+  // injectable so expiry is testable without waiting a week. Entries are
+  // keyed under the store EPOCH they were computed against: anything
+  // that changes query answers bumps it (invalidate, a semantic index
+  // install), so lookups never see an older answer — and a query that was
+  // mid-flight during the bump files its stale result under the OLD
+  // epoch, where no later lookup finds it (a bare clear() would race
+  // exactly that in-flight put and re-poison the cache for the full TTL).
+  // Old-epoch entries age out of the LRU like any other.
+  private val cache = new TtlLruCache[(Long, QueryOpts)](cacheSize, cacheTtlMillis, clock)
+  @volatile private var storeEpoch = 0L
 
-  private def cacheGet(key: String): Option[String] = cache.get(key)
-
-  private def cachePut(key: String, v: String): Unit = cache.put(key, v)
+  /** Result-cache hits served by [[queryJson]]. */
+  val cacheHits = new java.util.concurrent.atomic.AtomicLong()
 
   /** Context init is synchronized against [[invalidate]]: an
     * unsynchronized check-then-act would let a query thread that loaded
@@ -128,7 +138,7 @@ final class Bikidata(
     ctxOpt = None
     ftssIdx.foreach(_.unpersist())
     ftssIdx = None
-    cache.clear()
+    storeEpoch += 1
     // mutations make the TRIPLES-derived indexes stale — drop them so the
     // next session rebuilds (and re-persists) them; Hadoop FS so the
     // invalidation also works on an HDFS/S3 warehouse. The LITERALS fts
@@ -153,16 +163,8 @@ final class Bikidata(
     * `stemmer` seeds the FTS analyzer settings exactly like the
     * reference's `build(paths, stemmer)`; `BIKIDATA_FTS_SETTINGS`
     * overrides wholesale (main.py:206-216). */
-  def build(paths: Seq[String], stemmer: String = "porter"): Long = {
-    Build.writeFromQuads(spark, Build.quads(spark, paths).toDF(), warehouseDir)
-    invalidate()
-    val settings = graft.fts.FtsSettings.resolve(stemmer)
-    val idx = FtsIndex.build(spark.read.parquet(s"$warehouseDir/literals"),
-      settings = settings)
-    try FtsIndex.write(idx, warehouseDir)
-    catch { case _: Exception => () } // read-only warehouse: next ctx rebuilds
-    spark.read.parquet(s"$warehouseDir/triples").count()
-  }
+  def build(paths: Seq[String], stemmer: String = "porter"): Long =
+    buildFromQuads(Build.quads(spark, paths).toDF(), stemmer)
 
   /** Build from an arbitrary quad relation instead of files — the
     * reference's `build_from_iterator` (main.py:122-141; exported in
@@ -175,7 +177,7 @@ final class Bikidata(
     val idx = FtsIndex.build(spark.read.parquet(s"$warehouseDir/literals"),
       settings = settings)
     try FtsIndex.write(idx, warehouseDir)
-    catch { case _: Exception => () }
+    catch { case _: Exception => () } // read-only warehouse: next ctx rebuilds
     spark.read.parquet(s"$warehouseDir/triples").count()
   }
 
@@ -292,9 +294,14 @@ final class Bikidata(
     // On a lost race the disk artifacts are already committed; the next
     // context init re-composes them against the fresh graph for the
     // cost of a read, so bail-and-release is correct, not wasteful.
+    // A live install changes what `semantic` filters answer (no index
+    // answered empty), so it retires cached results like a mutation does.
     val installed = synchronized {
       val live = ctxOpt.exists(_ eq c0)
-      if (live) ctxOpt = Some(attach(c0))
+      if (live) {
+        ctxOpt = Some(attach(c0))
+        storeEpoch += 1
+      }
       live
     }
     if (!installed) {
@@ -306,31 +313,39 @@ final class Bikidata(
 
   def query(opts: QueryOpts): QueryResult = QueryEngine.query(ctx, opts)
 
-  /** JSON-in/JSON-out with the md5-keyed result cache. `useCache = false`
-    * bypasses BOTH lookup and store (the worker tier passes the client's
-    * `use_cache` flag through — honoring it only in the pool's own cache
-    * while this facade cache still answered would defeat the opt-out).
-    * Nondeterministic queries (`random N` / `sample N` id filters) are
-    * never cached: the reference caches only in its worker tier, and a
-    * 7-day-pinned "random" sample from the direct API would be a silent
-    * behavior change. */
+  /** JSON-in/JSON-out through the result cache, keyed by the store
+    * epoch and the decoded opts: requests that differ only in key order,
+    * whitespace or transport fields (`query_ticket`, `query_hash`) share
+    * one entry, and requests with different opts never share one. The
+    * cache is used only when both `useCache` and the request's
+    * `use_cache` field (default true) allow it. Nondeterministic queries
+    * (`random N` / `sample N` id filters) are never cached — a
+    * deliberate divergence from the reference worker, which caches them
+    * for 7 days. The epoch is read BEFORE the context, so a result
+    * computed on a context that a concurrent mutation retires is filed
+    * under the retired epoch, where no later lookup finds it. */
   def queryJson(optsJson: String, useCache: Boolean = true): String = {
-    val opts = QueryOpts.fromJson(optsJson)
+    implicit val fmts: Formats = DefaultFormats
+    val parsed = JsonMethods.parse(optsJson)
+    val opts = QueryOpts.fromJValue(parsed)
     val nondet = opts.filters.exists(f => f.p == "id" &&
       (f.o.startsWith("random") || f.o.startsWith("sample")))
-    if (!useCache || nondet)
+    if (!useCache || !(parsed \ "use_cache").extractOrElse[Boolean](true) || nondet)
       return QueryEngine.query(ctx, opts).toJson
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(optsJson.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    cacheGet(key).getOrElse {
-      val res = QueryEngine.query(ctx, opts).toJson
-      cachePut(key, res)
-      res
+    val key = (storeEpoch, opts)
+    cache.get(key) match {
+      case Some(hit) =>
+        cacheHits.incrementAndGet()
+        hit
+      case None =>
+        val res = QueryEngine.query(ctx, opts).toJson
+        cache.put(key, res)
+        res
     }
   }
 
   /** Async variant mirroring the reference's queue tier
-    * (workers.py:115-128): same md5-keyed cache, 60 s default timeout.
+    * (workers.py:115-128): same result cache, 60 s default timeout.
     * Spark jobs are already cluster-parallel, so the "worker pool" is the
     * session's scheduler rather than forked OS processes. As in the
     * reference (a blpop wait that gives up while the worker keeps
@@ -454,28 +469,25 @@ final class Bikidata(
     graft.ingest.Export.nt(ctx.graph, path, singleFile)
 }
 
-/** Size-bounded LRU with a TTL — the ONE implementation of the
-  * reference's md5-keyed result cache semantics (workers.py:104-107:
-  * size-bounded, 7-day expiry), shared by the facade and the worker
-  * pool so the expiry/eviction rules cannot drift apart. Access-order
-  * LinkedHashMap under a synchronized wrapper; the injectable clock
-  * makes expiry testable without waiting a week. */
-private[api] final class TtlLruCache(maxSize: Int, ttlMillis: Long,
+/** Size-bounded LRU with a TTL — the reference's result cache semantics
+  * (workers.py:104-107: size-bounded, 7-day expiry) behind the facade's
+  * one result cache ([[Bikidata.queryJson]]). Access-order LinkedHashMap
+  * under a synchronized wrapper; the injectable clock makes expiry
+  * testable without waiting a week. */
+private[api] final class TtlLruCache[K](maxSize: Int, ttlMillis: Long,
     clock: () => Long) {
   private val m = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (Long, String)](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, (Long, String)]): Boolean =
+    new java.util.LinkedHashMap[K, (Long, String)](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, (Long, String)]): Boolean =
         size() > maxSize
     })
 
-  def get(key: String): Option[String] =
+  def get(key: K): Option[String] =
     Option(m.get(key)).flatMap { case (at, v) =>
       if (clock() - at >= ttlMillis) { m.remove(key); None } else Some(v)
     }
 
-  def put(key: String, v: String): Unit = { m.put(key, (clock(), v)); () }
-
-  def clear(): Unit = m.clear()
+  def put(key: K, v: String): Unit = { m.put(key, (clock(), v)); () }
 }
 
 object Bikidata {

@@ -19,9 +19,9 @@ import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingDeque, TimeUnit}
   *  - the result envelope is pushed onto the request's `query_ticket`
   *    list, where the client's `BLPOP <ticket> <timeout>` picks it up
   *    (workers.py:54,108,124);
-  *  - results are cached under the client's content-derived
-  *    `query_hash` with the reference's 7-day TTL (workers.py:88-106,
-  *    via [[WorkerPool]]'s TtlLruCache).
+  *  - results come from the facade's one result cache, keyed by the
+  *    decoded opts with the reference's 7-day TTL (workers.py:88-106,
+  *    [[Bikidata.queryJson]]); the client's `query_hash` is not read.
   *
   * Everything else a redis-py connection needs is implemented
   * generically: RESP2 framing (arrays of bulk strings in; simple
@@ -141,10 +141,7 @@ final class RespServer(bk: Bikidata, port: Int = 0, numWorkers: Int = 1,
         case _ => None
       } catch { case scala.util.control.NonFatal(_) => None }
     pool.submitAsync(json).whenComplete { (res, err) =>
-      val envelope =
-        if (err == null) res
-        else """{"error": "Failed to process query", "trace": """ +
-          JsonMethods.compact(JsonMethods.render(JString(String.valueOf(err)))) + "}"
+      val envelope = if (err == null) res else WorkerPool.errorEnvelope(err)
       ticket match {
         case Some(t) => push(t, Seq(envelope.getBytes(UTF_8)), head = true)
         case None => System.err.println("[resp] request had no query_ticket; result dropped")

@@ -11,8 +11,9 @@ import org.json4s.jackson.JsonMethods
   *  - ONE manager thread drains the inbound queue and executes
   *    insert/delete INLINE — the single-writer routing that serializes
   *    all mutations (redis_manager, workers.py:39-70);
-  *  - N worker threads drain the ready queue and serve queries through
-  *    an md5-keyed result cache (redis_worker, workers.py:73-108);
+  *  - N worker threads drain the ready queue and answer queries through
+  *    [[Bikidata.queryJson]], whose result cache is the only one
+  *    (redis_worker, workers.py:73-108) — the pool only routes;
   *  - clients get a ticket future and block with a timeout
   *    (query_async, workers.py:115-128).
   *
@@ -21,9 +22,7 @@ import org.json4s.jackson.JsonMethods
   * replaces the Redis transport with a line-delimited-JSON TCP socket
   * for cross-process clients.
   */
-final class WorkerPool(bk: Bikidata, numWorkers: Int = 1, cacheSize: Int = 1024,
-    cacheTtlMillis: Long = Bikidata.DefaultCacheTtlMillis,
-    clock: () => Long = () => System.currentTimeMillis()) {
+final class WorkerPool(bk: Bikidata, numWorkers: Int = 1) {
 
   private final case class Req(json: String,
       promise: java.util.concurrent.CompletableFuture[String])
@@ -32,21 +31,8 @@ final class WorkerPool(bk: Bikidata, numWorkers: Int = 1, cacheSize: Int = 1024,
   private val readyQ = new java.util.concurrent.LinkedBlockingQueue[Req]()
   @volatile private var running = true
 
-  // LRU + the reference's 7-day result expiry (workers.py:104-107),
-  // shared implementation with the facade cache. Entries are keyed
-  // under the store EPOCH they were computed against: a mutation bumps
-  // the epoch, so lookups never see pre-mutation envelopes — and a
-  // worker that was mid-query during the mutation writes its stale
-  // result under the OLD epoch key, where no future lookup finds it
-  // (a bare clear() would race exactly that in-flight put and
-  // re-poison the cache for the full TTL). Old-epoch entries age out
-  // of the LRU like any other.
-  private val cache = new TtlLruCache(cacheSize, cacheTtlMillis, clock)
-  private val storeEpoch = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def epochKey(epoch: Long, key: String): String = s"$epoch:$key"
-  private def cacheGet(key: String): Option[String] =
-    cache.get(epochKey(storeEpoch.get(), key))
-  val cacheHits = new java.util.concurrent.atomic.AtomicLong()
+  /** The facade's result-cache hit counter. */
+  val cacheHits = bk.cacheHits
 
   /** Submit a request (reference opts JSON: a query dict, or
     * `{"action": "insert"|"delete", "data": [{s,p,o,g}], ...}`) and wait
@@ -70,16 +56,9 @@ final class WorkerPool(bk: Bikidata, numWorkers: Int = 1, cacheSize: Int = 1024,
     p
   }
 
-  private def md5(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  /** Runs the mutation and reports (envelope JSON, store changed?) — the
-    * epoch must bump only when the store actually changed: a refused
-    * batch (validation error, unknown action) flushing the whole pool
-    * cache would cost every cached result for no correctness gain
-    * (the facade invalidates only on success for the same reason). */
-  private def runMutation(parsed: JValue): (String, Boolean) = {
+  /** Runs the mutation and renders its result envelope. The facade
+    * retires cached results itself when the store changed. */
+  private def runMutation(parsed: JValue): String = {
     implicit val fmts: Formats = DefaultFormats
     val action = (parsed \ "action").extract[String]
     val areHashes = (parsed \ "are_hashes").extractOrElse[Boolean](false)
@@ -109,7 +88,7 @@ final class WorkerPool(bk: Bikidata, numWorkers: Int = 1, cacheSize: Int = 1024,
       "literals_inserted" -> JInt(res.literalsInserted),
       "triples_deleted" -> JInt(res.triplesDeleted)) ++
       res.error.map(e => JField("error", JString(e))).toList
-    (JsonMethods.compact(JsonMethods.render(JObject(fields))), res.error.isEmpty)
+    JsonMethods.compact(JsonMethods.render(JObject(fields)))
   }
 
   private val manager = new Thread(() => {
@@ -120,68 +99,25 @@ final class WorkerPool(bk: Bikidata, numWorkers: Int = 1, cacheSize: Int = 1024,
           val parsed = JsonMethods.parse(req.json)
           (parsed \ "action") match {
             case JString("insert") | JString("delete") =>
-              // inline in the manager: the single writer. Bump the store
-              // epoch after the store changes — query_hash keys are
-              // content-derived (no ticket), so an entry cached
-              // pre-mutation would otherwise satisfy the same query for
-              // the full TTL. (Deliberate divergence: the reference's
-              // Redis cache keeps serving pre-mutation envelopes for up
-              // to 7 days, workers.py:104-107; the facade cache already
-              // invalidates, Bikidata.invalidate — the pool now agrees.)
-              val (resJson, changed) = runMutation(parsed)
-              if (changed) storeEpoch.incrementAndGet()
-              req.promise.complete(resJson)
+              // inline in the manager: the single writer
+              req.promise.complete(runMutation(parsed))
             case _ => readyQ.put(req)
           }
         } catch { case e: Exception =>
-          req.promise.complete(errorJson(e))
+          req.promise.complete(WorkerPool.errorEnvelope(e))
         }
       }
     }
   }, "graft-worker-manager")
-
-  private def errorJson(e: Exception): String =
-    JsonMethods.compact(JsonMethods.render(JObject(List(
-      "error" -> JString("Failed to process query"),
-      "trace" -> JString(String.valueOf(e))))))
 
   private val workers = (1 to numWorkers).map { i =>
     new Thread(() => {
       while (running) {
         val req = readyQ.poll(200, java.util.concurrent.TimeUnit.MILLISECONDS)
         if (req != null) {
-          try {
-            implicit val fmts: Formats = DefaultFormats
-            val parsed = JsonMethods.parse(req.json)
-            val useCache = (parsed \ "use_cache").extractOrElse[Boolean](true)
-            // reference clients stamp every request with a unique
-            // query_ticket but a CONTENT-derived query_hash (md5 of the
-            // sorted opts, workers.py:116-118) — cache on that when
-            // present, or repeated queries would never hit (the ticket
-            // makes the raw json unique per request)
-            val key = (parsed \ "query_hash") match {
-              case JString(h) if h.nonEmpty => h
-              case _ => md5(req.json)
-            }
-            val hit = if (useCache) cacheGet(key) else None
-            hit match {
-              case Some(v) =>
-                cacheHits.incrementAndGet()
-                req.promise.complete(v)
-              case None =>
-                // pass the client's cache opt-out through: the facade
-                // keeps its own md5 cache on the same key, and answering
-                // from it would defeat use_cache=false. The epoch is
-                // snapshotted BEFORE the query runs: if a mutation lands
-                // mid-query, the result files under the old epoch key
-                // and is never served.
-                val epoch = storeEpoch.get()
-                val res = bk.queryJson(req.json, useCache = useCache)
-                if (useCache) cache.put(epochKey(epoch, key), res)
-                req.promise.complete(res)
-            }
-          } catch { case e: Exception =>
-            req.promise.complete(errorJson(e))
+          try req.promise.complete(bk.queryJson(req.json))
+          catch { case e: Exception =>
+            req.promise.complete(WorkerPool.errorEnvelope(e))
           }
         }
       }
@@ -191,6 +127,14 @@ final class WorkerPool(bk: Bikidata, numWorkers: Int = 1, cacheSize: Int = 1024,
   (manager +: workers).foreach { t => t.setDaemon(true); t.start() }
 
   def shutdown(): Unit = running = false
+}
+
+object WorkerPool {
+  /** The reference worker's error envelope, with `json.dumps` separators
+    * (`", "` and `": "`) so every transport emits the same bytes. */
+  private[api] def errorEnvelope(e: Throwable): String =
+    """{"error": "Failed to process query", "trace": """ +
+      JsonMethods.compact(JsonMethods.render(JString(String.valueOf(e)))) + "}"
 }
 
 /** TCP front end for [[WorkerPool]]: one line-delimited JSON request per
@@ -222,9 +166,7 @@ final class WorkerServer(bk: Bikidata, port: Int = 0, numWorkers: Int = 1) {
                   try pool.submit(line)
                   catch {
                     case e: java.io.IOException => throw e // socket itself broke
-                    case scala.util.control.NonFatal(e) =>
-                      """{"error": "Failed to process query", "trace": """ +
-                        JsonMethods.compact(JsonMethods.render(JString(String.valueOf(e)))) + "}"
+                    case scala.util.control.NonFatal(e) => WorkerPool.errorEnvelope(e)
                   }
                 out.println(resp.replace("\n", " "))
               }

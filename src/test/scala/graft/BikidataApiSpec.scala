@@ -136,6 +136,57 @@ class BikidataApiSpec extends SparkSpec {
     assert(!(bk.queryJson(rnd) eq bk.queryJson(rnd)))
   }
 
+  private val SemanticQ = """{"filters":[{"p":"semantic","o":"alpha ember"}]}"""
+
+  /** A built store (no semantic index yet) whose embedder is the
+    * test-gated [[GatingEmbedder]], with its gate open. */
+  private def semanticStore(): Bikidata = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-api-sem").toString
+    val nt = s"$dir/data.nt"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(nt),
+      """<http://ex/a> <http://www.w3.org/2000/01/rdf-schema#label> "alpha ember" .
+        |<http://ex/b> <http://www.w3.org/2000/01/rdf-schema#label> "beta stone" .
+        |<http://ex/a> <http://ex/rel> <http://ex/b> .
+        |""".stripMargin)
+    GatingEmbedderState.reset()
+    GatingEmbedderState.release.countDown()
+    val bk = new Bikidata(spark, s"$dir/wh", embedder = new GatingEmbedder)
+    bk.build(Seq(nt))
+    bk
+  }
+
+  test("buildSemantic retires cached answers to semantic queries") {
+    val bk = semanticStore()
+    val noIndex = bk.queryJson(SemanticQ) // no index yet: cached empty answer
+    bk.buildSemantic()
+    val fresh = bk.queryJson(SemanticQ, useCache = false)
+    assert(fresh.contains("<http://ex/a>") && (fresh !== noIndex), fresh)
+    assert(bk.queryJson(SemanticQ) === fresh,
+      "pre-index answer served from the cache after buildSemantic")
+  }
+
+  test("a query that straddles a mutation does not cache its stale answer") {
+    val bk = semanticStore()
+    bk.buildSemantic()
+    // hold the query inside embedOne, after it has read its context
+    GatingEmbedderState.reset()
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val inFlight = Future(bk.queryJson(SemanticQ))
+    assert(GatingEmbedderState.started.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      "query never reached the embedder")
+    // a mutation on an entity of its page retires that context
+    assert(bk.delete(Seq(("<http://ex/a>", "<http://ex/rel>",
+      Some("<http://ex/b>"), ""))).error.isEmpty)
+    GatingEmbedderState.release.countDown()
+    val stale = Await.result(inFlight, 120.seconds)
+    val fresh = bk.queryJson(SemanticQ, useCache = false)
+    assert(stale !== fresh, "the interleaving did not produce a stale answer")
+    assert(bk.queryJson(SemanticQ) === fresh,
+      "an answer computed on the retired context was served after the mutation")
+  }
+
   test("buildFtss persists the doc-table index (fts_main_fts parity)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ftss").toString
     val nt = s"$dir/data.nt"

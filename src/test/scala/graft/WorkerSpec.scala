@@ -3,7 +3,7 @@ package graft
 import graft.api.{Bikidata, RespServer, WorkerServer}
 
 /** The queue tier end to end: two concurrent TCP clients through the
-  * socket front end, single-writer mutation routing, md5 cache hits —
+  * socket front end, single-writer mutation routing, result-cache hits —
   * the reference's manager/worker contract (workers.py:27-108) without
   * Redis. */
 class WorkerSpec extends SparkSpec {
@@ -151,11 +151,21 @@ class WorkerSpec extends SparkSpec {
       val r1 = queryAsync("""{"filters":[{"p":"fts","o":"alpha"}]}""", "t-1", "h-alpha")
       assert(r1.contains("<http://ex/a>"))
 
-      // same query_hash, different ticket → served from the result cache
+      // same opts, different ticket → served from the result cache
       val before = srv.pool.cacheHits.get()
       val r2 = queryAsync("""{"filters":[{"p":"fts","o":"alpha"}]}""", "t-2", "h-alpha")
       assert(r2 === r1)
       assert(srv.pool.cacheHits.get() > before)
+
+      // the server keys on the decoded opts, not the client's query_hash:
+      // the same opts under another hash, key order and spacing is one hit
+      val hitsSameOpts = srv.pool.cacheHits.get()
+      assert(queryAsync("""{ "filters": [ {"o": "alpha", "p": "fts"} ] }""",
+        "t-h1", "h-other") === r1)
+      assert(srv.pool.cacheHits.get() === hitsSameOpts + 1)
+      // ... and different opts under one hash each get their own envelope
+      val beta = queryAsync("""{"filters":[{"p":"fts","o":"beta"}]}""", "t-h2", "h-alpha")
+      assert(beta.contains("<http://ex/b>") && !beta.contains("<http://ex/a>"), beta)
 
       // insert_async routes through the single-writer manager
       val ins = queryAsync(
@@ -184,7 +194,7 @@ class WorkerSpec extends SparkSpec {
       assert(c.cmd("BLPOP", "t-b1", "60") !== null)
       assert(c.cmd("BLPOP", "t-b2", "60") !== null)
 
-      // a REFUSED mutation must not flush the pool cache: the store did
+      // a REFUSED mutation must not flush the result cache: the store did
       // not change, so the epoch must not bump
       val cached = queryAsync("""{"filters":[{"p":"fts","o":"alpha"}]}""", "t-c1", "h-c")
       val refused = queryAsync(
@@ -262,13 +272,13 @@ class WorkerSpec extends SparkSpec {
       out.println(q)
       assert(!in.readLine().contains("<http://ex/d>")) // no match yet; cached
       out.println(q)
-      in.readLine() // cache hit on h-delta
+      in.readLine() // cache hit
       out.println("""{"action":"insert","data":[{"s":"<http://ex/d>","p":"<http://www.w3.org/2000/01/rdf-schema#label>","o":"\"delta thing\"","g":""}]}""")
       assert(in.readLine().contains("\"triples_inserted\":1"))
       out.println(q)
       val r = in.readLine()
       assert(r.contains("<http://ex/d>"),
-        s"pre-mutation envelope served from the pool cache after insert: $r")
+        s"pre-mutation envelope served from the result cache after insert: $r")
       sock.close()
     } finally srv.close()
   }
