@@ -76,6 +76,11 @@ final case class EngineContext(
     // cleared (no blocks to free) on the same mutation drain.
     servingValues: java.util.concurrent.ConcurrentHashMap[String, AnyRef] =
       new java.util.concurrent.ConcurrentHashMap[String, AnyRef](),
+    // the driver-resident copy of the store that answers simple-filter
+    // reads without a Spark job ([[LocalStore]]), built at the first
+    // eligible query; shared via copy() like the caches above, and
+    // released on the same mutation drain
+    localStore: LocalStore.Slot = new LocalStore.Slot(),
     // set (before draining) when a mutation retires this context: a query
     // thread can be mid-computeIfAbsent on pathEdges/statFrames while the
     // drain runs and install its persisted frame AFTER the clear — into a
@@ -123,6 +128,7 @@ final case class EngineContext(
     stats.clear()
     servingPlans.clear()
     servingValues.clear()
+    localStore.drop()
   }
 
   /** [[statFrames]].computeIfAbsent with the retire re-check: the frame
@@ -304,6 +310,22 @@ object EngineContext {
   }
 }
 
+/** The match rule of a simple filter ([[FilterCompiler.simpleFilter]]):
+  * a triple matches when its key column holds one of the given hashes
+  * and, with `graphs` set, its g is one of those. */
+sealed trait SimpleFilter { def graphs: Option[Array[Long]] }
+
+object SimpleFilter {
+  /** id / multi-id: triples whose s is one of `subjects`. */
+  final case class Ids(subjects: Array[Long], graphs: Option[Array[Long]]) extends SimpleFilter
+  /** Reverse reference: triples whose o is one of `objects`. */
+  final case class Refs(objects: Array[Long], graphs: Option[Array[Long]]) extends SimpleFilter
+  /** Property: triples whose p is `p` and, with `objects` set, whose o is
+    * one of those. */
+  final case class Prop(p: Long, objects: Option[Array[Long]],
+      graphs: Option[Array[Long]]) extends SimpleFilter
+}
+
 /** Compiles one [[FilterQ]] into a subject-set DataFrame — the Spark
   * counterpart of the reference's `q_to_sql` (query.py:122-218). Every
   * filter produces `(s)` or, when `withScore` and the filter scores,
@@ -349,17 +371,34 @@ object FilterCompiler {
 
   def h(term: String): Long = Hash64.hashString(term)
 
-  /** The reference's `oo` fragment (query.py:134-144): a space-separated
-    * multi-IRI object list becomes an IN over the per-IRI hashes, any
-    * other o an equality on the whole-string hash (N3 surface equality,
-    * lang/datatype included). The SAME fragment applies to the column
-    * the branch matches on — `o` for property/reverse filters, `s` for
-    * the id branch (query.py:33-44 interpolates `s{oo}`) — so it is ONE
-    * definition here, shared by [[compile]] and [[simplePredicate]]. */
+  /** The hashes an `o` value matches — the reference's `oo` fragment
+    * (query.py:134-144): a space-separated multi-IRI object list matches
+    * any of its per-IRI hashes, any other o its whole-string hash (N3
+    * surface equality, lang/datatype included). The SAME fragment applies
+    * to the column the branch matches on — `o` for property/reverse
+    * filters, `s` for the id branch (query.py:33-44 interpolates `s{oo}`).
+    * One definition for the Spark predicates ([[oMatch]]) and the
+    * driver-resident tier ([[LocalStore]]), so both hash the same
+    * surface strings. */
+  def oHashes(o: String): Array[Long] =
+    if (o.startsWith("<") && o.endsWith(">") && o.split(" ").length > 1) o.split(" ").map(h)
+    else Array(h(o))
+
+  /** The graph hashes a `g` restriction admits (query.py:145-148). */
+  def gHashes(g: String): Array[Long] = g.split(" ").map(h)
+
+  /** [[oHashes]] as a predicate on `target`: an IN for a multi-IRI list,
+    * an equality otherwise. */
   private[graft] def oMatch(target: org.apache.spark.sql.Column, o: String): org.apache.spark.sql.Column =
-    if (o.startsWith("<") && o.endsWith(">") && o.split(" ").length > 1)
-      target.isin(o.split(" ").map(h).toIndexedSeq: _*)
-    else target === h(o)
+    hashMatch(target, oHashes(o))
+
+  private def hashMatch(target: org.apache.spark.sql.Column,
+      hs: Array[Long]): org.apache.spark.sql.Column =
+    if (hs.length > 1) target.isin(hs.toIndexedSeq: _*) else target === hs(0)
+
+  /** A [[gHashes]] restriction as a predicate on the g column. */
+  private def gMatch(gs: Array[Long]): org.apache.spark.sql.Column =
+    col("g").isin(gs.toIndexedSeq: _*)
 
   /** Longest leading run of regex-literal characters in a pattern — the
     * chars every match must start with. Stops at the first metacharacter
@@ -533,32 +572,42 @@ object FilterCompiler {
     }
   }
 
-  /** The triples-scan predicate of a SIMPLE filter — p/o/g/id equality
-    * or IN, no hops and no derived index — or None when the filter
-    * needs its own plan (fts/regex/semantic/sample/hops). A forest
-    * whose every filter is simple can then be evaluated in ONE
-    * scan+aggregate ([[QueryEngine.fusedSubjects]]) instead of one
-    * distinct per branch plus set-operator joins. Must stay in exact
-    * agreement with the corresponding [[compile]] branches. */
-  def simplePredicate(ctx: EngineContext, f: FilterQ): Option[org.apache.spark.sql.Column] = {
+  /** A SIMPLE filter — p/o/g/id equality or IN, no hops and no derived
+    * index — decomposed into the hash sets a matching triple's columns
+    * must fall in, or None when the filter needs its own plan
+    * (fts/regex/semantic/sample/hops). A forest whose every filter is
+    * simple can be evaluated in ONE scan+aggregate
+    * ([[QueryEngine.fusedSubjects]]) instead of one distinct per branch
+    * plus set-operator joins, or on the driver ([[LocalStore]]). Must
+    * stay in exact agreement with the corresponding [[compile]]
+    * branches. */
+  def simpleFilter(f: FilterQ): Option[SimpleFilter] = {
     val p = f.p.trim
     val o = f.o.trim
     val g = f.g.trim
     val (hops, _, pHead) = parseHopsAndProp(p)
-    val gCond: Option[org.apache.spark.sql.Column] =
-      if (g.isEmpty) None
-      else Some(col("g").isin(g.split(" ").map(h).toIndexedSeq: _*))
-    val base: Option[org.apache.spark.sql.Column] =
-      if (p.isEmpty && (o.startsWith("<") || o.startsWith("_:")))
-        Some(oMatch(col("o"), o)) // reverse reference
-      else if (p == "id" && !(o.startsWith("random") || o.startsWith("sample")))
-        Some(oMatch(col("s"), o)) // point lookup (or multi-point IN)
-      else if (p.startsWith("<") && hops == 0) {
-        val pc = col("p") === h(pHead)
-        Some(if (o.nonEmpty) pc && oMatch(col("o"), o) else pc)
-      } else None
-    base.map(b => gCond.fold(b)(gc => b && gc))
+    val graphs = if (g.isEmpty) None else Some(gHashes(g))
+    if (p.isEmpty && (o.startsWith("<") || o.startsWith("_:")))
+      Some(SimpleFilter.Refs(oHashes(o), graphs)) // reverse reference
+    else if (p == "id" && !(o.startsWith("random") || o.startsWith("sample")))
+      Some(SimpleFilter.Ids(oHashes(o), graphs)) // point lookup (or multi-point IN)
+    else if (p.startsWith("<") && hops == 0)
+      Some(SimpleFilter.Prop(h(pHead), if (o.nonEmpty) Some(oHashes(o)) else None, graphs))
+    else None
   }
+
+  /** The triples-scan predicate of a [[simpleFilter]]. */
+  def simplePredicate(ctx: EngineContext, f: FilterQ): Option[org.apache.spark.sql.Column] =
+    simpleFilter(f).map { sf =>
+      val base = sf match {
+        case SimpleFilter.Refs(os, _) => hashMatch(col("o"), os)
+        case SimpleFilter.Ids(ss, _) => hashMatch(col("s"), ss)
+        case SimpleFilter.Prop(ph, os, _) =>
+          val pc = col("p") === ph
+          os.fold(pc)(hs => pc && hashMatch(col("o"), hs))
+      }
+      sf.graphs.fold(base)(gs => base && gMatch(gs))
+    }
 
   def compile(ctx: EngineContext, f: FilterQ, withScore: Boolean = false): Option[DataFrame] = {
     val triples = ctx.graph.triples
@@ -571,8 +620,7 @@ object FilterCompiler {
 
     // named-graph restriction on the T0 scan (query.py:145-148)
     def withG(df: DataFrame): DataFrame =
-      if (g.isEmpty) df
-      else df.filter(col("g").isin(g.split(" ").map(h).toIndexedSeq: _*))
+      if (g.isEmpty) df else df.filter(gMatch(gHashes(g)))
 
     // o equality: the shared [[oMatch]] fragment (query.py:134-144)
     def oCond = oMatch(col("o"), o)

@@ -1,0 +1,311 @@
+package graft.algebra
+
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import org.apache.spark.sql.DataFrame
+
+/** The driver-resident serving tier: the store's quads as sorted
+  * primitive arrays, answering simple-filter requests
+  * ([[LocalStore.supports]]) with no Spark job and no Catalyst analysis.
+  * The reference answers each JSON query as one in-process DuckDB
+  * statement; a Spark job per stage costs more than the whole answer on a
+  * store that fits the driver.
+  *
+  * Rows are kept sorted three ways: the columns themselves by s (id
+  * lookups, page hydration, facets), and two row-index permutations by
+  * (p, o, s) (property filters) and by (o, s) (reverse references).
+  * Keys compare as signed longs — Spark's `LongType` order — so subject
+  * sets are sorted distinct arrays in the order the Spark tier pages
+  * them, and AND/OR/NOT are merges. Terms decode through the context's
+  * `dictBroadcast` map. The output goes through the Spark tier's own
+  * [[QueryEngine.assemble]], so past the subject-set, page and facet
+  * stage the envelopes are identical by construction; the Spark tier is
+  * the oracle for the rest (AlgebraProps' differential). */
+final class LocalStore private (
+    // the triples frame the arrays were read from: a context copy over
+    // another graph never serves from them
+    private val source: DataFrame,
+    s: Array[Long], p: Array[Long], o: Array[Long], g: Array[Long],
+    byPos: Array[Int], byOs: Array[Int]) {
+
+  import LocalStore._
+
+  private def n: Int = s.length
+
+  /** Answer `opts`, which must satisfy [[LocalStore.supports]]. */
+  def query(ctx: EngineContext, opts: QueryOpts): QueryResult = {
+    val sets = opts.filters.flatMap(f => FilterCompiler.simpleFilter(f).map(f.op -> subjectsOf(_)))
+    val subjects = QueryEngine.foldRoles(QueryEngine.setRoles(sets))(intersect, union, minus)
+      .getOrElse(Array.emptyLongArray)
+    val from = math.min(opts.start.toLong, subjects.length.toLong).toInt
+    val until = math.min(opts.start.toLong + opts.size, subjects.length.toLong).toInt
+    val page = java.util.Arrays.copyOfRange(subjects, from, math.max(from, until))
+    val dict = ctx.dictBroadcast.get.value
+    QueryEngine.assemble(ctx, opts, hydrate(page, opts), Map.empty,
+      subjects.length.toLong, opts.aggregates.map(agg => agg -> facet(dict, agg, subjects)))
+  }
+
+  // -------------------------------------------------------------- lookups
+
+  /** [lo, hi) of the positions in [lo0, hi0) whose `key` equals `k`;
+    * `key` must be sorted over that span. */
+  private def range(lo0: Int, hi0: Int, key: Int => Long, k: Long): (Int, Int) = {
+    var lo = lo0; var hi = hi0
+    while (lo < hi) { val m = (lo + hi) >>> 1; if (key(m) < k) lo = m + 1 else hi = m }
+    val first = lo
+    hi = hi0
+    while (lo < hi) { val m = (lo + hi) >>> 1; if (key(m) <= k) lo = m + 1 else hi = m }
+    (first, lo)
+  }
+
+  private def subjectRows(subject: Long): (Int, Int) = range(0, n, i => s(i), subject)
+
+  /** Sorted distinct subjects of the triples `f` matches. */
+  private def subjectsOf(f: SimpleFilter): Array[Long] = {
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
+    def admit(row: Int): Unit =
+      if (f.graphs.forall(gs => contains(gs, g(row)))) out += s(row)
+    f match {
+      case SimpleFilter.Ids(subjects, _) =>
+        for (k <- subjects) { val (lo, hi) = subjectRows(k); var i = lo; while (i < hi) { admit(i); i += 1 } }
+      case SimpleFilter.Refs(objects, _) =>
+        for (k <- objects) {
+          val (lo, hi) = range(0, n, i => o(byOs(i)), k)
+          var i = lo; while (i < hi) { admit(byOs(i)); i += 1 }
+        }
+      case SimpleFilter.Prop(ph, objects, _) =>
+        val (plo, phi) = range(0, n, i => p(byPos(i)), ph)
+        val spans = objects match {
+          case None => Seq((plo, phi))
+          case Some(os) => os.toSeq.map(k => range(plo, phi, i => o(byPos(i)), k))
+        }
+        for ((lo, hi) <- spans) { var i = lo; while (i < hi) { admit(byPos(i)); i += 1 } }
+    }
+    sortedDistinct(out.result())
+  }
+
+  /** The distinct (s, p, o, g, pos) rows of the page subjects, pos
+    * 1-based in page order, filtered by only/exclude properties like
+    * [[QueryEngine.hydrate]]. */
+  private def hydrate(page: Array[Long], opts: QueryOpts): Array[(Long, Long, Long, Long, Int)] = {
+    val only = opts.onlyProperties.map(FilterCompiler.h).toSet
+    val excluded = opts.excludeProperties.map(FilterCompiler.h).toSet
+    val keep: Long => Boolean =
+      if (only.nonEmpty) only.contains
+      else if (excluded.nonEmpty) pv => !excluded.contains(pv)
+      else _ => true
+    val rows = Array.newBuilder[(Long, Long, Long, Long, Int)]
+    for (i <- page.indices) {
+      val (lo, hi) = subjectRows(page(i))
+      for (r <- lo until hi if keep(p(r))) rows += ((s(r), p(r), o(r), g(r), i + 1))
+    }
+    rows.result().distinct
+  }
+
+  /** [[QueryEngine.facet]] over the driver arrays: triple counts (not
+    * subjects) per g, p or — for a property IRI — per o of that
+    * property, over every triple of `subjects`; undecodable values drop
+    * and the rows order by (count desc, val asc). */
+  private def facet(dict: Map[Long, String], agg: String,
+      subjects: Array[Long]): Seq[(Long, String)] = {
+    val counts = new scala.collection.mutable.LongMap[Long]
+    def bump(k: Long): Unit = counts.update(k, counts.getOrElse(k, 0L) + 1L)
+    val prop = FilterCompiler.h(agg)
+    for (sub <- subjects) {
+      val (lo, hi) = subjectRows(sub)
+      var r = lo
+      while (r < hi) {
+        agg match {
+          case "graphs" => bump(g(r))
+          case "properties" => bump(p(r))
+          case _ => if (p(r) == prop) bump(o(r))
+        }
+        r += 1
+      }
+    }
+    counts.toSeq
+      .flatMap { case (k, c) => dict.get(k).map(v => (c, v, utf8(v))) }
+      .sortWith { case ((c1, _, b1), (c2, _, b2)) =>
+        if (c1 != c2) c1 > c2 else java.util.Arrays.compareUnsigned(b1, b2) < 0 }
+      .map { case (c, v, _) => (c, v) }
+  }
+}
+
+object LocalStore {
+
+  /** Driver bytes per stored triple: four `Long` columns plus two `Int`
+    * permutation entries. */
+  private val BytesPerTriple = 4 * 8 + 2 * 4
+
+  /** The tier's size cap, in triples: the finished arrays may take at
+    * most 1/16 of the driver's max heap,
+    * `Runtime.getRuntime.maxMemory / 16 / BytesPerTriple` (40 B/triple).
+    * The build's transient peak — the streamed column builders, one
+    * reordered copy and the permutations — stays under ~3× the finished
+    * size, so under a fifth of the heap, which in local mode also holds
+    * Spark's own cached blocks. A 4 GB heap admits ~6.7M triples. */
+  def maxTriples: Long = Runtime.getRuntime.maxMemory / 16 / BytesPerTriple
+
+  /** Whether the tier models `opts`: every filter simple
+    * ([[FilterCompiler.simpleFilter]]) — id, multi-id, p, p+o, reverse-o,
+    * each optionally graph-restricted, combined by any op — with
+    * only/exclude properties and facets allowed. Order, paths, fts,
+    * regex, hops, semantic and random/sample filters, an empty filter
+    * list, and negative size/start stay on the Spark tier. */
+  def supports(opts: QueryOpts): Boolean =
+    opts.filters.nonEmpty && opts.order.isEmpty && opts.paths.isEmpty &&
+      opts.size >= 0 && opts.start >= 0 &&
+      opts.filters.forall(f => FilterCompiler.simpleFilter(f).isDefined)
+
+  /** The context's store, built at the first call (single-flight per
+    * context), or None when the context has no decode map, the store is
+    * over [[maxTriples]], or the context was retired by a mutation. */
+  def of(ctx: EngineContext): Option[LocalStore] =
+    if (ctx.dictBroadcast.isEmpty || ctx.retired.get()) None
+    else {
+      val st = ctx.localStore(load(ctx, maxTriples))
+      // a mutation retiring the context mid-build: release what it built
+      if (ctx.retired.get()) { ctx.localStore.drop(); None }
+      else st.filter(_.source eq ctx.graph.triples)
+    }
+
+  /** Stream the context's triples into sorted arrays, or None past
+    * `cap` triples (also when the plan's row count already says so) or
+    * on a null column the tier does not model. */
+  private[graft] def load(ctx: EngineContext, cap: Long): Option[LocalStore] = {
+    val t = ctx.graph.triples
+    val known = graft.store.Graph.planRowCount(t)
+    if (known.exists(_ > cap)) return None
+    val sb, pb, ob, gb = new scala.collection.mutable.ArrayBuilder.ofLong
+    known.foreach { k => Seq(sb, pb, ob, gb).foreach(_.sizeHint(k.toInt)) }
+    // toLocalIterator holds one partition's rows at a time (the paths()
+    // edge-array pattern), so giving up past the cap costs at most the
+    // rows read so far
+    val it = t.select("s", "p", "o", "g").toLocalIterator()
+    var rows = 0L
+    while (it.hasNext) {
+      val r = it.next()
+      rows += 1
+      if (rows > cap || r.anyNull) return None
+      sb += r.getLong(0); pb += r.getLong(1); ob += r.getLong(2); gb += r.getLong(3)
+    }
+    val s0 = sb.result(); val p0 = pb.result(); val o0 = ob.result(); val g0 = gb.result()
+    val bySubject = identity(s0.length)
+    sortIndices(bySubject, (a, b) => java.lang.Long.compare(s0(a), s0(b)))
+    val s = bySubject.map(s0); val p = bySubject.map(p0)
+    val o = bySubject.map(o0); val g = bySubject.map(g0)
+    val byPos = identity(s.length)
+    sortIndices(byPos, (a, b) => {
+      val c = java.lang.Long.compare(p(a), p(b))
+      if (c != 0) c else {
+        val c2 = java.lang.Long.compare(o(a), o(b))
+        if (c2 != 0) c2 else java.lang.Long.compare(s(a), s(b))
+      }
+    })
+    val byOs = identity(s.length)
+    sortIndices(byOs, (a, b) => {
+      val c = java.lang.Long.compare(o(a), o(b))
+      if (c != 0) c else java.lang.Long.compare(s(a), s(b))
+    })
+    Some(new LocalStore(t, s, p, o, g, byPos, byOs))
+  }
+
+  /** The per-context holder of the store: the first caller builds it,
+    * concurrent callers wait for that one build (a lazy val per cell, the
+    * [[graft.Artifacts]] slot pattern), a throwing build leaves the cell
+    * empty for the next call to retry, and the "too big" verdict (None)
+    * is remembered like a store. [[drop]] releases it. */
+  final class Slot {
+    private final class Cell(build: => Option[LocalStore]) { lazy val value = build }
+    private val cell = new AtomicReference[Cell]()
+    /** Builds run through this slot (one per context unless dropped). */
+    private[graft] val builds = new AtomicLong()
+
+    def apply(build: => Option[LocalStore]): Option[LocalStore] = {
+      val fresh = new Cell({ builds.incrementAndGet(); build })
+      val c = if (cell.compareAndSet(null, fresh)) fresh else Option(cell.get).getOrElse(fresh)
+      c.value
+    }
+
+    def drop(): Unit = cell.set(null)
+  }
+
+  // --------------------------------------------------------- array helpers
+
+  private def identity(n: Int): Array[Int] = Array.tabulate(n)(i => i)
+
+  private def contains(hs: Array[Long], k: Long): Boolean = {
+    var i = 0
+    while (i < hs.length) { if (hs(i) == k) return true; i += 1 }
+    false
+  }
+
+  private def utf8(v: String): Array[Byte] = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** Sort then drop repeats, in place. */
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var w = 0
+    var i = 0
+    while (i < a.length) {
+      if (w == 0 || a(i) != a(w - 1)) { a(w) = a(i); w += 1 }
+      i += 1
+    }
+    if (w == a.length) a else java.util.Arrays.copyOf(a, w)
+  }
+
+  /** Merge of two sorted distinct arrays keeping the elements for which
+    * `keep(inA, inB)` holds — AND, OR and NOT of subject sets. */
+  private def merge(a: Array[Long], b: Array[Long], keep: (Boolean, Boolean) => Boolean): Array[Long] = {
+    val out = new Array[Long](a.length + b.length)
+    var i = 0; var j = 0; var w = 0
+    while (i < a.length || j < b.length) {
+      val c =
+        if (i == a.length) 1
+        else if (j == b.length) -1
+        else java.lang.Long.compare(a(i), b(j))
+      val v = if (c <= 0) a(i) else b(j)
+      if (keep(c <= 0, c >= 0)) { out(w) = v; w += 1 }
+      if (c <= 0) i += 1
+      if (c >= 0) j += 1
+    }
+    java.util.Arrays.copyOf(out, w)
+  }
+
+  private def intersect(a: Array[Long], b: Array[Long]) = merge(a, b, _ && _)
+  private def union(a: Array[Long], b: Array[Long]) = merge(a, b, _ || _)
+  private def minus(a: Array[Long], b: Array[Long]) = merge(a, b, (inA, inB) => inA && !inB)
+
+  /** In-place quicksort of a row-index array under `cmp` — the
+    * boxing-free multi-key sort of the permutations
+    * ([[QueryEngine.sortPairedByKey]]'s scheme: insertion sort below 32
+    * elements, median-of-three pivot, recursion on the smaller side). */
+  private def sortIndices(ix: Array[Int], cmp: (Int, Int) => Int): Unit = {
+    def swap(i: Int, j: Int): Unit = { val t = ix(i); ix(i) = ix(j); ix(j) = t }
+    def sort(lo0: Int, hi0: Int): Unit = {
+      var lo = lo0; var hi = hi0
+      while (hi - lo >= 32) {
+        val mid = lo + (hi - lo) / 2
+        if (cmp(ix(mid), ix(lo)) < 0) swap(mid, lo)
+        if (cmp(ix(hi), ix(lo)) < 0) swap(hi, lo)
+        if (cmp(ix(hi), ix(mid)) < 0) swap(hi, mid)
+        val pivot = ix(mid)
+        var i = lo; var j = hi
+        while (i <= j) {
+          while (cmp(ix(i), pivot) < 0) i += 1
+          while (cmp(ix(j), pivot) > 0) j -= 1
+          if (i <= j) { swap(i, j); i += 1; j -= 1 }
+        }
+        if (j - lo < hi - i) { sort(lo, j); lo = i } else { sort(i, hi); hi = j }
+      }
+      var i = lo + 1
+      while (i <= hi) {
+        val v = ix(i)
+        var j = i - 1
+        while (j >= lo && cmp(ix(j), v) > 0) { ix(j + 1) = ix(j); j -= 1 }
+        ix(j + 1) = v
+        i += 1
+      }
+    }
+    if (ix.length > 1) sort(0, ix.length - 1)
+  }
+}

@@ -64,11 +64,52 @@ object QueryEngine {
 
   // ---------------------------------------------------------------- set ops
 
+  /** The role of each filter's set in the reference's operator chain
+    * (query.py:629-668): the first filter seeds whatever its op is (the
+    * leading-`not` quirk); should/or UNION, must/and INTERSECT, not
+    * EXCEPT, every EXCEPT after all other terms; any other op value
+    * contributes nothing. `items` is (op, set) in filter order. */
+  private[algebra] def setRoles[A](items: Seq[(String, A)]): Vector[(String, A)] = {
+    var roles = Vector.empty[(String, A)]
+    var excepts = Vector.empty[(String, A)]
+    for ((op, a) <- items) {
+      if (roles.isEmpty) roles :+= ("seed" -> a)
+      else if (op == "should" || op == "or") roles :+= ("union" -> a)
+      else if (op == "must" || op == "and") roles :+= ("intersect" -> a)
+      else if (op == "not") excepts :+= ("except" -> a)
+    }
+    roles ++ excepts
+  }
+
+  /** Fold role-tagged sets with the reference's operator precedence:
+    * INTERSECT binds tighter than UNION/EXCEPT (it collapses onto its
+    * left operand), then UNION/EXCEPT associate left (query.py emits one
+    * concatenated SQL string — precedence is DuckDB's). The first role is
+    * the seed whatever its tag. One fold for every set representation:
+    * DataFrames ([[combineSets]]), flag columns ([[fusedSubjects]]) and
+    * the driver tier's sorted arrays ([[LocalStore]]). */
+  private[algebra] def foldRoles[A](roles: Seq[(String, A)])(
+      and: (A, A) => A, or: (A, A) => A, minus: (A, A) => A): Option[A] = {
+    if (roles.isEmpty) return None
+    val collapsed = roles.foldLeft(List.empty[(String, A)]) {
+      case (acc, (op, a)) =>
+        if (op == "intersect" && acc.nonEmpty) {
+          val (prevOp, prev) = acc.head
+          (prevOp, and(prev, a)) :: acc.tail
+        } else (op, a) :: acc
+    }.reverse
+    Some(collapsed.tail.foldLeft(collapsed.head._2) { case (acc, (op, a)) =>
+      op match {
+        case "union" => or(acc, a)
+        case "except" => minus(acc, a)
+        case _ => acc
+      }
+    })
+  }
+
   /** Fold compiled branch frames with the reference's set-operator
-    * precedence: INTERSECT binds tighter than UNION/EXCEPT, UNION/EXCEPT
-    * associate left (query.py:629-668 emits one concatenated SQL string —
-    * precedence is DuckDB's). `items` is (op, df) with the first op
-    * ignored (seed). Branch inputs arrive NON-deduplicated
+    * precedence ([[foldRoles]]). `items` is (role, df) with the first
+    * role ignored (seed). Branch inputs arrive NON-deduplicated
     * (FilterCompiler contract): `intersect`/`except` dedup internally,
     * and `dedup = true` applies the one final distinct — whose partial
     * (map-side) aggregation removes duplicates before the shuffle,
@@ -76,27 +117,9 @@ object QueryEngine {
     * distinct per branch. `dedup = false` is for consumers that do their
     * own grouping (score chains) or none at all (semi-joins — [[facet]]). */
   def combineSets(items: Seq[(String, DataFrame)],
-      dedup: Boolean = true): Option[DataFrame] = {
-    if (items.isEmpty) return None
-    // collapse INTERSECT runs onto their left operand
-    val collapsed = items.foldLeft(List.empty[(String, DataFrame)]) {
-      case (acc, (op, df)) =>
-        if (op == "intersect" && acc.nonEmpty) {
-          val (prevOp, prevDf) = acc.head
-          (prevOp, prevDf.intersect(df)) :: acc.tail
-        } else (op, df) :: acc
-    }.reverse
-    // left-fold UNION / EXCEPT in order
-    val seed = collapsed.head._2
-    val folded = collapsed.tail.foldLeft(seed) { case (acc, (op, df)) =>
-      op match {
-        case "union" => acc.union(df)
-        case "except" => acc.except(df)
-        case _ => acc
-      }
-    }
-    Some(if (dedup) folded.distinct() else folded)
-  }
+      dedup: Boolean = true): Option[DataFrame] =
+    foldRoles(items)(_ intersect _, _ union _, _ except _)
+      .map(folded => if (dedup) folded.distinct() else folded)
 
   private def isScoring(f: FilterQ): Boolean =
     f.p.startsWith("fts") || f.p.startsWith("semantic")
@@ -117,20 +140,9 @@ object QueryEngine {
     * Unrecognized filters and unknown ops are silently dropped
     * (query.py:659-669). */
   def subjectsFromCompiled(compiled: Seq[(FilterQ, DataFrame)],
-      dedup: Boolean = true): Option[DataFrame] = {
-    var items = Vector.empty[(String, DataFrame)]
-    var excepts = Vector.empty[(String, DataFrame)]
-    for ((f, dfRaw) <- compiled) {
-      val df = if (isScoring(f)) dfRaw.select("s") else dfRaw
-      val op = f.op
-      if (items.isEmpty) items :+= ("seed" -> df)
-      else if (op == "should" || op == "or") items :+= ("union" -> df)
-      else if (op == "must" || op == "and") items :+= ("intersect" -> df)
-      else if (op == "not") excepts :+= ("except" -> df)
-      // other op values: filter contributes nothing (reference parity)
-    }
-    combineSets(items ++ excepts, dedup)
-  }
+      dedup: Boolean = true): Option[DataFrame] =
+    combineSets(setRoles(compiled.map { case (f, df) =>
+      f.op -> (if (isScoring(f)) df.select("s") else df) }), dedup)
 
   /** Fused evaluation of a boolean filter forest when EVERY filter is a
     * simple triples-scan predicate ([[FilterCompiler.simplePredicate]]):
@@ -142,51 +154,22 @@ object QueryEngine {
     * None when any filter needs its own plan (hops/fts/regex/semantic/
     * sample) or fewer than two branches survive — the caller falls back
     * to per-branch compilation, whose plan is identical for one branch.
-    *
-    * Exact parity with [[subjectsFromCompiled]]/[[combineSets]],
-    * property-checked against the naive evaluator in AlgebraProps: the
-    * first filter seeds regardless of its op (the reference's
-    * leading-`not` quirk), INTERSECT collapses onto its left operand
-    * before the left-to-right UNION/EXCEPT fold, EXCEPT terms evaluate
-    * last, unknown ops contribute nothing. */
+    * Exact parity with [[subjectsFromCompiled]] by construction (the
+    * same [[setRoles]] and [[foldRoles]]), property-checked against the
+    * naive evaluator in AlgebraProps. */
   private[algebra] def fusedSubjects(ctx: EngineContext, opts: QueryOpts): Option[DataFrame] = {
-    val preds = opts.filters.map(f => FilterCompiler.simplePredicate(ctx, f).map(f -> _))
+    val preds = opts.filters.map(f => FilterCompiler.simplePredicate(ctx, f).map(f.op -> _))
     if (preds.exists(_.isEmpty)) return None
-    // role assignment first (mirroring subjectsFromCompiled), so unknown
-    // ops drop before any flag is minted
-    var roles = Vector.empty[(String, Column)]
-    var excepts = Vector.empty[(String, Column)]
-    for (Some((f, pred)) <- preds) {
-      val op = f.op
-      if (roles.isEmpty) roles :+= ("seed" -> pred)
-      else if (op == "should" || op == "or") roles :+= ("union" -> pred)
-      else if (op == "must" || op == "and") roles :+= ("intersect" -> pred)
-      else if (op == "not") excepts :+= ("except" -> pred)
-    }
-    val ordered = roles ++ excepts
-    if (ordered.size < 2) return None
-    val anyPred = ordered.map(_._2).reduce(_ || _)
-    val aggCols = ordered.zipWithIndex.map { case ((_, p), i) =>
+    // role assignment first, so unknown ops drop before any flag is minted
+    val roles = setRoles(preds.flatten)
+    if (roles.size < 2) return None
+    val anyPred = roles.map(_._2).reduce(_ || _)
+    val aggCols = roles.zipWithIndex.map { case ((_, p), i) =>
       max(when(p, lit(1)).otherwise(lit(0))).as(s"__f$i") }
     val flags = ctx.graph.triples.filter(anyPred)
       .groupBy(col("s")).agg(aggCols.head, aggCols.tail: _*)
-    // the combineSets fold, over flag columns instead of DataFrames
-    val withFlags = ordered.zipWithIndex.map { case ((op, _), i) =>
-      (op, col(s"__f$i") === 1) }
-    val collapsed = withFlags.foldLeft(List.empty[(String, Column)]) {
-      case (acc, (op, c)) =>
-        if (op == "intersect" && acc.nonEmpty) {
-          val (prevOp, prevC) = acc.head
-          (prevOp, prevC && c) :: acc.tail
-        } else (op, c) :: acc
-    }.reverse
-    val expr = collapsed.tail.foldLeft(collapsed.head._2) { case (acc, (op, c)) =>
-      op match {
-        case "union" => acc || c
-        case "except" => acc && !c
-        case _ => acc
-      }
-    }
+    val expr = foldRoles(roles.zipWithIndex.map { case ((op, _), i) =>
+      (op, col(s"__f$i") === 1) })(_ && _, _ || _, (a, b) => a && !b).get
     Some(flags.filter(expr).select("s"))
   }
 
@@ -828,9 +811,20 @@ object QueryEngine {
   // ------------------------------------------------------------ full query
 
   /** The primary read path: full result assembly mirroring query.py's
-    * envelope. Heavy stages stay distributed; only the ≤size-row page,
-    * its decode dictionary slice, and facet rows are collected. */
-  def query(ctx: EngineContext, opts: QueryOpts): QueryResult = {
+    * envelope. A simple-filter request ([[LocalStore.supports]]) on a
+    * context whose store fits the driver tier's cap is answered from the
+    * driver-resident copy, with no Spark job; everything else takes
+    * [[querySpark]]. Both tiers finish through [[assemble]]. */
+  def query(ctx: EngineContext, opts: QueryOpts): QueryResult =
+    (if (LocalStore.supports(opts)) LocalStore.of(ctx) else None) match {
+      case Some(store) => store.query(ctx, opts)
+      case None => querySpark(ctx, opts)
+    }
+
+  /** The Spark tier of [[query]]. Heavy stages stay distributed; only
+    * the ≤size-row page, its decode dictionary slice, and facet rows are
+    * collected. */
+  private[graft] def querySpark(ctx: EngineContext, opts: QueryOpts): QueryResult = {
     val spark = ctx.graph.spark
     import spark.implicits._
 
@@ -841,18 +835,14 @@ object QueryEngine {
     // all-simple forests fuse into one scan+aggregate; anything with a
     // scoring/derived-index branch keeps the per-branch compilation
     val sResultsOpt = fusedSubjects(ctx, opts).orElse(subjectsFromCompiled(compiled))
-    // ListMap for the same insertion-order reason as `results`: past 4
-    // entries a HashMap would emit the aggregates object in key-hash
-    // order instead of the request order the reference's dict preserves
-    var aggregates: Map[String, Seq[(Long, String)]] =
-      scala.collection.immutable.ListMap.empty
 
     try sResultsOpt match {
       case None =>
         // no (valid) filters: only the whole-DB special aggregates run
-        for (agg <- opts.aggregates if agg == "properties" || agg == "graphs")
-          aggregates += agg -> facetWholeDb(ctx, agg).as[(Long, String)].collect().toSeq
-        QueryResult(Map.empty, 0L, opts.size, opts.start, aggregates)
+        val aggregates =
+          for (agg <- opts.aggregates if agg == "properties" || agg == "graphs")
+            yield agg -> facetWholeDb(ctx, agg).as[(Long, String)].collect().toSeq
+        assemble(ctx, opts, Array.empty, Map.empty, 0L, aggregates)
 
       case Some(sResultsRaw) =>
         // s_results feeds count + page + every facet → persist once
@@ -882,15 +872,9 @@ object QueryEngine {
                   .as[(Long, String)].collect().toSeq)
             }
             val pageF = Future {
-              // secondary (p, o, g) hash keys: pos alone leaves rows of
-              // one subject in shuffle-fetch order, which is
-              // nondeterministic on a cluster — the envelope must be
-              // byte-stable for the md5-keyed result cache (the
-              // reference's own within-subject order is its SQL fetch
-              // order, equally undefined, so any FIXED order is parity)
               hydrate(ctx, opts, wanted)
                 .select("s", "p", "o", "g", "pos").as[(Long, Long, Long, Long, Int)]
-                .collect().sortBy(r => (r._5, r._2, r._3, r._4))
+                .collect()
             }
             // paths for page subjects
             val pathsF = Future {
@@ -900,73 +884,100 @@ object QueryEngine {
               }.toMap
             }
             val total = Await.result(totalF, Duration.Inf)
-            aggregates ++= Await.result(aggF, Duration.Inf)
+            val aggregates = Await.result(aggF, Duration.Inf)
             val pageRows = Await.result(pageF, Duration.Inf)
-            val pathRows: Map[String, Array[(Long, Seq[Long])]] =
-              Await.result(pathsF, Duration.Inf)
-
-            // decode set: page terms + path members
-            val toFetch = scala.collection.mutable.HashSet.empty[Long]
-            pageRows.foreach { case (s, p, o, _, _) => toFetch += s; toFetch += p; toFetch += o }
-            pathRows.values.foreach(_.foreach(_._2.foreach(toFetch += _)))
-            val hv: Map[Long, String] = ctx.dictBroadcast match {
-              case Some(b) =>
-                toFetch.iterator.flatMap(h => b.value.get(h).map(h -> _)).toMap
-              case None =>
-                if (toFetch.isEmpty) Map.empty
-                else toFetch.toSeq.toDF("hash")
-                  .join(ctx.graph.dict, "hash")
-                  .as[(Long, String)].collect().toMap
-            }
-
-            // assemble entities in page order
-            val order = scala.collection.mutable.LinkedHashMap.empty[Long, scala.collection.mutable.LinkedHashMap[Long, scala.collection.mutable.LinkedHashSet[Long]]]
-            pageRows.foreach { case (s, p, o, _, _) =>
-              order.getOrElseUpdate(s, scala.collection.mutable.LinkedHashMap.empty)
-                .getOrElseUpdate(p, scala.collection.mutable.LinkedHashSet.empty) += o
-            }
-            // one path per (subject, property), like the reference's
-            // per-row dict overwrite (query.py:820) — but chosen
-            // DETERMINISTICALLY (shortest, then lexicographic) instead
-            // of by collect order: a multi-parent subject has several
-            // finished chains and the reference's winner is just its
-            // undefined SQL fetch order, so any fixed pick is parity
-            // while keeping the envelope byte-stable for the result cache
-            val pathsBySubject: Map[Long, Map[String, Seq[Long]]] =
-              pathRows.toSeq
-                .flatMap { case (pad, rows) => rows.map { case (src, path) => (src, pad, path) } }
-                .groupBy(_._1)
-                .map { case (src, rows) =>
-                  src -> rows.groupBy(_._2).map { case (pad, cands) =>
-                    pad -> cands.map(_._3)
-                      .minBy(p => (p.length, p.map(java.lang.Long.toUnsignedString(_)).mkString(",")))
-                  }
-                }
-
-            // ListMap end-to-end: entities stay in page (pos) order and
-            // each property map in first-seen triple order, like the
-            // reference's insertion-ordered dicts
-            val results: Map[String, Entity] =
-              scala.collection.immutable.ListMap(order.toSeq.flatMap { case (sHash, props) =>
-                hv.get(sHash).map { sIri =>
-                  val propMap: Map[String, Seq[String]] =
-                    scala.collection.immutable.ListMap(props.toSeq.flatMap { case (pHash, oHashes) =>
-                      hv.get(pHash).map { pIri =>
-                        pIri -> oHashes.toSeq.flatMap(hv.get)
-                      }
-                    }: _*)
-                  val entPaths = pathsBySubject.getOrElse(sHash, Map.empty).map {
-                    case (pad, path) =>
-                      pad -> path.filter(_ != sHash).flatMap(hv.get)
-                  }
-                  sIri -> Entity(sIri, propMap, Nil, entPaths)
-                }
-              }: _*)
-
-            QueryResult(results, total, opts.size, opts.start, aggregates)
+            val pathRows = Await.result(pathsF, Duration.Inf)
+            assemble(ctx, opts, pageRows, pathRows, total, aggregates)
           } finally wanted.unpersist()
         } finally sResults.unpersist()
     } finally persistedScoring.foreach(_.unpersist())
+  }
+
+  /** The envelope from hash-level rows — the one assembly step both
+    * tiers finish through. `pageRows` are the distinct hydrated
+    * (s, p, o, g, pos) rows of the page subjects in any order, `pathRows`
+    * the walked (source, path) chains per path property, `aggregates`
+    * the facet rows per requested aggregate in request order. */
+  private[algebra] def assemble(ctx: EngineContext, opts: QueryOpts,
+      pageRows0: Array[(Long, Long, Long, Long, Int)],
+      pathRows: Map[String, Array[(Long, Seq[Long])]],
+      total: Long,
+      aggregates: Seq[(String, Seq[(Long, String)])]): QueryResult = {
+    // secondary (p, o, g) hash keys: pos alone leaves rows of one
+    // subject in fetch order, which is nondeterministic on a cluster —
+    // the envelope must be byte-stable for the result cache, keyed by
+    // decoded opts (the reference's own within-subject order is its SQL
+    // fetch order, equally undefined, so any FIXED order is parity)
+    val pageRows = pageRows0.sortBy(r => (r._5, r._2, r._3, r._4))
+
+    // decode set: page terms + path members
+    val toFetch = scala.collection.mutable.HashSet.empty[Long]
+    pageRows.foreach { case (s, p, o, _, _) => toFetch += s; toFetch += p; toFetch += o }
+    pathRows.values.foreach(_.foreach(_._2.foreach(toFetch += _)))
+    val hv: Map[Long, String] = ctx.dictBroadcast match {
+      case Some(b) =>
+        toFetch.iterator.flatMap(h => b.value.get(h).map(h -> _)).toMap
+      case None =>
+        if (toFetch.isEmpty) Map.empty
+        else {
+          val spark = ctx.graph.spark
+          import spark.implicits._
+          toFetch.toSeq.toDF("hash")
+            .join(ctx.graph.dict, "hash")
+            .as[(Long, String)].collect().toMap
+        }
+    }
+
+    // assemble entities in page order
+    val order = scala.collection.mutable.LinkedHashMap.empty[Long, scala.collection.mutable.LinkedHashMap[Long, scala.collection.mutable.LinkedHashSet[Long]]]
+    pageRows.foreach { case (s, p, o, _, _) =>
+      order.getOrElseUpdate(s, scala.collection.mutable.LinkedHashMap.empty)
+        .getOrElseUpdate(p, scala.collection.mutable.LinkedHashSet.empty) += o
+    }
+    // one path per (subject, property), like the reference's
+    // per-row dict overwrite (query.py:820) — but chosen
+    // DETERMINISTICALLY (shortest, then lexicographic) instead
+    // of by collect order: a multi-parent subject has several
+    // finished chains and the reference's winner is just its
+    // undefined SQL fetch order, so any fixed pick is parity
+    // while keeping the envelope byte-stable for the result cache
+    val pathsBySubject: Map[Long, Map[String, Seq[Long]]] =
+      pathRows.toSeq
+        .flatMap { case (pad, rows) => rows.map { case (src, path) => (src, pad, path) } }
+        .groupBy(_._1)
+        .map { case (src, rows) =>
+          src -> rows.groupBy(_._2).map { case (pad, cands) =>
+            pad -> cands.map(_._3)
+              .minBy(p => (p.length, p.map(java.lang.Long.toUnsignedString(_)).mkString(",")))
+          }
+        }
+
+    // ListMap end-to-end: entities stay in page (pos) order and
+    // each property map in first-seen triple order, like the
+    // reference's insertion-ordered dicts
+    val results: Map[String, Entity] =
+      scala.collection.immutable.ListMap(order.toSeq.flatMap { case (sHash, props) =>
+        hv.get(sHash).map { sIri =>
+          val propMap: Map[String, Seq[String]] =
+            scala.collection.immutable.ListMap(props.toSeq.flatMap { case (pHash, oHashes) =>
+              hv.get(pHash).map { pIri =>
+                pIri -> oHashes.toSeq.flatMap(hv.get)
+              }
+            }: _*)
+          val entPaths = pathsBySubject.getOrElse(sHash, Map.empty).map {
+            case (pad, path) =>
+              pad -> path.filter(_ != sHash).flatMap(hv.get)
+          }
+          sIri -> Entity(sIri, propMap, Nil, entPaths)
+        }
+      }: _*)
+
+    // ListMap for the same insertion-order reason as `results`: past 4
+    // entries a HashMap would emit the aggregates object in key-hash
+    // order instead of the request order the reference's dict preserves
+    val aggs: Map[String, Seq[(Long, String)]] =
+      scala.collection.immutable.ListMap.empty[String, Seq[(Long, String)]] ++ aggregates
+    QueryResult(results, total, opts.size, opts.start, aggs)
   }
 
   def queryJson(ctx: EngineContext, optsJson: String): String =

@@ -3,6 +3,7 @@ package graft
 import graft.algebra._
 import graft.functions.Hash64
 import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.Prop.propBoolean
 
 /** ScalaCheck differential properties: the engine's compiled filter
   * algebra vs a naive in-memory set evaluator over the fixture graph
@@ -127,6 +128,56 @@ object AlgebraProps extends Properties("algebra") {
       }.takeWhile(_.nonEmpty).toList
       pages.flatten.toSet == all &&
         pages.map(_.size).sum == all.size // disjoint
+    }
+
+  // --- the driver tier against the Spark tier -----------------------------
+
+  private lazy val mapped = EngineContext.withDictBroadcast(ctx)
+
+  private val absent = "<http://ex/absent>"
+  private val iris = (subjects ++ objs).distinct
+    .filter(t => t.startsWith("<") || t.startsWith("_:"))
+  private val genIri: Gen[String] = Gen.frequency(9 -> Gen.oneOf(iris), 1 -> Gen.const(absent))
+  // the multi-IRI split quirk: a list splits only when it starts with
+  // `<` and ends with `>` (a trailing blank node or literal keeps it whole)
+  private val genIriList: Gen[String] =
+    Gen.choose(2, 3).flatMap(k => Gen.listOfN(k, genIri)).map(_.mkString(" "))
+  private val genG: Gen[String] = Gen.frequency(
+    4 -> Gen.const(""), 2 -> Gen.oneOf(graphs), 1 -> Gen.const(absent),
+    1 -> Gen.oneOf(graphs).map(g => s"$g $absent"))
+
+  private val genSimple: Gen[FilterQ] = for {
+    f <- Gen.oneOf(
+      for { p <- Gen.frequency(9 -> Gen.oneOf(preds), 1 -> Gen.const(absent))
+            o <- Gen.frequency(6 -> Gen.oneOf(objs), 2 -> genIriList, 1 -> Gen.const(absent)) }
+        yield FilterQ(p = p, o = o),
+      Gen.oneOf(preds).map(p => FilterQ(p = p)),
+      Gen.oneOf(genIri, genIriList).map(o => FilterQ(o = o)),
+      Gen.oneOf(genIri, genIriList).map(o => FilterQ(p = "id", o = o)))
+    g <- genG
+    op <- Gen.oneOf("should", "or", "must", "and", "not", "xor")
+  } yield f.copy(g = g, op = op)
+
+  private val genLocalOpts: Gen[QueryOpts] = for {
+    n <- Gen.choose(1, 4)
+    filters <- Gen.listOfN(n, genSimple)
+    size <- Gen.choose(0, 12)
+    start <- Gen.choose(0, 20)
+    props <- Gen.someOf(preds :+ absent)
+    which <- Gen.choose(0, 2)
+    facetProp <- Gen.oneOf(preds)
+    aggs <- Gen.someOf(Seq(facetProp, "graphs", "properties"))
+  } yield QueryOpts(filters = filters, size = size, start = start,
+    aggregates = aggs.toSeq,
+    onlyProperties = if (which == 1) props.toSeq else Nil,
+    excludeProperties = if (which == 2) props.toSeq else Nil)
+
+  property("driver tier answers simple-filter reads exactly like the Spark tier") =
+    Prop.forAll(genLocalOpts) { opts =>
+      val local = QueryEngine.query(mapped, opts).toJson
+      val viaSpark = QueryEngine.querySpark(mapped, opts).toJson
+      (LocalStore.supports(opts) && LocalStore.of(mapped).isDefined) :| "served locally" &&
+        (local == viaSpark) :| s"local $local\nspark $viaSpark"
     }
 
   property("hash round-trip: dictionary decodes every term") =

@@ -63,6 +63,36 @@ class BikidataApiSpec extends SparkSpec {
     assert(bk.total() === 2)
   }
 
+  test("a driver-tier id read sees an insert and stops seeing its delete") {
+    import graft.algebra.{LocalStore, QueryEngine, QueryOpts}
+    val dir = java.nio.file.Files.createTempDirectory("graft-local").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/data.nt"),
+      """<http://ex/a> <http://www.w3.org/2000/01/rdf-schema#label> "alpha thing" .
+        |<http://ex/b> <http://ex/rel> <http://ex/a> .
+        |""".stripMargin)
+    val bk = new Bikidata(spark, s"$dir/wh")
+    bk.build(Seq(s"$dir/data.nt"))
+    val label = "<http://www.w3.org/2000/01/rdf-schema#label>"
+    val probe = """{"filters":[{"p":"id","o":"<http://ex/c>"}]}"""
+    val opts = QueryOpts.fromJson(probe)
+    assert(LocalStore.supports(opts))
+    def served(): String = {
+      val c = bk.ctx
+      val answer = bk.queryJson(probe)
+      assert(LocalStore.of(c).isDefined, "the read must be served by the driver tier")
+      assert(answer === QueryEngine.querySpark(c, opts).toJson)
+      answer
+    }
+    assert(!served().contains("<http://ex/c>"))
+    val before = bk.ctx
+    assert(bk.insert(Seq(Quad("<http://ex/c>", label, "\"gamma thing\"", ""))).error.isEmpty)
+    assert(LocalStore.of(before).isEmpty, "the retired context must not serve")
+    val afterInsert = served()
+    assert(afterInsert.contains("<http://ex/c>") && afterInsert.contains("gamma thing"))
+    assert(bk.delete(Seq(("<http://ex/c>", label, None, ""))).error.isEmpty)
+    assert(!served().contains("<http://ex/c>"))
+  }
+
   test("a stored fts index out of sync with the dictionary is healed at ctx init") {
     val dir = java.nio.file.Files.createTempDirectory("graft-heal").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/data.nt"),

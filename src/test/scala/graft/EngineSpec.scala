@@ -199,6 +199,65 @@ class EngineSpec extends SparkSpec {
         QueryEngine.query(mapped, opts).toJson, s"paths diverge on $opts")
   }
 
+  /** A decode-mapped context over the fixture graph with its own caches,
+    * driver-tier slot and retire flag (a copy() of the shared fixture
+    * context would share them). */
+  private def freshLocalCtx: EngineContext =
+    EngineContext.withDictBroadcast(EngineContext(ctx.graph))
+
+  test("8 concurrent first queries build the driver tier once") {
+    val c = freshLocalCtx
+    val opts = QueryOpts(filters = Seq(FilterQ(p = a, o = human)), aggregates = Seq("graphs"))
+    assert(LocalStore.supports(opts))
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    try {
+      val calls = Seq.fill(8)(scala.concurrent.Future {
+        start.await()
+        QueryEngine.query(c, opts).toJson
+      })
+      start.countDown()
+      val answers = scala.concurrent.Await.result(
+        scala.concurrent.Future.sequence(calls), scala.concurrent.duration.Duration(60, "s"))
+      assert(c.localStore.builds.get === 1)
+      assert(LocalStore.of(c).isDefined)
+      assert(answers.distinct === Seq(QueryEngine.querySpark(c, opts).toJson))
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+    }
+  }
+
+  test("a store over the driver tier's cap answers through Spark with the same envelope") {
+    val c = freshLocalCtx
+    val n = ctx.graph.triples.count()
+    assert(LocalStore.load(c, n).isDefined, "a store of exactly the cap fits")
+    // one triple over the cap: the "too big" verdict fills the slot and
+    // is remembered — later queries never rebuild or serve locally
+    assert(c.localStore(LocalStore.load(c, n - 1)).isEmpty)
+    assert(LocalStore.of(c).isEmpty)
+    assert(c.localStore.builds.get === 1)
+    val opts = QueryOpts(filters = Seq(FilterQ(p = a, o = human),
+      FilterQ(p = homeworld, o = "<http://ex/alderaan>", op = "not")),
+      size = 2, start = 1, aggregates = Seq(a, "properties"))
+    val local = freshLocalCtx
+    val served = QueryEngine.query(local, opts).toJson
+    assert(LocalStore.of(local).isDefined)
+    assert(QueryEngine.query(c, opts).toJson === served)
+    assert(QueryEngine.querySpark(c, opts).toJson === served)
+  }
+
+  test("a retired context never serves from the driver tier") {
+    val c = freshLocalCtx
+    assert(LocalStore.of(c).isDefined)
+    c.retired.set(true)
+    c.drainDerivedCaches()
+    assert(LocalStore.of(c).isEmpty)
+    assert(c.localStore.builds.get === 1, "a retired context must not rebuild")
+  }
+
   test("sort labels ignore blank-node objects on both decode paths") {
     import spark.implicits._
     val prop = "<http://ex/note>"
