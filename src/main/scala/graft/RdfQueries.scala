@@ -75,28 +75,28 @@ object RdfQueries {
     // §2.2 p+o property filter
     "q_rdf_filter_po" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_filter_po") {
+      ctx.plan("q_rdf_filter_po") {
       decodeS(ctx, subjects(ctx, FilterQ(p = predIri("customer", "c_mktsegment"), o = "\"BUILDING\""))) }
     }),
 
     // §2.2 p-only filter (any value)
     "q_rdf_filter_p" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_filter_p") {
+      ctx.plan("q_rdf_filter_p") {
         decodeS(ctx, subjects(ctx, FilterQ(p = ParentIri))) }
     }),
 
     // §2.2 reverse reference (o-only)
     "q_rdf_filter_o" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_filter_o") {
+      ctx.plan("q_rdf_filter_o") {
       decodeS(ctx, subjects(ctx, FilterQ(o = "<urn:t:nation:7>"))) }
     }),
 
     // §2.2 id point lookup + §2.3 hydration join + decode
     "q_rdf_filter_id" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_filter_id") {
+      ctx.plan("q_rdf_filter_id") {
       val opts = QueryOpts(filters = Seq(FilterQ(p = "id", o = "<urn:t:region:1>")))
       val wanted = QueryEngine.wantedPage(ctx, opts,
         QueryEngine.subjects(ctx, opts).get, None)
@@ -109,7 +109,7 @@ object RdfQueries {
     // the shared oo fragment of query.py:134-144)
     "q_rdf_multi_id" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_multi_id") {
+      ctx.plan("q_rdf_multi_id") {
       decodeS(ctx, subjects(ctx,
         FilterQ(p = "id", o = "<urn:t:region:1> <urn:t:region:3>"))) }
     }),
@@ -117,7 +117,7 @@ object RdfQueries {
     // §2.7 INTERSECT
     "q_rdf_and" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_and") { decodeS(ctx, subjects(ctx,
+      ctx.plan("q_rdf_and") { decodeS(ctx, subjects(ctx,
         FilterQ(p = predIri("customer", "c_mktsegment"), o = "\"BUILDING\""),
         FilterQ(p = ParentIri, o = "<urn:t:nation:7>", op = "and"))) }
     }),
@@ -125,7 +125,7 @@ object RdfQueries {
     // §2.7 UNION
     "q_rdf_or" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_or") {
+      ctx.plan("q_rdf_or") {
       decodeS(ctx, subjects(ctx,
         FilterQ(p = predIri("customer", "c_mktsegment"), o = "\"BUILDING\""),
         FilterQ(p = predIri("customer", "c_mktsegment"), o = "\"AUTOMOBILE\"", op = "or"))) }
@@ -136,7 +136,7 @@ object RdfQueries {
     // reference quirk at query.py:656-657, covered in EngineSpec)
     "q_rdf_not" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_not") {
+      ctx.plan("q_rdf_not") {
       decodeS(ctx, subjects(ctx,
         FilterQ(p = ParentIri, o = "<urn:t:nation:7>"),
         FilterQ(p = predIri("customer", "c_mktsegment"), o = "\"BUILDING\"", op = "not"),
@@ -146,7 +146,7 @@ object RdfQueries {
     // §2.2 multi-IRI o => IN
     "q_rdf_multi_o" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_multi_o") {
+      ctx.plan("q_rdf_multi_o") {
       decodeS(ctx, subjects(ctx,
         FilterQ(p = ParentIri, o = "<urn:t:nation:3> <urn:t:nation:7>"))) }
     }),
@@ -162,7 +162,7 @@ object RdfQueries {
     // §2.2 named-graph restriction
     "q_rdf_graph" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_graph") {
+      ctx.plan("q_rdf_graph") {
       decodeS(ctx, subjects(ctx,
         FilterQ(p = LabelIri, g = graphIri("nation")))) }
     }),
@@ -170,7 +170,7 @@ object RdfQueries {
     // §2.2 multi-graph restriction (space-separated graph IN-list)
     "q_rdf_multi_graph" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_multi_graph") {
+      ctx.plan("q_rdf_multi_graph") {
       decodeS(ctx, subjects(ctx,
         FilterQ(p = LabelIri, g = s"${graphIri("nation")} ${graphIri("region")}"))) }
     }),
@@ -210,7 +210,7 @@ object RdfQueries {
     // §3.1 stage 8: only_properties-restricted hydration
     "q_rdf_only_props" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_only_props") {
+      ctx.plan("q_rdf_only_props") {
       val opts = QueryOpts(
         filters = Seq(FilterQ(p = "id", o = "<urn:t:nation:3>")),
         onlyProperties = Seq(LabelIri))
@@ -223,7 +223,7 @@ object RdfQueries {
     // §3.1 stage 8: exclude_properties-restricted hydration
     "q_rdf_exclude_props" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_exclude_props") {
+      ctx.plan("q_rdf_exclude_props") {
       val opts = QueryOpts(
         filters = Seq(FilterQ(p = "id", o = "<urn:t:region:1>")),
         excludeProperties = Seq(LabelIri))
@@ -236,7 +236,7 @@ object RdfQueries {
     // §2.5 graphs facet over a filtered set
     "q_rdf_facet_graphs" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_facet_graphs") {
+      ctx.plan("q_rdf_facet_graphs") {
       val sres = subjectsRaw(ctx, FilterQ(p = predIri("nation", "n_name")))
       QueryEngine.facet(ctx, "graphs", sres).orderBy("val") }
     }),
@@ -244,7 +244,7 @@ object RdfQueries {
     // §2.8 order by label with pos
     "q_rdf_order_label" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_order_label") {
+      ctx.plan("q_rdf_order_label") {
       val opts = QueryOpts(
         filters = Seq(FilterQ(p = predIri("nation", "n_name"))),
         order = Seq(OrderRule(by = "label")))
@@ -256,7 +256,7 @@ object RdfQueries {
     // §2.8 order by arbitrary property
     "q_rdf_order_property" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_order_property") {
+      ctx.plan("q_rdf_order_property") {
       // restrict to customers (suppliers share the parent edge but have
       // no c_name => null labels in hash tie-break order, oracle-hostile)
       val opts = QueryOpts(
@@ -272,7 +272,7 @@ object RdfQueries {
     // §2.8 natural sort + pagination (offset crosses numeric prefixes)
     "q_rdf_order_natural" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_order_natural") {
+      ctx.plan("q_rdf_order_natural") {
       val opts = QueryOpts(
         filters = Seq(FilterQ(p = predIri("orders", "o_orderstatus"), o = "\"P\"")),
         order = Seq(OrderRule(by = "label", natural = true)),
@@ -286,7 +286,7 @@ object RdfQueries {
     // on the hash, which the oracle cannot reproduce)
     "q_rdf_order_object_label" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_order_object_label") {
+      ctx.plan("q_rdf_order_object_label") {
       val sres = subjects(ctx, FilterQ(p = predIri("supplier", "s_nationkey")))
       val (sorted, _) = Ordering.sortedSubjects(ctx, sres,
         OrderRule(by = "object_label", via = Some(ParentIri)))
@@ -297,7 +297,7 @@ object RdfQueries {
     // §2.5 facet by property over the filtered set
     "q_rdf_facet" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_facet") {
+      ctx.plan("q_rdf_facet") {
       // subjects = customers + suppliers of nation 3; suppliers have no
       // mktsegment triples so they contribute nothing to the facet
       val sres = subjectsRaw(ctx, FilterQ(p = ParentIri, o = "<urn:t:nation:3>"))
@@ -308,7 +308,7 @@ object RdfQueries {
     // §2.5 properties facet over the filtered set
     "q_rdf_facet_properties" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_facet_properties") {
+      ctx.plan("q_rdf_facet_properties") {
       val sres = subjectsRaw(ctx, FilterQ(p = predIri("nation", "n_name")))
       QueryEngine.facet(ctx, "properties", sres).orderBy("val") }
     }),
@@ -316,7 +316,7 @@ object RdfQueries {
     // §2.5 whole-DB properties() lookup
     "q_rdf_agg_properties" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_agg_properties") {
+      ctx.plan("q_rdf_agg_properties") {
       QueryEngine.properties(ctx)
         .select(col("value"), col("count")).orderBy("value") }
     }),
@@ -331,7 +331,7 @@ object RdfQueries {
     // §2.5 count_by_property
     "q_rdf_count_by_property" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_count_by_property") {
+      ctx.plan("q_rdf_count_by_property") {
       QueryEngine.countByProperty(ctx, ParentIri)
         .select(col("value"), col("count")).orderBy("value") }
     }),
@@ -339,7 +339,7 @@ object RdfQueries {
     // §2.13 spo lookup with literal-fallback decode
     "q_rdf_spo" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_spo") {
+      ctx.plan("q_rdf_spo") {
       QueryEngine.spo(ctx, p = Some(LabelIri), o = Some("\"NATION_3\""))
         .orderBy("s") }
     }),
@@ -348,7 +348,7 @@ object RdfQueries {
     // under one predicate (reference query.py:38-57)
     "q_rdf_sp" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_sp") {
+      ctx.plan("q_rdf_sp") {
       QueryEngine.sp(ctx,
           Seq("<urn:t:nation:1>", "<urn:t:nation:3>", "<urn:t:region:0>"),
           Some(LabelIri))
@@ -358,7 +358,7 @@ object RdfQueries {
     // §2.11 recursive paths to the hierarchy root
     "q_rdf_paths" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_paths") {
+      ctx.plan("q_rdf_paths") {
       // explicit unpaged size: the oracle has no LIMIT, so relying on
       // the default 999-row page would truncate the engine side (and
       // red the gate) at scale factors where the set outgrows a page
@@ -514,7 +514,7 @@ object RdfQueries {
     // entities sharing >k (p,o) pairs with a seed entity, ranked
     "q_rdf_flagship" -> ((s, dir) => {
       val ctx = rctx(s, dir)
-      ctx.servingPlan("q_rdf_flagship") {
+      ctx.plan("q_rdf_flagship") {
       val seedHash = FilterCompiler.h("<urn:t:customer:1>")
       val seedPairs = ctx.graph.triples.filter(col("s") === seedHash)
         .select(col("p").as("sp"), col("o").as("so")).distinct()

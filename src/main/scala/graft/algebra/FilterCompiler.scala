@@ -41,55 +41,16 @@ final case class EngineContext(
     // under this become an o-IN scan predicate on the triples probe —
     // batch min/max pruning instead of a join; above it, broadcast join
     isinProbeCap: Int = 1000,
-    dictBroadcast: Option[org.apache.spark.broadcast.Broadcast[Map[Long, String]]] = None,
-    // per-property parent edge sets for paths(), persisted across queries
-    // for the lifetime of the context (a serving session runs the same
-    // hierarchy property on every page) — the filter+distinct shuffle is
-    // paid once per property instead of once per query, as is the
-    // single-parent test that lets paths() drop its fanout guard.
-    // copy() shares the map, so derived contexts (e.g. with semantic
-    // indexes) reuse the same cached edge sets.
-    pathEdges: java.util.concurrent.ConcurrentHashMap[String, PathEdges] =
-      new java.util.concurrent.ConcurrentHashMap[String, PathEdges](),
-    // whole-store scalar stats (total()), computed once per context: the
-    // store is immutable between mutations and every mutation replaces
-    // the context (Bikidata.invalidate), so between mutations these are
-    // constants — a serving tier answers them from the materialized
-    // value, not a fresh count-distinct per request. Shared via copy()
-    // like pathEdges, so derived contexts reuse the same stats.
-    stats: java.util.concurrent.ConcurrentHashMap[String, Long] =
-      new java.util.concurrent.ConcurrentHashMap[String, Long](),
-    // whole-store aggregate frames (properties(), whole-DB facets) —
-    // same store-constant argument as `stats`, but the value is a small
-    // persisted DataFrame (vocab-sized: one row per property/graph).
-    // Bikidata.invalidate unpersists these with the graph they view.
-    statFrames: java.util.concurrent.ConcurrentHashMap[String, DataFrame] =
-      new java.util.concurrent.ConcurrentHashMap[String, DataFrame](),
-    // built (NOT materialized) query frames keyed by canonical query
-    // text — see servingPlan. Plain plans over this context's pinned
-    // frames: dropping the map is a full release (nothing persisted).
-    servingPlans: java.util.concurrent.ConcurrentHashMap[String, DataFrame] =
-      new java.util.concurrent.ConcurrentHashMap[String, DataFrame](),
-    // bounded probe RESULTS (collected isin/page value arrays, each
-    // ≤ isinProbeCap / page-size rows) keyed by the probe plan's
-    // semantic hash — see servingValue. Driver-resident and tiny;
-    // cleared (no blocks to free) on the same mutation drain.
-    servingValues: java.util.concurrent.ConcurrentHashMap[String, AnyRef] =
-      new java.util.concurrent.ConcurrentHashMap[String, AnyRef](),
-    // the driver-resident copy of the store that answers simple-filter
-    // reads without a Spark job ([[LocalStore]]), built at the first
-    // eligible query; shared via copy() like the caches above, and
-    // released on the same mutation drain
-    localStore: LocalStore.Slot = new LocalStore.Slot(),
-    // set (before draining) when a mutation retires this context: a query
-    // thread can be mid-computeIfAbsent on pathEdges/statFrames while the
-    // drain runs and install its persisted frame AFTER the clear — into a
-    // map nobody will ever drain again, leaking the persisted blocks for
-    // the session lifetime. Installers re-check this flag post-install
-    // (cachedPathEdges/cachedStatFrame) and re-drain; unpersist is
-    // idempotent, so the double-drain overlap is harmless.
-    retired: java.util.concurrent.atomic.AtomicBoolean =
-      new java.util.concurrent.atomic.AtomicBoolean(false)) {
+    dictBroadcast: Option[org.apache.spark.broadcast.Broadcast[Map[Long, String]]] = None) {
+
+  /** Every structure derived from this context's store: path edge sets,
+    * whole-store stats and frames, plans, probe results and the driver
+    * tier. Between mutations the store is immutable and every mutation
+    * replaces the context (Bikidata.invalidate), so each is a constant
+    * of this instance, built at first use. A body member, not a
+    * parameter: a copy() starts empty and never sees, or releases, this
+    * instance's entries. */
+  private val memo = new graft.Memo[Any](EngineContext.maxServingEntries)
 
   /** Decode column via the broadcast map (None => use the join path).
     *
@@ -112,40 +73,30 @@ final case class EngineContext(
           org.apache.spark.sql.GraftShims.expression(c), b)))
     }
 
-  /** Unpersist + clear every derived cache. Remove-then-unpersist per
-    * key (not forEach+clear) so an entry installed mid-drain is either
-    * removed here or caught by its installer's own retired re-check. */
-  def drainDerivedCaches(): Unit = {
-    val pi = pathEdges.keySet().iterator()
-    while (pi.hasNext) Option(pathEdges.remove(pi.next())).foreach { pe =>
-      pe.edges.unpersist()
-      // non-blocking release: in-flight queries holding the broadcast
-      // still complete; the blocks just stop being cached
-      pe.parentArrays.foreach(_.unpersist(false))
+  /** This context's value for `key`, built at the first call (see
+    * [[memo]]). Plans, probe results and other values that cost only a
+    * rebuild; past [[EngineContext.maxServingEntries]] entries they are
+    * dropped, so a session serving many DISTINCT ad-hoc shapes does not
+    * grow the driver heap. Probe keys hold the probe plan's
+    * `canonicalized` form, so two different plans never share an entry.
+    * Correct because every probe is bounded by its builder and is a pure
+    * function of the immutable store. */
+  private[graft] def cached[A](key: Any)(build: => A): A = memo(key)(build)
+
+  /** [[cached]] for a value that holds resources (persisted blocks, a
+    * broadcast, driver arrays): `release` frees them on [[retire]], and
+    * the overflow bound never drops the entry. */
+  private[graft] def pinned[A](key: Any, release: A => Unit)(build: => A): A =
+    memo.pinned(key, release)(build)
+
+  /** A store-constant aggregate frame (properties, whole-DB facets, sort
+    * preferences), persisted and materialized once per context. */
+  private[graft] def persisted(key: Any)(build: => DataFrame): DataFrame =
+    pinned(key, (df: DataFrame) => { df.unpersist(); () }) {
+      val df = build.persist()
+      df.count()
+      df
     }
-    val si = statFrames.keySet().iterator()
-    while (si.hasNext) Option(statFrames.remove(si.next())).foreach(_.unpersist())
-    stats.clear()
-    servingPlans.clear()
-    servingValues.clear()
-    localStore.drop()
-  }
-
-  /** [[statFrames]].computeIfAbsent with the retire re-check: the frame
-    * stays correct for the caller's in-flight query either way (it just
-    * loses its cache status if the context retired underneath it). */
-  def cachedStatFrame(key: String)(build: => DataFrame): DataFrame = {
-    val df = statFrames.computeIfAbsent(key, _ => build)
-    if (retired.get()) drainDerivedCaches()
-    df
-  }
-
-  /** [[pathEdges]].computeIfAbsent with the same retire re-check. */
-  def cachedPathEdges(key: String)(build: => PathEdges): PathEdges = {
-    val pe = pathEdges.computeIfAbsent(key, _ => build)
-    if (retired.get()) drainDerivedCaches()
-    pe
-  }
 
   /** Serving-tier PLAN cache — the prepared-statement analog for a
     * long-lived session issuing the same parameterized queries
@@ -154,110 +105,22 @@ final case class EngineContext(
     * built DataFrame, so every call still EXECUTES the physical plan
     * against the live store). What it saves is the per-call Dataset
     * construction + eager analysis of a ~15-node tree — pure driver
-    * work that DuckDB's ~ms parser never pays at this magnitude.
-    * Keyed by the caller's canonical query text/name; entries die with
-    * the context on mutation (same drain as the other derived caches),
-    * so a cached plan can never read a retired store — it closes over
-    * THIS context's pinned frames only.
-    * get/putIfAbsent, NOT computeIfAbsent: a gate/facade entry caches
-    * its WHOLE query under servingPlan while inner probe helpers cache
-    * their fragments in the same map — nested computeIfAbsent on one
-    * ConcurrentHashMap throws "Recursive update". A lost race builds a
-    * plan twice; both are pure driver-side trees, so last-writer-loses
-    * costs nothing (nothing persisted to unpersist). */
-  def servingPlan(key: String)(build: => DataFrame): DataFrame = {
-    var df = servingPlans.get(key)
-    if (df == null) {
-      val built = org.apache.spark.sql.GraftShims.ofOptimized(build)
-      val prev = servingPlans.putIfAbsent(key, built)
-      df = if (prev == null) built else prev
-      boundServingCaches()
-    }
-    if (retired.get()) drainDerivedCaches()
-    df
-  }
+    * work that DuckDB's ~ms parser never pays at this magnitude. Keyed
+    * by the caller's canonical query name, or by a fragment's base plan
+    * and bound values; a cached plan closes over THIS context's pinned
+    * frames only, so it can never read a retired store. */
+  def plan(key: Any)(build: => DataFrame): DataFrame =
+    cached(("plan", key))(org.apache.spark.sql.GraftShims.ofOptimized(build))
 
-  /** Cap on the pure-cache maps: a long-lived session serving many
-    * DISTINCT ad-hoc shapes must not grow driver heap monotonically —
-    * mutation drains are the only other eviction, and a read-only
-    * session never mutates. Clearing on overflow loses warmth, never
-    * correctness (nothing in either map is persisted or externally
-    * referenced). The steady-state serving case (a bounded set of
-    * parameterized shapes) never reaches the cap. */
-  private def boundServingCaches(): Unit = {
-    if (servingPlans.size() > EngineContext.maxServingEntries) servingPlans.clear()
-    if (servingValues.size() > EngineContext.maxServingEntries) servingValues.clear()
-  }
+  /** Release every derived structure and stop keeping new ones: a
+    * mutation retires the context it replaces. Queries still running on
+    * it finish with correct answers; what they build is released. */
+  def retire(): Unit = memo.retire()
 
-  /** [[servingValue]] hardened for HASH-DERIVED keys: the entry carries
-    * the canonical probe plan it was built from and a key hit counts
-    * only when `sameResult` confirms the plans match. The serving keys
-    * are built from 32-bit `semanticHash` values — cheap, but a
-    * birthday collision between two different probe shapes in one
-    * long-lived context would otherwise silently serve one query's
-    * probe rows to the other. On a verified mismatch the probe rebuilds
-    * uncached (the first entry keeps the slot) — correctness never
-    * depends on hash width. */
-  def servingProbe[T <: AnyRef](key: String,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)(build: => T): T = {
-    servingValues.get(key) match {
-      case e: EngineContext.ProbeEntry if e.plan.sameResult(plan) =>
-        if (retired.get()) drainDerivedCaches()
-        return e.value.asInstanceOf[T]
-      case _ => ()
-    }
-    val built = build
-    servingValues.putIfAbsent(key, EngineContext.ProbeEntry(plan, built))
-    boundServingCaches()
-    if (retired.get()) drainDerivedCaches()
-    built
-  }
+  def retired: Boolean = memo.retired
 
-  /** [[servingProbe]] for compiled value-bound scan FRAGMENTS: verified
-    * on both the base plan and the bound value array (the key folds the
-    * values to a 32-bit `Arrays.hashCode` — same collision argument). */
-  def servingFragment(key: String,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      values: Array[Long])(build: => DataFrame): DataFrame = {
-    servingValues.get(key) match {
-      case e: EngineContext.FragmentEntry
-          if java.util.Arrays.equals(e.values, values) && e.plan.sameResult(plan) =>
-        if (retired.get()) drainDerivedCaches()
-        return e.df
-      case _ => ()
-    }
-    val built = org.apache.spark.sql.GraftShims.ofOptimized(build)
-    servingValues.putIfAbsent(key, EngineContext.FragmentEntry(plan, values, built))
-    boundServingCaches()
-    if (retired.get()) drainDerivedCaches()
-    built
-  }
-
-  /** Serving-tier probe-RESULT cache, the same store-constant argument
-    * as [[stats]]/[[statFrames]]/`dictBroadcast` applied to the engine's
-    * BOUNDED probe collects (o-IN value sets, facet subject sets, page
-    * rows — every entry is capped at `isinProbeCap`/page-size rows by
-    * its builder, so the map stays KBs): between mutations the store is
-    * immutable and a probe plan is a pure function of it, so its first
-    * execution IS its value for the context's lifetime. Steady-state
-    * serving then answers probe-backed queries in ONE job (the main
-    * scan) instead of re-collecting an identical array per call — still
-    * strictly less caching than the reference's worker tier, which
-    * memoizes whole query RESULTS in its cache db (workers.py). Entries
-    * die with the context on mutation, before any new store state is
-    * visible. Same get/putIfAbsent re-entrancy contract as
-    * [[servingPlan]] (a value build runs probe plans that cache
-    * themselves); a lost race collects a bounded probe twice. */
-  def servingValue[T <: AnyRef](key: String)(build: => T): T = {
-    var v = servingValues.get(key)
-    if (v == null) {
-      val built = build
-      val prev = servingValues.putIfAbsent(key, built)
-      v = if (prev == null) built else prev
-    }
-    if (retired.get()) drainDerivedCaches()
-    v.asInstanceOf[T]
-  }
+  /** Builds run through [[memo]], for tests. */
+  private[graft] def builds: Long = memo.builds
 }
 
 /** A persisted parent edge set for [[QueryEngine.paths]] plus the
@@ -278,20 +141,8 @@ final case class PathEdges(edges: DataFrame, singleParent: Boolean,
     parentArrays: Option[org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Long])]] = None)
 
 object EngineContext {
-  /** Overflow bound for [[EngineContext.servingPlans]]/`servingValues`
-    * (see boundServingCaches). */
+  /** Overflow bound for [[EngineContext.cached]] entries. */
   private[algebra] val maxServingEntries = 1024
-
-  /** A verified probe-cache entry: the canonical plan the value was
-    * collected from rides along so a semanticHash key collision is
-    * detected, not served. */
-  private[algebra] final case class ProbeEntry(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, value: AnyRef)
-
-  /** [[ProbeEntry]] for compiled value-bound fragments. */
-  private[algebra] final case class FragmentEntry(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      values: Array[Long], df: DataFrame)
 
   /** Collect + broadcast the dictionary when it is bounded. One
     * limit-bounded collect decides AND delivers: reading maxEntries + 1
@@ -475,34 +326,30 @@ object FilterCompiler {
     * corpus-scale frontier is the already-degraded serving shape).
     * cap <= 0 disables probing entirely and keeps the set lazy on the
     * join's broadcast side. Probe PLANS and value-bound scan fragments
-    * are cached via [[EngineContext.servingPlan]]; the probe collect
-    * itself runs on every call. */
+    * are cached via [[EngineContext.plan]], probe results via
+    * [[EngineContext.cached]]. */
   private def oInOrJoin(ctx: EngineContext, base: DataFrame, hashSet: DataFrame): DataFrame = {
     val cap = ctx.isinProbeCap
     val hs = hashSet.toDF("__oh")
     if (cap <= 0)
       return base.join(broadcast(hs), col("o") === col("__oh")).select("s")
-    // Prepared-probe serving: the probe PLAN is cached by its semantic
-    // hash (pure compile) and so is its bounded RESULT (servingValue —
-    // ≤ cap+1 longs, a store-constant value between mutations), so a
+    // Prepared-probe serving: the probe's bounded RESULT (≤ cap+1
+    // longs, a store-constant value between mutations) is cached under
+    // its canonical plan, so a
     // steady-state session pays the probe job once per context and the
     // query runs as ONE job after. The collect both SIZES the set and,
     // in the selective (≤ cap) case, IS the materialization: the value
     // array feeds a scan-level o-IN predicate whose compiled fragment is
     // cached keyed by the VALUES (parameter binding — same probe result
-    // ⇒ same plan, no per-call Dataset construction). All three caches
-    // die with the context on mutation.
-    val hsPlan = hs.queryExecution.analyzed
-    val probe = ctx.servingProbe("oin:p:" + hsPlan.semanticHash() + ":r", hsPlan) {
+    // ⇒ same plan, no per-call Dataset construction). Both die with the
+    // context on mutation.
+    val probe = ctx.cached(("oin:p", hs.queryExecution.analyzed.canonicalized)) {
       hs.limit(cap + 1).collect().map(_.getLong(0))
     }
     if (probe.length <= cap) {
       if (probe.isEmpty) // In(o, Nil) folds to an empty relation — no
         return base.filter(col("o").isin()).select("s") // point caching
-      val basePlan = base.queryExecution.analyzed
-      val vh = java.util.Arrays.hashCode(probe)
-      ctx.servingFragment(
-        s"oin:m:${basePlan.semanticHash()}:${probe.length}:$vh", basePlan, probe)(
+      ctx.plan(("oin:m", base.queryExecution.analyzed.canonicalized, probe.toSeq))(
         base.filter(col("o").isin(probe.toIndexedSeq: _*)).select("s"))
     } else {
       // over-cap fallback: uncached, and the upstream match plan runs a
@@ -532,9 +379,7 @@ object FilterCompiler {
     if (cap <= 0) return joined(scored)
     // same prepared-probe contract as [[oInOrJoin]]: cached probe plan,
     // cached bounded probe result, value-keyed cached scan fragment
-    val scoredPlan = scored.queryExecution.analyzed
-    val probe = ctx.servingProbe(
-        "soin:p:" + scoredPlan.semanticHash() + ":r", scoredPlan) {
+    val probe = ctx.cached(("soin:p", scored.queryExecution.analyzed.canonicalized)) {
       scored.limit(cap + 1).collect()
     }
     if (probe.length <= cap) {
@@ -547,10 +392,7 @@ object FilterCompiler {
       val flat = probe.flatMap(r => Array(r.getLong(0),
         if (r.isNullAt(1)) 0L else java.lang.Double.doubleToLongBits(r.getDouble(1)),
         if (r.isNullAt(1)) 1L else 0L))
-      val basePlan = base.queryExecution.analyzed
-      val vh = java.util.Arrays.hashCode(flat)
-      ctx.servingFragment(
-        s"soin:m:${basePlan.semanticHash()}:${probe.length}:$vh", basePlan, flat) {
+      ctx.plan(("soin:m", base.queryExecution.analyzed.canonicalized, flat.toSeq)) {
         val local = spark.createDataFrame(
           java.util.Arrays.asList(probe: _*),
           org.apache.spark.sql.types.StructType(Seq(

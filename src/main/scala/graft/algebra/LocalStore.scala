@@ -1,8 +1,5 @@
 package graft.algebra
 
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
-import org.apache.spark.sql.DataFrame
-
 /** The driver-resident serving tier: the store's quads as sorted
   * primitive arrays, answering simple-filter requests
   * ([[LocalStore.supports]]) with no Spark job and no Catalyst analysis.
@@ -21,9 +18,6 @@ import org.apache.spark.sql.DataFrame
   * stage the envelopes are identical by construction; the Spark tier is
   * the oracle for the rest (AlgebraProps' differential). */
 final class LocalStore private (
-    // the triples frame the arrays were read from: a context copy over
-    // another graph never serves from them
-    private val source: DataFrame,
     s: Array[Long], p: Array[Long], o: Array[Long], g: Array[Long],
     byPos: Array[Int], byOs: Array[Int]) {
 
@@ -159,13 +153,17 @@ object LocalStore {
   /** The context's store, built at the first call (single-flight per
     * context), or None when the context has no decode map, the store is
     * over [[maxTriples]], or the context was retired by a mutation. */
-  def of(ctx: EngineContext): Option[LocalStore] =
-    if (ctx.dictBroadcast.isEmpty || ctx.retired.get()) None
+  def of(ctx: EngineContext): Option[LocalStore] = of(ctx, maxTriples)
+
+  /** [[of]] under a given size cap. The "too big" verdict (None) is kept
+    * like a store, so the first call's cap decides for the context. */
+  private[graft] def of(ctx: EngineContext, cap: Long): Option[LocalStore] =
+    if (ctx.dictBroadcast.isEmpty || ctx.retired) None
     else {
-      val st = ctx.localStore(load(ctx, maxTriples))
-      // a mutation retiring the context mid-build: release what it built
-      if (ctx.retired.get()) { ctx.localStore.drop(); None }
-      else st.filter(_.source eq ctx.graph.triples)
+      // the arrays go with the entry; a build that a mutation overtook
+      // is released by the memo and not served
+      val st = ctx.pinned("localStore", (_: Option[LocalStore]) => ())(load(ctx, cap))
+      if (ctx.retired) None else st
     }
 
   /** Stream the context's triples into sorted arrays, or None past
@@ -189,8 +187,7 @@ object LocalStore {
       sb += r.getLong(0); pb += r.getLong(1); ob += r.getLong(2); gb += r.getLong(3)
     }
     val s0 = sb.result(); val p0 = pb.result(); val o0 = ob.result(); val g0 = gb.result()
-    val bySubject = identity(s0.length)
-    sortIndices(bySubject, (a, b) => java.lang.Long.compare(s0(a), s0(b)))
+    val bySubject = order(s0)
     val s = bySubject.map(s0); val p = bySubject.map(p0)
     val o = bySubject.map(o0); val g = bySubject.map(g0)
     val byPos = identity(s.length)
@@ -206,27 +203,7 @@ object LocalStore {
       val c = java.lang.Long.compare(o(a), o(b))
       if (c != 0) c else java.lang.Long.compare(s(a), s(b))
     })
-    Some(new LocalStore(t, s, p, o, g, byPos, byOs))
-  }
-
-  /** The per-context holder of the store: the first caller builds it,
-    * concurrent callers wait for that one build (a lazy val per cell, the
-    * [[graft.Artifacts]] slot pattern), a throwing build leaves the cell
-    * empty for the next call to retry, and the "too big" verdict (None)
-    * is remembered like a store. [[drop]] releases it. */
-  final class Slot {
-    private final class Cell(build: => Option[LocalStore]) { lazy val value = build }
-    private val cell = new AtomicReference[Cell]()
-    /** Builds run through this slot (one per context unless dropped). */
-    private[graft] val builds = new AtomicLong()
-
-    def apply(build: => Option[LocalStore]): Option[LocalStore] = {
-      val fresh = new Cell({ builds.incrementAndGet(); build })
-      val c = if (cell.compareAndSet(null, fresh)) fresh else Option(cell.get).getOrElse(fresh)
-      c.value
-    }
-
-    def drop(): Unit = cell.set(null)
+    Some(new LocalStore(s, p, o, g, byPos, byOs))
   }
 
   // --------------------------------------------------------- array helpers
@@ -275,11 +252,19 @@ object LocalStore {
   private def union(a: Array[Long], b: Array[Long]) = merge(a, b, _ || _)
   private def minus(a: Array[Long], b: Array[Long]) = merge(a, b, (inA, inB) => inA && !inB)
 
+  /** The row order that sorts `keys` ascending as signed longs. */
+  private[graft] def order(keys: Array[Long]): Array[Int] = {
+    val ix = identity(keys.length)
+    sortIndices(ix, (a, b) => java.lang.Long.compare(keys(a), keys(b)))
+    ix
+  }
+
   /** In-place quicksort of a row-index array under `cmp` — the
-    * boxing-free multi-key sort of the permutations
-    * ([[QueryEngine.sortPairedByKey]]'s scheme: insertion sort below 32
-    * elements, median-of-three pivot, recursion on the smaller side). */
-  private def sortIndices(ix: Array[Int], cmp: (Int, Int) => Int): Unit = {
+    * boxing-free multi-key sort of the permutations and of the paths()
+    * parent arrays: insertion sort below 32 elements, median-of-three
+    * pivot so pre-sorted input stays O(n log n), and recursion on the
+    * smaller side only, so stack depth is O(log n) for any keys. */
+  private[graft] def sortIndices(ix: Array[Int], cmp: (Int, Int) => Int): Unit = {
     def swap(i: Int, j: Int): Unit = { val t = ix(i); ix(i) = ix(j); ix(j) = t }
     def sort(lo0: Int, hi0: Int): Unit = {
       var lo = lo0; var hi = hi0

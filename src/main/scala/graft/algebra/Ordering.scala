@@ -103,20 +103,19 @@ object Ordering {
         // the cleaned best-label table for one (property, rule) pair is
         // store-constant between mutations and a serving session reorders
         // by the same property on every page — persist it per context
-        // (the pathEdges precedent), so a page query pays one left join
-        // against a pinned frame instead of rebuilding
+        // (the paths() edge-set precedent), so a page query pays one left
+        // join against a pinned frame instead of rebuilding
         // scan→decode→clean→aggregate per query. Restricting to the
         // query's subject set FIRST would be cheaper once, but rebuilt
         // every time; the unrestricted table costs subject-scale memory
         // (MEMORY_AND_DISK spill past that) and amortizes across the
-        // session. Mutations drain it with the other derived caches.
-        ctx.cachedStatFrame("orderPref:" + rule.by + ":" + propIri + ":" +
+        // session. A mutation releases it with the context's other
+        // derived structures.
+        ctx.persisted("orderPref:" + rule.by + ":" + propIri + ":" +
           rule.lang.mkString(",") + ":" + rule.cleanOrDefault + ":" + rule.mode) {
-          val df = bestPerSubject(
+          bestPerSubject(
             literalValue(triples.filter(col("p") === Hash64.hashString(propIri)), col("o"))
-              .select(col("s"), col("lbl_val"))).persist()
-          df.count()
-          df
+              .select(col("s"), col("lbl_val")))
         }
       case "object_label" =>
         // via-walk is subject-dependent — restrict to the query's set

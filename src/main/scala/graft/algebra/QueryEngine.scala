@@ -248,7 +248,7 @@ object QueryEngine {
     val t = ctx.graph.triples
     // the page is ≤ size rows BY CONSTRUCTION (wantedPage's limit), so
     // when size fits the probe cap the page rows are collected once per
-    // (context, query) — a store-constant servingValue — and the join
+    // (context, query) — a store-constant cached value — and the join
     // becomes an s-IN scan predicate plus a literal-map pos lookup:
     // no BroadcastExchange build job, ONE steady-state hydration job.
     // Oversized pages (or probing disabled) keep the broadcast join.
@@ -256,7 +256,7 @@ object QueryEngine {
       if (ctx.isinProbeCap <= 0 || opts.size > ctx.isinProbeCap) None
       else {
         val wPlan = wanted.queryExecution.analyzed
-        Some(ctx.servingProbe("hydrate:p:" + wPlan.semanticHash() + ":r", wPlan) {
+        Some(ctx.cached(("hydrate:p", wPlan.canonicalized)) {
           wanted.collect().map(r => (r.getAs[Long]("s"), r.getAs[Int]("pos")))
         })
       }
@@ -367,7 +367,7 @@ object QueryEngine {
     // an s-IN scan predicate via a driver-side distinct — the semi-join
     // and its BroadcastExchange build job drop out, so the steady-state
     // facet is ONE job. The bounded collect is a store-constant
-    // servingValue (the over-cap verdict caches too, so an ineligible
+    // cached value (the over-cap verdict caches too, so an ineligible
     // shape pays its bounded probe once per context). A raw count over
     // cap with few DISTINCT subjects conservatively keeps the join
     // path. Over the cap (or with probing disabled) the hinted
@@ -377,7 +377,7 @@ object QueryEngine {
       else {
         val cap = ctx.isinProbeCap
         val sPlan = sSide.queryExecution.analyzed
-        val arr = ctx.servingProbe("facet:p:" + sPlan.semanticHash() + ":r", sPlan) {
+        val arr = ctx.cached(("facet:p", sPlan.canonicalized)) {
           sSide.limit(cap + 1).collect().map(_.getLong(0))
         }
         if (arr.length <= cap) Some(arr.distinct) else None
@@ -423,21 +423,18 @@ object QueryEngine {
     * store-constant between mutations, so computed once per context. */
   def facetWholeDb(ctx: EngineContext, agg: String): DataFrame = {
     val keyCol = if (agg == "graphs") "g" else "p"
-    ctx.cachedStatFrame(s"facetWholeDb:$keyCol") {
+    ctx.persisted(s"facetWholeDb:$keyCol") {
       // the PERSISTED frame itself must be what the cache stores:
-      // drainDerivedCaches unpersists the stored frame, and a Sort
-      // wrapper OVER a persisted base would never sameResult the cached
-      // plan — the base's blocks would survive every mutation drain.
+      // retire() unpersists the stored frame, and a Sort wrapper OVER a
+      // persisted base would never sameResult the cached plan — the
+      // base's blocks would survive every mutation.
       // Ordering before persist keeps the deterministic envelope order
       // (see facet()) inside the pinned frame.
-      val df = decoded(ctx,
+      decoded(ctx,
           ctx.graph.triples.groupBy(col(keyCol)).agg(count(lit(1)).as("count")),
           keyCol, "val", inner = true)
         .select(col("count"), col("val"))
         .orderBy(col("count").desc, col("val").asc)
-        .persist()
-      df.count()
-      df
     }
   }
 
@@ -450,46 +447,6 @@ object QueryEngine {
   // the broadcast-walk edge bound lives on the context
   // (EngineContext.maxBroadcastPathEdges) so it can be sized per
   // deployment and forced off in walk-parity tests
-
-  /** In-place quicksort of `keys` with `vals` permuted in tandem — the
-    * boxing-free way to sort the broadcast parent arrays (an index/tuple
-    * sort would allocate per edge at the 4M cap). Insertion sort below
-    * 32 elements; median-of-three pivot so a pre-sorted edge dump (the
-    * common case — the scan reads s-sorted parquet) stays O(n log n). */
-  private[graft] def sortPairedByKey(keys: Array[Long], vals: Array[Long]): Unit = {
-    def swap(i: Int, j: Int): Unit = {
-      val k = keys(i); keys(i) = keys(j); keys(j) = k
-      val v = vals(i); vals(i) = vals(j); vals(j) = v
-    }
-    def sort(lo0: Int, hi0: Int): Unit = {
-      // recurse only on the smaller partition and loop on the larger,
-      // bounding stack depth to O(log n) for any key distribution
-      var lo = lo0; var hi = hi0
-      while (hi - lo >= 32) {
-        val mid = lo + (hi - lo) / 2
-        if (keys(mid) < keys(lo)) swap(mid, lo)
-        if (keys(hi) < keys(lo)) swap(hi, lo)
-        if (keys(hi) < keys(mid)) swap(hi, mid)
-        val pivot = keys(mid)
-        var i = lo; var j = hi
-        while (i <= j) {
-          while (keys(i) < pivot) i += 1
-          while (keys(j) > pivot) j -= 1
-          if (i <= j) { swap(i, j); i += 1; j -= 1 }
-        }
-        if (j - lo < hi - i) { sort(lo, j); lo = i } else { sort(i, hi); hi = j }
-      }
-      var i = lo + 1
-      while (i <= hi) {
-        val k = keys(i); val v = vals(i)
-        var j = i - 1
-        while (j >= lo && keys(j) > k) { keys(j + 1) = keys(j); vals(j + 1) = vals(j); j -= 1 }
-        keys(j + 1) = k; vals(j + 1) = v
-        i += 1
-      }
-    }
-    if (keys.length > 1) sort(0, keys.length - 1)
-  }
 
   /** One k-level walk step as a DataFrame transform: left-join `cur`
     * (source, path, head) against the edge set `levels` times inside ONE
@@ -540,7 +497,12 @@ object QueryEngine {
     // fanout guard at all. Bounded by the property's triple count; a
     // corpus-scale property stays a shuffle join against this one
     // persisted relation.
-    val pe = ctx.cachedPathEdges(propIri) {
+    val pe = ctx.pinned(("pathEdges", propIri), (pe: PathEdges) => {
+        pe.edges.unpersist()
+        // non-blocking release: in-flight queries holding the broadcast
+        // still complete; the blocks just stop being cached
+        pe.parentArrays.foreach(_.unpersist(false))
+      }) {
       val e = ctx.graph.triples.filter(col("p") === h(propIri))
         .select(col("s").as("part"), col("o").as("parent")).distinct().persist()
       val maxMult = e.groupBy(col("part")).agg(count(lit(1)).as("c"))
@@ -564,9 +526,9 @@ object QueryEngine {
           val vb = new scala.collection.mutable.ArrayBuilder.ofLong
           val it = e.toLocalIterator()
           while (it.hasNext) { val r = it.next(); kb += r.getLong(0); vb += r.getLong(1) }
-          val keys = kb.result(); val vals = vb.result()
-          sortPairedByKey(keys, vals)
-          Some(spark.sparkContext.broadcast((keys, vals)))
+          val k0 = kb.result(); val v0 = vb.result()
+          val byKey = LocalStore.order(k0)
+          Some(spark.sparkContext.broadcast((byKey.map(k0), byKey.map(v0))))
         } else None
       PathEdges(e, single, arrays)
     }
@@ -767,25 +729,21 @@ object QueryEngine {
 
   /** count(distinct s) over all triples (query.py:13-17) — a store
     * constant between mutations, so computed once per context
-    * ([[EngineContext.stats]]; mutations replace the context). */
+    * ([[EngineContext.cached]]; mutations replace the context). */
   def total(ctx: EngineContext): Long =
-    ctx.stats.computeIfAbsent("total",
-      _ => ctx.graph.triples.select("s").distinct().count())
+    ctx.cached("total")(ctx.graph.triples.select("s").distinct().count())
 
   /** Distinct-subject count per predicate IRI (query.py:20-27).
     * Aggregates on the hash FIRST (map-side combine on a Long key), then
     * decodes the few result rows — hash↔value is bijective, so grouping
     * by hash equals the reference's group-by-decoded-value. */
   def properties(ctx: EngineContext): DataFrame =
-    ctx.cachedStatFrame("properties") {
-      val df = decoded(ctx,
+    ctx.persisted("properties") {
+      decoded(ctx,
         ctx.graph.triples.groupBy(col("p"))
           .agg(countDistinct(col("s")).as("count")),
         "p", "value", inner = true)
         .select(col("value"), col("count"))
-        .persist()
-      df.count() // materialize inside the computeIfAbsent (single writer)
-      df
     }
 
   /** Distinct-subject count per object IRI of one predicate (query.py:30-35).

@@ -126,14 +126,9 @@ final class Bikidata(
       c.fts.foreach(_.unpersist())
       c.semantic.foreach(_.unpersist())
       c.semanticAnn.foreach(_.cells.unpersist())
-      // retire FIRST, then drain: a query thread mid-computeIfAbsent can
-      // install a persisted edge set / stat frame after the drain passes
-      // its key — the flag makes the installer re-drain, so nothing
-      // persisted survives in the orphaned maps (cached per-property
-      // paths() edge sets and stat frames are views over the now-stale
-      // graph; the fresh context starts empty)
-      c.retired.set(true)
-      c.drainDerivedCaches()
+      // and what the context derived from them (paths() edge sets, stat
+      // frames, the driver tier); the fresh context starts empty
+      c.retire()
     }
     ctxOpt = None
     ftssIdx.foreach(_.unpersist())
@@ -295,12 +290,15 @@ final class Bikidata(
     // context init re-composes them against the fresh graph for the
     // cost of a read, so bail-and-release is correct, not wasteful.
     // A live install changes what `semantic` filters answer (no index
-    // answered empty), so it retires cached results like a mutation does.
+    // answered empty), so it retires cached results like a mutation does,
+    // and it retires c0's derived structures: the copy starts without
+    // them, and nothing else would release c0's persisted frames.
     val installed = synchronized {
       val live = ctxOpt.exists(_ eq c0)
       if (live) {
         ctxOpt = Some(attach(c0))
         storeEpoch += 1
+        c0.retire()
       }
       live
     }

@@ -125,8 +125,7 @@ object Rdfize {
   // one engine context per (session, sfDir) — queries share the persisted
   // graph + fts index across the Verify/Bench run
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, EngineContext]()
-  private val semCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, graft.semantic.SemanticAnn)]()
+  private val semCache = new java.util.concurrent.ConcurrentHashMap[String, EngineContext]()
 
   /** On-disk cache of the RDF-ized warehouse, shared ACROSS JVMs: the
     * first process (Verify or Bench) writes the sorted triples parquet +
@@ -241,14 +240,16 @@ object Rdfize {
     })
 
   /** Subject-embedding index + its lossless ANN cell partition, built on
-    * first use, parquet-cached next to the warehouse. */
+    * first use, parquet-cached next to the warehouse. One context per
+    * (session, sfDir), like [[ctx]]: its derived structures (plans,
+    * probe results) live as long as the context. */
   def semantic(spark: SparkSession, sfDir: String): EngineContext = {
     val base = ctx(spark, sfDir)
     // stay on the context's serving session clone — the index frames
     // join against the graph's pinned frames and should plan under the
     // same serving-tier conf
     val serving = base.graph.spark
-    val (sem, ann) = semCache.computeIfAbsent(sfDir, { _ =>
+    semCache.computeIfAbsent(sfDir, { _ =>
       val semDir = cacheDir(sfDir) + "/literals_semantic"
       val annDir = cacheDir(sfDir) + "/semantic_ann"
       // publish atomically (write to a pid tmp dir, one rename): a
@@ -291,9 +292,8 @@ object Rdfize {
         } catch { case _: Exception => built } // unwritable cache dir
       }
       a.cells.persist().count()
-      (s, a)
+      base.copy(semantic = Some(s), semanticAnn = Some(a))
     })
-    base.copy(semantic = Some(sem), semanticAnn = Some(ann))
   }
 }
 

@@ -5,8 +5,10 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
-/** [[Artifacts]]: one build per (name, dir) under nesting, concurrency and
-  * failure, and the pinned set of artifact names the harness builds. */
+/** [[Artifacts]] and the [[Memo]] under it: one build per (name, dir)
+  * under nesting, concurrency and failure, release and retirement, the
+  * overflow bound, and the pinned set of artifact names the harness
+  * builds. */
 class ArtifactsSpec extends SparkSpec {
 
   test("a nested build on the same registry does not throw, each key builds once") {
@@ -74,6 +76,48 @@ class ArtifactsSpec extends SparkSpec {
     Artifacts("spec.cleared", "dir") { rebuilt = true; 1 }
     assert(rebuilt)
     Artifacts.clear()
+  }
+
+  test("retire never waits on a build in progress; the late value is released, not kept") {
+    val memo = new Memo[String]()
+    val started = new CountDownLatch(1)
+    val finish = new CountDownLatch(1)
+    val released = new AtomicInteger(0)
+    val pool = Executors.newFixedThreadPool(1)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val call = Future(memo.pinned("k", (_: String) => { released.incrementAndGet(); () }) {
+        started.countDown()
+        finish.await()
+        "late"
+      })
+      assert(started.await(10, TimeUnit.SECONDS))
+      memo.retire() // returns while the build is still blocked
+      assert(released.get == 0)
+      finish.countDown()
+      assert(Await.result(call, 30.seconds) == "late", "the caller still gets its value")
+      assert(released.get == 1, "a build that finished after retire releases its value")
+      assert(memo.keys.isEmpty)
+      var rebuilt = 0
+      assert(memo("k") { rebuilt += 1; "again" } == "again")
+      assert(memo("k") { rebuilt += 1; "again" } == "again")
+      assert(rebuilt == 2, "a retired memo keeps nothing")
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(10, TimeUnit.SECONDS)
+    }
+  }
+
+  test("the overflow bound drops only entries without a release action") {
+    val memo = new Memo[Int](maxEvictable = 4)
+    val released = new AtomicInteger(0)
+    memo.pinned(-1, (_: Int) => { released.incrementAndGet(); () })(-1)
+    for (i <- 0 until 10) memo(i)(i)
+    assert(memo.keys.contains(-1), "a pinned entry survives the overflow bound")
+    assert(memo.keys.size <= 5)
+    assert(released.get == 0)
+    memo.clear()
+    assert(released.get == 1 && memo.keys.isEmpty)
   }
 
   // Every shared artifact is "legitimate but watched": a new entry must

@@ -85,8 +85,10 @@ class BikidataApiSpec extends SparkSpec {
     }
     assert(!served().contains("<http://ex/c>"))
     val before = bk.ctx
+    val built = before.builds
     assert(bk.insert(Seq(Quad("<http://ex/c>", label, "\"gamma thing\"", ""))).error.isEmpty)
     assert(LocalStore.of(before).isEmpty, "the retired context must not serve")
+    assert(before.builds === built, "the retired context must not rebuild")
     val afterInsert = served()
     assert(afterInsert.contains("<http://ex/c>") && afterInsert.contains("gamma thing"))
     assert(bk.delete(Seq(("<http://ex/c>", label, None, ""))).error.isEmpty)
@@ -188,7 +190,13 @@ class BikidataApiSpec extends SparkSpec {
   test("buildSemantic retires cached answers to semantic queries") {
     val bk = semanticStore()
     val noIndex = bk.queryJson(SemanticQ) // no index yet: cached empty answer
+    val c0 = bk.ctx
+    val props = graft.algebra.QueryEngine.properties(c0)
+    assert(props.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
     bk.buildSemantic()
+    assert(c0.retired && !bk.ctx.retired, "the install must retire the context it replaces")
+    assert(props.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+      "the replaced context's persisted frames must be released")
     val fresh = bk.queryJson(SemanticQ, useCache = false)
     assert(fresh.contains("<http://ex/a>") && (fresh !== noIndex), fresh)
     assert(bk.queryJson(SemanticQ) === fresh,

@@ -199,11 +199,9 @@ class EngineSpec extends SparkSpec {
         QueryEngine.query(mapped, opts).toJson, s"paths diverge on $opts")
   }
 
-  /** A decode-mapped context over the fixture graph with its own caches,
-    * driver-tier slot and retire flag (a copy() of the shared fixture
-    * context would share them). */
-  private def freshLocalCtx: EngineContext =
-    EngineContext.withDictBroadcast(EngineContext(ctx.graph))
+  /** A decode-mapped context over the fixture graph, with no derived
+    * structures built yet. */
+  private def freshLocalCtx: EngineContext = EngineContext.withDictBroadcast(ctx)
 
   test("8 concurrent first queries build the driver tier once") {
     val c = freshLocalCtx
@@ -221,7 +219,7 @@ class EngineSpec extends SparkSpec {
       start.countDown()
       val answers = scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(calls), scala.concurrent.duration.Duration(60, "s"))
-      assert(c.localStore.builds.get === 1)
+      assert(c.builds === 1)
       assert(LocalStore.of(c).isDefined)
       assert(answers.distinct === Seq(QueryEngine.querySpark(c, opts).toJson))
     } finally {
@@ -236,9 +234,9 @@ class EngineSpec extends SparkSpec {
     assert(LocalStore.load(c, n).isDefined, "a store of exactly the cap fits")
     // one triple over the cap: the "too big" verdict fills the slot and
     // is remembered — later queries never rebuild or serve locally
-    assert(c.localStore(LocalStore.load(c, n - 1)).isEmpty)
+    assert(LocalStore.of(c, n - 1).isEmpty)
     assert(LocalStore.of(c).isEmpty)
-    assert(c.localStore.builds.get === 1)
+    assert(c.builds === 1)
     val opts = QueryOpts(filters = Seq(FilterQ(p = a, o = human),
       FilterQ(p = homeworld, o = "<http://ex/alderaan>", op = "not")),
       size = 2, start = 1, aggregates = Seq(a, "properties"))
@@ -252,10 +250,40 @@ class EngineSpec extends SparkSpec {
   test("a retired context never serves from the driver tier") {
     val c = freshLocalCtx
     assert(LocalStore.of(c).isDefined)
-    c.retired.set(true)
-    c.drainDerivedCaches()
+    c.retire()
     assert(LocalStore.of(c).isEmpty)
-    assert(c.localStore.builds.get === 1, "a retired context must not rebuild")
+    assert(c.builds === 1, "a retired context must not rebuild")
+  }
+
+  test("retiring a copy leaves the original's driver tier and plans") {
+    val c = freshLocalCtx
+    val opts = QueryOpts(filters = Seq(FilterQ(p = a, o = human)))
+    val served = QueryEngine.query(c, opts).toJson
+    val plan = c.plan("spec-copy")(QueryEngine.subjects(c, opts).get)
+    val built = c.builds
+    val copy = c.copy(isinProbeCap = 0)
+    assert(LocalStore.of(copy).isDefined, "a copy builds its own driver tier")
+    copy.retire()
+    assert(!c.retired)
+    assert(LocalStore.of(c).isDefined, "the original still serves from the driver tier")
+    assert(QueryEngine.query(c, opts).toJson === served)
+    assert(c.plan("spec-copy")(fail("the original's plan must stay cached")) eq plan)
+    assert(c.builds === built, "nothing of the original was rebuilt")
+  }
+
+  test("a copy over another graph answers total and properties for that graph") {
+    def homeworlds(c: EngineContext): Long = QueryEngine.properties(c).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toMap.apply(homeworld)
+    val c = ctx.copy()
+    assert(QueryEngine.total(c) === 11)
+    assert(homeworlds(c) === 3)
+    val (g2, r) = Mutations.insert(c.graph,
+      Seq(Quad("<http://ex/rey>", homeworld, "<http://ex/jakku>", "")))
+    assert(r.error.isEmpty)
+    val c2 = c.copy(graph = g2)
+    assert(QueryEngine.total(c2) === 12, "total must count g2's subjects")
+    assert(homeworlds(c2) === 4, "properties must count g2's subjects")
+    assert(QueryEngine.total(c) === 11 && homeworlds(c) === 3)
   }
 
   test("sort labels ignore blank-node objects on both decode paths") {
@@ -317,17 +345,13 @@ class EngineSpec extends SparkSpec {
   }
 
   /** A context whose paths() cannot take the broadcast-arrays fast
-    * path: fresh edge cache (ctx.copy would share the already-built
-    * arrays) + a zero broadcast bound. */
-  private def noArraysCtx =
-    ctx.copy(maxBroadcastPathEdges = 0L,
-      pathEdges = new java.util.concurrent.ConcurrentHashMap[String, graft.algebra.PathEdges]())
+    * path: a zero broadcast bound. */
+  private def noArraysCtx = ctx.copy(maxBroadcastPathEdges = 0L)
 
   test("paths distributed-frontier fallback returns the same chains") {
-    // force the fallback: no broadcast arrays (fresh edge cache, zero
-    // bound — ctx.copy alone would reuse the cached arrays and the
-    // broadcast walk returns before maxDriverChains is consulted) and
-    // a zero driver-chain cap so the first round goes distributed
+    // force the fallback: no broadcast arrays (the broadcast walk
+    // returns before maxDriverChains is consulted) and a zero
+    // driver-chain cap so the first round goes distributed
     val r = QueryEngine.query(noArraysCtx.copy(maxDriverChains = 0), QueryOpts(
       filters = Seq(FilterQ(p = "id", o = "<http://ex/mos_eisley>")),
       paths = Seq(broader)))
@@ -360,13 +384,20 @@ class EngineSpec extends SparkSpec {
     }
   }
 
-  test("sortPairedByKey sorts tandem primitive arrays like a tuple sort") {
+  /** (keys, vals) gathered in the order that sorts `keys` — how paths()
+    * sorts its parent arrays. */
+  private def sortPaired(keys: Array[Long], vals: Array[Long]): (Array[Long], Array[Long]) = {
+    val ix = LocalStore.order(keys)
+    (ix.map(keys), ix.map(vals))
+  }
+
+  test("the index sort orders tandem primitive arrays like a tuple sort") {
     val rnd = new scala.util.Random(7)
     for (n <- Seq(0, 1, 2, 31, 32, 33, 1000)) {
-      val keys = Array.fill(n)(rnd.nextLong() % 50) // duplicates likely
-      val vals = Array.tabulate(n)(_.toLong)
-      val expect = keys.zip(vals).sortBy(_._1)
-      QueryEngine.sortPairedByKey(keys, vals)
+      val keys0 = Array.fill(n)(rnd.nextLong() % 50) // duplicates likely
+      val vals0 = Array.tabulate(n)(_.toLong)
+      val expect = keys0.zip(vals0).sortBy(_._1)
+      val (keys, vals) = sortPaired(keys0, vals0)
       assert(keys.toSeq === expect.map(_._1).toSeq)
       // values must travel with their keys; for duplicate keys any
       // permutation within the run is fine, so compare as grouped sets
@@ -376,25 +407,24 @@ class EngineSpec extends SparkSpec {
     }
     // pre-sorted input (the common case: the edge scan reads s-sorted
     // parquet) must not stack-overflow the quicksort
-    val sortedKeys = Array.tabulate(200000)(_.toLong)
-    val ids = Array.tabulate(200000)(i => (200000 - i).toLong)
-    QueryEngine.sortPairedByKey(sortedKeys, ids)
+    val (sortedKeys, _) = sortPaired(Array.tabulate(200000)(_.toLong),
+      Array.tabulate(200000)(i => (200000 - i).toLong))
     assert(sortedKeys(0) === 0L && sortedKeys(199999) === 199999L)
   }
 
-  test("servingProbe detects a semanticHash key collision instead of serving it") {
+  test("probe entries are keyed by the whole canonical plan, never by a hash of it") {
     import spark.implicits._
     val planA = Seq(1L).toDF("x").queryExecution.analyzed
     val planB = Seq(2L).toDF("x").queryExecution.analyzed
     assert(!planA.sameResult(planB))
-    val first = ctx.servingProbe("collide:test", planA) { "A" }
+    val c = ctx.copy()
+    val first = c.cached(("collide:test", planA.canonicalized)) { "A" }
     assert(first === "A")
-    // same KEY (as a 32-bit collision would produce), different plan:
-    // the hit must be rejected and the fresh build served
-    val second = ctx.servingProbe("collide:test", planB) { "B" }
-    assert(second === "B", "a colliding key must degrade to a miss, not serve A")
+    // same tag, different plan: a different entry, never A's value
+    val second = c.cached(("collide:test", planB.canonicalized)) { "B" }
+    assert(second === "B", "a different plan must miss, not serve A")
     // the original entry still serves its own plan
-    assert(ctx.servingProbe("collide:test", planA) { "A2" } === "A")
+    assert(c.cached(("collide:test", planA.canonicalized)) { "A2" } === "A")
   }
 
   test("spo lookup decodes with literal fallback") {
@@ -488,23 +518,27 @@ class EngineSpec extends SparkSpec {
     assert(r5.error.contains("Triple does not exist, skipping delete"))
   }
 
-  test("servingPlan caches the built frame and drains on retire") {
-    val c = ctx
+  test("plan caches the built frame; a retired context keeps nothing") {
+    val c = ctx.copy()
     var builds = 0
     def build() = { builds += 1
       QueryEngine.subjects(c, QueryOpts(filters = Seq(FilterQ(p = label)))).get }
-    val first = c.servingPlan("spec-key")(build())
-    val again = c.servingPlan("spec-key")(build())
+    val first = c.plan("spec-key")(build())
+    val again = c.plan("spec-key")(build())
     assert(builds === 1, "second call must reuse the cached plan")
     assert(again eq first, "cached plan must be the same frame object")
     // results are live executions of the cached plan, not cached rows
-    assert(first.count() === build().count())
-    // a retiring mutation drains the plan cache: a later call rebuilds
-    c.retired.set(true)
-    c.servingPlan("other")(build())
-    c.retired.set(false)
-    val rebuilt = c.servingPlan("spec-key")(build())
-    assert(!(rebuilt eq first), "drained key must rebuild")
+    val rows = first.count()
+    assert(rows === build().count())
+    // a retiring mutation releases the plan: later calls still get a
+    // frame, built for each call and never kept
+    c.retire()
+    val rebuilt = c.plan("spec-key")(build())
+    assert(!(rebuilt eq first), "a retired context must not serve its old plan")
+    assert(rebuilt.count() === rows)
+    val again2 = c.plan("spec-key")(build())
+    assert(!(again2 eq rebuilt), "a retired context must not keep a new plan")
+    assert(builds === 4)
   }
 
   test("only_properties / exclude_properties restrict hydration") {
@@ -599,10 +633,10 @@ class EngineSpec extends SparkSpec {
     assert(json.contains("\"graph\":[]"))
   }
 
-  test("sortPairedByKey: adversarial key distributions stay correct (and shallow)") {
-    def check(keys: Array[Long], vals: Array[Long]): Unit = {
-      val pairs = keys.zip(vals).sorted.toSeq
-      QueryEngine.sortPairedByKey(keys, vals)
+  test("the index sort: adversarial key distributions stay correct (and shallow)") {
+    def check(keys0: Array[Long], vals0: Array[Long]): Unit = {
+      val pairs = keys0.zip(vals0).sorted.toSeq
+      val (keys, vals) = sortPaired(keys0, vals0)
       // keys ascending and the (key, val) pairing preserved as a multiset
       var i = 1
       while (i < keys.length) { assert(keys(i - 1) <= keys(i)); i += 1 }
