@@ -5,7 +5,7 @@ import org.json4s.jackson.JsonMethods
 
 import java.io.{BufferedInputStream, BufferedOutputStream, InputStream}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingDeque, TimeUnit}
+import scala.collection.mutable
 
 /** Redis-wire (RESP2) front end for [[WorkerPool]], closing the last
   * client-compat gap with the reference's queue tier: a STOCK bikidata
@@ -31,102 +31,57 @@ import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingDeque, TimeUnit}
   * in-process lists and strings — enough to run the reference client
   * verbatim, not a general Redis. Lists and strings live in THIS
   * server; they are transport state (tickets in flight), not data-plane
-  * state, so no persistence is warranted.
+  * state, so no persistence is warranted. They are guarded by the
+  * server's own monitor.
   */
 final class RespServer(bk: Bikidata, port: Int = 0, numWorkers: Int = 1,
     inboundQueue: String = RespServer.DefaultQueue,
     ticketTtlMillis: Long = RespServer.DefaultTicketTtlMillis) {
 
   val pool = new WorkerPool(bk, numWorkers)
-  private val server = new java.net.ServerSocket(port)
-  def boundPort: Int = server.getLocalPort
+
+  // transport state, guarded by this server's monitor; a list leaves
+  // `lists` (and its stamp `lastPush`) when it empties, like in Redis
+  private val lists = mutable.HashMap.empty[String, java.util.ArrayDeque[Array[Byte]]]
+  private val strings = mutable.HashMap.empty[String, Array[Byte]]
   @volatile private var running = true
 
-  private val lists = new ConcurrentHashMap[String, LinkedBlockingDeque[Array[Byte]]]()
-  private val strings = new ConcurrentHashMap[String, Array[Byte]]()
+  /** Last push time (millis) per live list, for the sweeper: an
+    * envelope pushed onto a ticket whose client already gave up (BLPOP
+    * timed out, or the request carried a bogus ticket) would otherwise
+    * be retained for the server's lifetime. Any list idle past
+    * [[ticketTtlMillis]] is reclaimed — far beyond the reference
+    * client's poll window (workers.py:124 re-BLPOPs every few seconds). */
+  private val lastPush = mutable.HashMap.empty[String, Long]
 
-  /** All list mutation goes through [[push]]/[[tryPop]]: a pop that
-    * drains a list removes it from the map (like Redis deletes empty
-    * lists), and the {pop, remove-if-empty} / {still-mapped?, push}
-    * pairs are each atomic under the deque's monitor — a push can never
-    * land on a deque a concurrent pop just unmapped (it observes the
-    * removal and retries against the fresh mapping). Without the
-    * identity re-check, `LPUSH k v1 v2` racing a `BLPOP k` could strand
-    * v2 on an orphaned deque. */
-  @annotation.tailrec
-  private def push(key: String, vs: Seq[Array[Byte]], head: Boolean): Long = {
-    val q = lists.computeIfAbsent(key, _ => new LinkedBlockingDeque[Array[Byte]]())
-    val n = q.synchronized {
-      if (lists.get(key) eq q) {
-        vs.foreach(v => if (head) q.addFirst(v) else q.addLast(v))
-        lastPush.put(key, newStamp())
-        q.size().toLong
-      } else -1L
-    }
-    if (n >= 0) n else push(key, vs, head)
+  private def push(key: String, vs: Seq[Array[Byte]], head: Boolean): Long = synchronized {
+    val q = lists.getOrElseUpdate(key, new java.util.ArrayDeque[Array[Byte]]())
+    vs.foreach(v => if (head) q.addFirst(v) else q.addLast(v))
+    lastPush(key) = System.currentTimeMillis()
+    q.size.toLong
   }
 
   /** Pop without minting: a missing key stays missing (polling a key
-    * that never gets a push must not accumulate empty deques). */
-  private def tryPop(key: String, head: Boolean): Array[Byte] = {
-    val q = lists.get(key)
-    if (q == null) return null
-    q.synchronized {
-      val v = if (head) q.pollFirst() else q.pollLast()
-      if (v != null && q.isEmpty) lists.remove(key, q)
-      v
+    * that never gets a push must not accumulate empty lists). */
+  private def tryPop(key: String, head: Boolean): Array[Byte] = synchronized {
+    lists.get(key) match {
+      case Some(q) =>
+        val v = if (head) q.pollFirst() else q.pollLast()
+        if (q.isEmpty) dropList(key)
+        v
+      case None => null
     }
   }
 
-  /** Last push time per live list, for the sweeper: an envelope pushed
-    * onto a ticket whose client already gave up (BLPOP timed out, or
-    * the request carried a bogus ticket) would otherwise be retained
-    * for the server's lifetime. Any list idle past [[ticketTtlMillis]]
-    * is reclaimed — far beyond the reference client's poll window
-    * (workers.py:124 re-BLPOPs every few seconds). */
-  private val lastPush = new ConcurrentHashMap[String, java.lang.Long]()
+  // callers hold the monitor
+  private def dropList(key: String): Boolean = {
+    lastPush.remove(key)
+    lists.remove(key).isDefined
+  }
 
-  // Stamps are UNIQUE, not bare millis: the sweeper's drained-list
-  // branch removes by value equality, and two pushes in the same
-  // millisecond would make a stale stamp compare equal to a fresh one —
-  // the remove would then orphan a live list from the sweep map (its
-  // envelope retained forever, the exact leak the sweeper closes).
-  // millis ride the high bits so age/ordering comparisons still hold;
-  // the low 20 bits serialize up to ~1M pushes per millisecond.
-  private val stampSerial = new java.util.concurrent.atomic.AtomicLong()
-  private def newStamp(): Long =
-    (System.currentTimeMillis() << 20) | (stampSerial.incrementAndGet() & 0xFFFFFL)
-
-  private def sweepIdleLists(): Unit = {
-    // a TTL past the clock origin (e.g. Long.MaxValue to disable
-    // sweeping) would overflow the shifted cutoff into "everything is
-    // stale" — clamp to never-stale instead; drained-stamp cleanup
-    // below still runs
-    val cutoffMs = System.currentTimeMillis() - ticketTtlMillis
-    val cutoff = if (cutoffMs <= 0) Long.MinValue else cutoffMs << 20
-    val it = lastPush.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val k = e.getKey
-      val stamp = e.getValue
-      val q = lists.get(k)
-      // Everything is re-checked under the deque monitor: push() appends
-      // and restamps inside the SAME monitor, so reading a fresh stamp
-      // there means a push won the race — the list (now holding a live
-      // envelope) and its stamp must both survive. Removing on the
-      // stale observation alone would either drop a fresh stamp
-      // (orphaning a live list from the only map this sweeper scans) or
-      // unmap a deque holding a just-pushed envelope the client's BLPOP
-      // is about to collect.
-      if (q == null) lastPush.remove(k, stamp) // list already drained
-      else if (stamp < cutoff) q.synchronized {
-        val cur = lastPush.get(k)
-        if (cur != null && cur <= stamp) {
-          lists.remove(k, q)
-          lastPush.remove(k, cur)
-        }
-      }
-    }
+  private def sweepIdleLists(): Unit = synchronized {
+    val cutoff = System.currentTimeMillis() - ticketTtlMillis
+    lastPush.collect { case (k, t) if t < cutoff => k }.foreach(dropList)
   }
 
   /** Route one inbound opts JSON through the pool; the completed
@@ -226,23 +181,19 @@ final class RespServer(bk: Bikidata, port: Int = 0, numWorkers: Int = 1,
   // ----------------------------------------------------------- commands
 
   /** Block on the first non-empty list among `keys` until `timeoutSec`
-    * (0 = forever), scanning in key order like Redis BLPOP. */
+    * (0 = forever), scanning in key order like Redis BLPOP. The wait
+    * re-scans every 5 ms, where Redis wakes it on push (ROADMAP item 1). */
   private def blockingPop(keys: Seq[String], timeoutSec: Double,
       head: Boolean): Option[(String, Array[Byte])] = {
+    def firstHit = keys.iterator.map(k => k -> tryPop(k, head)).find(_._2 != null)
     val deadline =
-      if (timeoutSec <= 0) Long.MaxValue
-      else System.nanoTime() + (timeoutSec * 1e9).toLong
-    while (running) {
-      for (k <- keys) {
-        val v = tryPop(k, head)
-        if (v != null) return Some((k, v))
-      }
-      if (System.nanoTime() >= deadline) return None
-      // multi-key wait: a short poll beats wiring takeFirst interrupts
-      // across keys; ticket lists get their push within one tick
+      if (timeoutSec == 0) Long.MaxValue else System.nanoTime() + (timeoutSec * 1e9).toLong
+    var hit = firstHit
+    while (hit.isEmpty && running && System.nanoTime() < deadline) {
       Thread.sleep(5)
+      hit = firstHit
     }
-    None
+    hit
   }
 
   private def handle(cmd: Seq[Array[Byte]], out: java.io.OutputStream): Boolean = {
@@ -257,6 +208,9 @@ final class RespServer(bk: Bikidata, port: Int = 0, numWorkers: Int = 1,
       case "SELECT" | "AUTH" => simple(out, "OK")
       case "CLIENT" => simple(out, "OK") // SETINFO/SETNAME from redis-py
       case "QUIT" => simple(out, "OK"); return false
+      // Redis holds no empty list, and a BLPOP needs a key and a timeout
+      case "LPUSH" | "RPUSH" | "BLPOP" | "BRPOP" if args.length < 2 =>
+        error(out, s"wrong number of arguments for '${name.toLowerCase}' command")
       case "LPUSH" | "RPUSH" =>
         val key = str(0)
         if (key == inboundQueue) {
@@ -273,87 +227,67 @@ final class RespServer(bk: Bikidata, port: Int = 0, numWorkers: Int = 1,
       case "BLPOP" | "BRPOP" =>
         val timeout = str(args.length - 1).toDouble
         val keys = args.dropRight(1).map(new String(_, UTF_8))
-        blockingPop(keys, timeout, head = name == "BLPOP") match {
+        if (timeout < 0) error(out, "timeout is negative")
+        else blockingPop(keys, timeout, head = name == "BLPOP") match {
           case Some((k, v)) => array(out, Seq(k.getBytes(UTF_8), v))
           case None => array(out, null)
         }
       case "LPOP" => bulk(out, tryPop(str(0), head = true))
       case "RPOP" => bulk(out, tryPop(str(0), head = false))
       case "LLEN" =>
-        integer(out, Option(lists.get(str(0))).map(_.size().toLong).getOrElse(0L))
+        integer(out, synchronized(lists.get(str(0)).fold(0L)(_.size.toLong)))
       case "DEL" =>
-        integer(out, args.map(new String(_, UTF_8)).count { k =>
-          val q = lists.get(k)
-          // unmap under the deque's monitor so a concurrent push either
-          // completes first (values discarded, DEL semantics) or
-          // observes the removal and recreates the key
-          val removedList =
-            q != null && q.synchronized(lists.remove(k, q))
-          removedList | (strings.remove(k) != null)
-        }.toLong)
+        integer(out, synchronized(args.map(new String(_, UTF_8)).count { k =>
+          dropList(k) | strings.remove(k).isDefined
+        }).toLong)
       case "EXISTS" =>
-        integer(out, args.map(new String(_, UTF_8)).count { k =>
-          lists.containsKey(k) || strings.containsKey(k)
-        }.toLong)
-      case "SET" => strings.put(str(0), args(1)); simple(out, "OK") // EX/PX accepted, unenforced
-      case "GET" => bulk(out, strings.get(str(0)))
+        integer(out, synchronized(args.map(new String(_, UTF_8)).count { k =>
+          lists.contains(k) || strings.contains(k)
+        }).toLong)
+      case "SET" => synchronized(strings(str(0)) = args(1)); simple(out, "OK") // EX/PX accepted, unenforced
+      case "GET" => bulk(out, synchronized(strings.get(str(0)).orNull))
       case other => error(out, s"unknown command '$other'")
     }
     true
   }
 
-  private val acceptor = new Thread(() => {
-    while (running) {
-      try {
-        val sock = server.accept()
-        val t = new Thread(() => {
-          try {
-            val in = new BufferedInputStream(sock.getInputStream)
-            val out = new BufferedOutputStream(sock.getOutputStream)
-            var live = true
-            while (live && running) {
-              // framing errors answer -ERR then close (Redis behavior);
-              // they must not fall through to the IOException catch below
-              // (silent close) or escape uncaught (dead client thread)
-              val cmd =
-                try readCommand(in)
-                catch { case e: ProtocolError =>
-                  error(out, String.valueOf(e.getMessage)); out.flush(); null
-                }
-              live =
-                try handle(cmd, out)
-                catch {
-                  case e: java.io.IOException => throw e
-                  case scala.util.control.NonFatal(e) =>
-                    error(out, String.valueOf(e).replaceAll("[\r\n]", " ")); true
-                }
-              out.flush()
-            }
-          } catch { case _: java.io.IOException => () }
-          finally sock.close()
-        })
-        t.setDaemon(true)
-        t.start()
-      } catch { case _: java.io.IOException => () } // closed during accept
+  private val acceptor = new Acceptor(port, "graft-resp")({ sock =>
+    val in = new BufferedInputStream(sock.getInputStream)
+    val out = new BufferedOutputStream(sock.getOutputStream)
+    () => {
+      // framing errors answer -ERR then close (Redis behavior); they
+      // must not fall through to the acceptor's IOException catch
+      // (silent close) or escape uncaught (dead client thread)
+      val cmd =
+        try readCommand(in)
+        catch { case e: ProtocolError =>
+          error(out, String.valueOf(e.getMessage)); out.flush(); null
+        }
+      val live =
+        try handle(cmd, out)
+        catch {
+          case e: java.io.IOException => throw e
+          case scala.util.control.NonFatal(e) =>
+            error(out, String.valueOf(e).replaceAll("[\r\n]", " ")); true
+        }
+      out.flush()
+      live
     }
-  }, "graft-resp-acceptor")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  })
+  def boundPort: Int = acceptor.boundPort
 
-  private val sweeper = new Thread(() => {
+  WorkerPool.daemon(new Thread(() => {
     val tick = math.max(50L, math.min(ticketTtlMillis / 4, 30000L))
     while (running) {
       try Thread.sleep(tick) catch { case _: InterruptedException => () }
       if (running) sweepIdleLists()
     }
-  }, "graft-resp-sweeper")
-  sweeper.setDaemon(true)
-  sweeper.start()
+  }, "graft-resp-sweeper")).start()
 
   def close(): Unit = {
+    acceptor.close()
     running = false
     pool.shutdown()
-    server.close()
   }
 }
 

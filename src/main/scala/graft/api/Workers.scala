@@ -11,7 +11,7 @@ import org.json4s.jackson.JsonMethods
   *  - ONE manager thread drains the inbound queue and executes
   *    insert/delete INLINE — the single-writer routing that serializes
   *    all mutations (redis_manager, workers.py:39-70);
-  *  - N worker threads drain the ready queue and answer queries through
+  *  - a fixed pool of N worker threads answers queries through
   *    [[Bikidata.queryJson]], whose result cache is the only one
   *    (redis_worker, workers.py:73-108) — the pool only routes;
   *  - clients get a ticket future and block with a timeout
@@ -23,13 +23,11 @@ import org.json4s.jackson.JsonMethods
   * for cross-process clients.
   */
 final class WorkerPool(bk: Bikidata, numWorkers: Int = 1) {
+  import java.util.concurrent.{CompletableFuture, RejectedExecutionException}
 
-  private final case class Req(json: String,
-      promise: java.util.concurrent.CompletableFuture[String])
-
-  private val inQ = new java.util.concurrent.LinkedBlockingQueue[Req]()
-  private val readyQ = new java.util.concurrent.LinkedBlockingQueue[Req]()
   @volatile private var running = true
+  private val manager = WorkerPool.daemonPool(1, "graft-worker-manager")
+  private val workers = WorkerPool.daemonPool(numWorkers, "graft-worker")
 
   /** The facade's result-cache hit counter. */
   val cacheHits = bk.cacheHits
@@ -49,12 +47,36 @@ final class WorkerPool(bk: Bikidata, numWorkers: Int = 1) {
   /** Fire-and-collect submit for transports that deliver the result out
     * of band (the RESP adapter pushes it onto the request's ticket
     * list, the way redis_manager/redis_worker lpush to `query_ticket`,
-    * workers.py:54,108). */
-  def submitAsync(optsJson: String): java.util.concurrent.CompletableFuture[String] = {
-    val p = new java.util.concurrent.CompletableFuture[String]()
-    inQ.put(Req(optsJson, p))
+    * workers.py:54,108). After [[shutdown]] the future completes at once
+    * with an error envelope. */
+  def submitAsync(optsJson: String): CompletableFuture[String] = {
+    val p = new CompletableFuture[String]()
+    try manager.execute(() => route(optsJson, p))
+    catch { case _: RejectedExecutionException => p.complete(WorkerPool.shutDownEnvelope) }
     p
   }
+
+  /** On the manager thread: mutations run inline, so they are serialized
+    * in arrival order (the single writer); queries go to the workers. */
+  private def route(json: String, p: CompletableFuture[String]): Unit =
+    try {
+      val parsed = JsonMethods.parse(json)
+      (parsed \ "action") match {
+        case JString("insert") | JString("delete") => answer(p)(runMutation(parsed))
+        case _ => workers.execute(() => answer(p)(bk.queryJson(json)))
+      }
+    } catch {
+      case _: RejectedExecutionException => p.complete(WorkerPool.shutDownEnvelope)
+      case e: Exception => p.complete(WorkerPool.errorEnvelope(e))
+    }
+
+  /** Completes `p` with what `body` renders, or with an error envelope
+    * when it throws or the pool is shut down, so no request queued at
+    * [[shutdown]] is left waiting. */
+  private def answer(p: CompletableFuture[String])(body: => String): Unit =
+    p.complete(
+      if (!running) WorkerPool.shutDownEnvelope
+      else try body catch { case e: Exception => WorkerPool.errorEnvelope(e) })
 
   /** Runs the mutation and renders its result envelope. The facade
     * retires cached results itself when the store changed. */
@@ -91,42 +113,13 @@ final class WorkerPool(bk: Bikidata, numWorkers: Int = 1) {
     JsonMethods.compact(JsonMethods.render(JObject(fields)))
   }
 
-  private val manager = new Thread(() => {
-    while (running) {
-      val req = inQ.poll(200, java.util.concurrent.TimeUnit.MILLISECONDS)
-      if (req != null) {
-        try {
-          val parsed = JsonMethods.parse(req.json)
-          (parsed \ "action") match {
-            case JString("insert") | JString("delete") =>
-              // inline in the manager: the single writer
-              req.promise.complete(runMutation(parsed))
-            case _ => readyQ.put(req)
-          }
-        } catch { case e: Exception =>
-          req.promise.complete(WorkerPool.errorEnvelope(e))
-        }
-      }
-    }
-  }, "graft-worker-manager")
-
-  private val workers = (1 to numWorkers).map { i =>
-    new Thread(() => {
-      while (running) {
-        val req = readyQ.poll(200, java.util.concurrent.TimeUnit.MILLISECONDS)
-        if (req != null) {
-          try req.promise.complete(bk.queryJson(req.json))
-          catch { case e: Exception =>
-            req.promise.complete(WorkerPool.errorEnvelope(e))
-          }
-        }
-      }
-    }, s"graft-worker-$i")
+  /** Stops taking work. Queries already running finish; every request
+    * still queued, or submitted later, gets an error envelope. */
+  def shutdown(): Unit = {
+    running = false
+    manager.shutdown()
+    workers.shutdown()
   }
-
-  (manager +: workers).foreach { t => t.setDaemon(true); t.start() }
-
-  def shutdown(): Unit = running = false
 }
 
 object WorkerPool {
@@ -135,6 +128,49 @@ object WorkerPool {
   private[api] def errorEnvelope(e: Throwable): String =
     """{"error": "Failed to process query", "trace": """ +
       JsonMethods.compact(JsonMethods.render(JString(String.valueOf(e)))) + "}"
+
+  private val shutDownEnvelope =
+    errorEnvelope(new IllegalStateException("worker pool is shut down"))
+
+  private def daemonPool(n: Int, name: String): java.util.concurrent.ExecutorService = {
+    val serial = new java.util.concurrent.atomic.AtomicInteger()
+    java.util.concurrent.Executors.newFixedThreadPool(n,
+      r => daemon(new Thread(r, s"$name-${serial.incrementAndGet()}")))
+  }
+
+  private[api] def daemon(t: Thread): Thread = { t.setDaemon(true); t }
+}
+
+/** The accept loop of the TCP front ends: a daemon thread accepts, and
+  * each connection runs on a daemon thread of its own. `session` sets
+  * up a connection and returns its step, which answers one request and
+  * returns false at EOF; steps repeat until then or until [[close]].
+  * The socket closes when the session ends or breaks. */
+private[api] final class Acceptor(port: Int, name: String)(
+    session: java.net.Socket => () => Boolean) {
+  private val server = new java.net.ServerSocket(port)
+  @volatile private var running = true
+  def boundPort: Int = server.getLocalPort
+
+  WorkerPool.daemon(new Thread(() => {
+    while (running) {
+      try {
+        val sock = server.accept()
+        WorkerPool.daemon(new Thread(() => {
+          try {
+            val step = session(sock)
+            while (running && step()) ()
+          } catch { case _: java.io.IOException => () }
+          finally sock.close()
+        })).start()
+      } catch { case _: java.io.IOException => () } // closed during accept
+    }
+  }, s"$name-acceptor")).start()
+
+  def close(): Unit = {
+    running = false
+    server.close()
+  }
 }
 
 /** TCP front end for [[WorkerPool]]: one line-delimited JSON request per
@@ -142,50 +178,32 @@ object WorkerPool {
   * reference gets from Redis lists. */
 final class WorkerServer(bk: Bikidata, port: Int = 0, numWorkers: Int = 1) {
   val pool = new WorkerPool(bk, numWorkers)
-  private val server = new java.net.ServerSocket(port)
-  def boundPort: Int = server.getLocalPort
-  @volatile private var running = true
-
-  private val acceptor = new Thread(() => {
-    while (running) {
-      try {
-        val sock = server.accept()
-        val t = new Thread(() => {
-          val in = new java.io.BufferedReader(
-            new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
-          val out = new java.io.PrintWriter(
-            new java.io.OutputStreamWriter(sock.getOutputStream, "UTF-8"), true)
-          try {
-            var line = in.readLine()
-            while (line != null && running) {
-              if (line.trim.nonEmpty) {
-                // a slow query (pool.submit TimeoutException) or any other
-                // per-request failure gets an error ENVELOPE on the wire —
-                // it must not kill the connection thread mid-protocol
-                val resp =
-                  try pool.submit(line)
-                  catch {
-                    case e: java.io.IOException => throw e // socket itself broke
-                    case scala.util.control.NonFatal(e) => WorkerPool.errorEnvelope(e)
-                  }
-                out.println(resp.replace("\n", " "))
-              }
-              line = in.readLine()
-            }
-          } catch { case _: java.io.IOException => () }
-          finally sock.close()
-        })
-        t.setDaemon(true)
-        t.start()
-      } catch { case _: java.io.IOException => () } // closed during accept
+  private val acceptor = new Acceptor(port, "graft-worker")({ sock =>
+    val in = new java.io.BufferedReader(
+      new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
+    val out = new java.io.PrintWriter(
+      new java.io.OutputStreamWriter(sock.getOutputStream, "UTF-8"), true)
+    () => {
+      val line = in.readLine()
+      if (line != null && line.trim.nonEmpty) {
+        // a slow query (pool.submit TimeoutException) or any other
+        // per-request failure gets an error ENVELOPE on the wire —
+        // it must not kill the connection thread mid-protocol
+        val resp =
+          try pool.submit(line)
+          catch {
+            case e: java.io.IOException => throw e // socket itself broke
+            case scala.util.control.NonFatal(e) => WorkerPool.errorEnvelope(e)
+          }
+        out.println(resp.replace("\n", " "))
+      }
+      line != null
     }
-  }, "graft-worker-acceptor")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  })
+  def boundPort: Int = acceptor.boundPort
 
   def close(): Unit = {
-    running = false
+    acceptor.close()
     pool.shutdown()
-    server.close()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.api.{Bikidata, RespServer, WorkerServer}
+import graft.api.{Bikidata, RespServer, WorkerPool, WorkerServer}
 
 /** The queue tier end to end: two concurrent TCP clients through the
   * socket front end, single-writer mutation routing, result-cache hits —
@@ -325,5 +325,68 @@ class WorkerSpec extends SparkSpec {
       assert(srv.pool.cacheHits.get() === before)
       sock.close()
     } finally srv.close()
+  }
+
+  test("BLPOP over two keys takes a push to the second key; timeout; close releases") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val dir = java.nio.file.Files.createTempDirectory("graft-resp4").toString
+    val bk = new Bikidata(spark, s"$dir/wh") // list ops never touch the pool
+    val srv = new RespServer(bk, port = 0, numWorkers = 1)
+    try {
+      val c = new RespClient(srv.boundPort)
+      val pusher = new RespClient(srv.boundPort)
+      val woken = Future(c.cmd("BLPOP", "k1", "k2", "0"))
+      Thread.sleep(200)
+      assert(!woken.isCompleted)
+      assert(pusher.cmd("RPUSH", "k2", "v") === 1L)
+      assert(Await.result(woken, 10.seconds) === Vector("k2", "v"))
+      assert(c.cmd("EXISTS", "k2") === 0L)
+
+      val t0 = System.nanoTime()
+      assert(c.cmd("BLPOP", "t-none", "0.3") === null)
+      assert(System.nanoTime() - t0 >= 300L * 1000 * 1000)
+
+      val forever = Future(c.cmd("BLPOP", "t-forever", "0"))
+      Thread.sleep(200)
+      assert(!forever.isCompleted)
+      srv.close()
+      assert(Await.result(forever, 10.seconds) === null)
+      c.close(); pusher.close()
+    } finally srv.close()
+  }
+
+  test("RESP arity: a push without values and a BLPOP without key or with a negative timeout answer -ERR") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-resp5").toString
+    val bk = new Bikidata(spark, s"$dir/wh")
+    val srv = new RespServer(bk, port = 0, numWorkers = 1)
+    try {
+      val c = new RespClient(srv.boundPort)
+      def err(parts: String*): String = intercept[RuntimeException](c.cmd(parts: _*)).getMessage
+      for (push <- Seq("LPUSH", "RPUSH"); key <- Seq("k", RespServer.DefaultQueue))
+        assert(err(push, key) === s"-ERR wrong number of arguments for '${push.toLowerCase}' command")
+      assert(c.cmd("EXISTS", "k") === 0L)
+      assert(c.cmd("LLEN", "k") === 0L)
+      assert(err("BLPOP", "5") === "-ERR wrong number of arguments for 'blpop' command")
+      assert(err("BRPOP", "k", "-1") === "-ERR timeout is negative")
+      assert(err("BLPOP", "k", "-1") === "-ERR timeout is negative")
+      assert(c.cmd("PING") === "PONG")
+      c.close()
+    } finally srv.close()
+  }
+
+  test("WorkerPool.shutdown completes queued and later requests with an error envelope") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-worker4").toString
+    val bk = new Bikidata(spark, s"$dir/wh")
+    val pool = new WorkerPool(bk, numWorkers = 1)
+    val queued = (1 to 4).map(i => pool.submitAsync(s"""{"filters":[{"p":"fts","o":"q$i"}]}"""))
+    pool.shutdown()
+    val late = pool.submitAsync("""{"filters":[{"p":"fts","o":"late"}]}""")
+    val t0 = System.nanoTime()
+    val envelope = late.get(5, java.util.concurrent.TimeUnit.SECONDS)
+    assert(envelope.contains("\"error\"") && envelope.contains("worker pool is shut down"), envelope)
+    assert(System.nanoTime() - t0 < 1000L * 1000 * 1000)
+    queued.foreach(f => assert(f.get(60, java.util.concurrent.TimeUnit.SECONDS).startsWith("{")))
   }
 }
