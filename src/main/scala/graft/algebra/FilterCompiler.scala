@@ -144,20 +144,36 @@ object EngineContext {
   /** Overflow bound for [[EngineContext.cached]] entries. */
   private[algebra] val maxServingEntries = 1024
 
-  /** Collect + broadcast the dictionary when it is bounded. One
-    * limit-bounded collect decides AND delivers: reading maxEntries + 1
-    * rows either proves the dictionary is too big (fall back to the
-    * join decode path, driver memory capped at one extra row) or
-    * already holds the whole map — the previous count()-then-collect()
-    * scanned the full dictionary twice at every session start. */
-  def withDictBroadcast(ctx: EngineContext, maxEntries: Long = 5000000L): EngineContext = {
-    val max = math.min(maxEntries, Int.MaxValue - 1L).toInt
-    val rows = ctx.graph.dict.limit(max + 1).collect()
-    if (rows.length > max) ctx
-    else {
-      val m = rows.map(r => r.getLong(0) -> r.getString(1)).toMap
+  /** Collect + broadcast the dictionary when it is bounded (see
+    * [[collectDict]]); past the bound the context is returned as it is
+    * and every decode takes the join path. */
+  def withDictBroadcast(ctx: EngineContext, maxEntries: Long = 5000000L): EngineContext =
+    withDict(ctx, collectDict(ctx.graph, maxEntries))
+
+  /** `ctx` decoding through `dict` from [[collectDict]], broadcast. */
+  def withDict(ctx: EngineContext, dict: Option[(Map[Long, String], Long)]): EngineContext =
+    dict.fold(ctx) { case (m, _) =>
       ctx.copy(dictBroadcast = Some(ctx.graph.spark.sparkContext.broadcast(m)))
     }
+
+  /** The whole dictionary as a decode map, plus the number of LITERAL
+    * entries in it, or None when it holds more than `maxEntries` rows.
+    * One limit-bounded collect decides AND delivers: reading
+    * maxEntries + 1 rows either proves the dictionary is too big
+    * (driver memory capped at one extra row) or already holds the whole
+    * map. Each row carries its origin, so the same job counts the
+    * literals a context load checks its stored FTS index against. */
+  def collectDict(graph: Graph,
+      maxEntries: Long = 5000000L): Option[(Map[Long, String], Long)] = {
+    val max = math.min(maxEntries, Int.MaxValue - 1L).toInt
+    def tagged(d: DataFrame, literal: Boolean) =
+      d.select(col("hash"), col("value"), lit(literal))
+    val rows = tagged(graph.iris, literal = false)
+      .union(tagged(graph.literals, literal = true))
+      .limit(max + 1).collect()
+    if (rows.length > max) None
+    else Some((rows.map(r => r.getLong(0) -> r.getString(1)).toMap,
+      rows.count(_.getBoolean(2)).toLong))
   }
 }
 

@@ -74,6 +74,9 @@ final class Bikidata(
         graph.servingShufflePartitions.toString)
       // one-job bounded probe collects on small stores (see Rdfize.ctx)
       serving.conf.set("spark.sql.limit.initialNumPartitions", "1024")
+      // decode via one session-wide broadcast map while the dictionary is
+      // bounded; falls back to join-decode automatically past the cap
+      val dict = EngineContext.collectDict(graph)
       // prefer the warehouse-persisted FTS index (written at build time,
       // like the reference's in-database index); rebuild only if absent
       // or stale (mutations invalidate via invalidate()).
@@ -83,10 +86,12 @@ final class Bikidata(
       // The doc count is the cheap exactness witness — appendDelta
       // writes meta LAST, so a meta whose numDocs matches the
       // dictionary implies the postings/lists appends completed too.
+      // The dictionary collect above already counted the literals; only
+      // a dictionary past its cap pays a count job of its own.
       var healedSettings: Option[graft.fts.FtsSettings] = None
       val fts = FtsIndex.load(serving, warehouseDir)
         .filter { idx =>
-          val nLiterals = graph.literals.count()
+          val nLiterals = dict.fold(graph.literals.count())(_._2)
           val ok = idx.numDocs == nLiterals
           if (!ok) {
             System.err.println(s"[bikidata] stored fts index covers ${idx.numDocs} " +
@@ -106,10 +111,8 @@ final class Bikidata(
           catch { case _: Exception => () } // read-only warehouse: keep in-memory
           idx
         }.persist()
-      // decode via one session-wide broadcast map while the dictionary is
-      // bounded; falls back to join-decode automatically past the cap
-      val c = EngineContext.withDictBroadcast(
-        EngineContext(graph, fts = Some(fts), embedder = embedder))
+      val c = EngineContext.withDict(
+        EngineContext(graph, fts = Some(fts), embedder = embedder), dict)
       ctxOpt = Some(c)
       c
     }
@@ -169,11 +172,11 @@ final class Bikidata(
     Build.writeFromQuads(spark, quads, warehouseDir)
     invalidate()
     val settings = graft.fts.FtsSettings.resolve(stemmer)
-    val idx = FtsIndex.build(spark.read.parquet(s"$warehouseDir/literals"),
+    val idx = FtsIndex.build(Warehouse.read(spark, warehouseDir, "literals"),
       settings = settings)
     try FtsIndex.write(idx, warehouseDir)
     catch { case _: Exception => () } // read-only warehouse: next ctx rebuilds
-    spark.read.parquet(s"$warehouseDir/triples").count()
+    Warehouse.read(spark, warehouseDir, "triples").count()
   }
 
   /** Per-subject 2-hop FTS document table (main.py:229-272). Also builds

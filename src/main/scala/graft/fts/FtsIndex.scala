@@ -2,6 +2,7 @@ package graft.fts
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Distributed BM25 full-text index over a corpus of (hash, value) docs —
@@ -27,8 +28,8 @@ import org.apache.spark.storage.StorageLevel
   * everything stays inside whole-stage codegen.
   */
 final case class FtsIndex(
-    postings: DataFrame, // (hash: Long, term: String, tf: Long, len: Long)
-    termstats: DataFrame, // (term: String, df: Long)
+    postings: DataFrame, // FtsIndex.PostingsSchema
+    termstats: DataFrame, // FtsIndex.TermstatsSchema
     numDocs: Long,
     avgdl: Double,
     k1: Double = 1.2,
@@ -131,6 +132,25 @@ object FtsIndex {
     * parallel plan. */
   val singleTaskMatchDocs: Long = 4L << 20
 
+  /** `<name>_postings/`, written by [[write]] and [[appendDelta]]. This
+    * and the two schemas below are what [[load]] declares: columns,
+    * order and types exactly as Spark infers them from the writers'
+    * footers, all nullable. */
+  val PostingsSchema: StructType = StructType(Seq(
+    StructField("hash", LongType), StructField("term", StringType),
+    StructField("tf", LongType), StructField("len", IntegerType)))
+
+  /** `<name>_termstats/`: one (term, df) row per term and append. */
+  val TermstatsSchema: StructType =
+    StructType(Seq(StructField("term", StringType), StructField("df", LongType)))
+
+  /** `<name>_lists/`: the [[listsFrom]] layout. */
+  val ListsSchema: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("chunk", LongType),
+    StructField("plist", ArrayType(StructType(Seq(
+      StructField("hash", LongType), StructField("tf", LongType),
+      StructField("len", IntegerType)))))))
+
   /** The ONE derivation of the term-clustered inverted-list layout from
     * flat postings — used by both the in-memory index and [[write]], so
     * a persisted warehouse and a fresh build can never disagree on the
@@ -191,7 +211,7 @@ object FtsIndex {
     // termstats and the inverted lists are pure postings derivations —
     // compute them from the just-written parquet so the corpus-wide
     // tokenize+groupBy plan executes ONCE, not three times
-    val stored = index.postings.sparkSession.read
+    val stored = index.postings.sparkSession.read.schema(PostingsSchema)
       .parquet(s"$warehouseDir/${name}_postings")
     stored.groupBy("term").agg(countDistinct("hash").as("df"))
       .write.mode("overwrite").parquet(s"$warehouseDir/${name}_termstats")
@@ -213,7 +233,10 @@ object FtsIndex {
       stopwords = (j \ "stopwords").extractOrElse[String]("english"))
   }
 
-  /** Load a previously written index; None if absent. */
+  /** Load a previously written index; None if absent. The three dirs
+    * are read under their declared schemas ([[PostingsSchema]],
+    * [[TermstatsSchema]], [[ListsSchema]]), so loading runs no Spark
+    * job. */
   def load(spark: org.apache.spark.sql.SparkSession, warehouseDir: String,
       name: String = "fts"): Option[FtsIndex] = {
     // Hadoop FS, not java.nio: on HDFS/S3 a local-FS probe would always
@@ -228,13 +251,13 @@ object FtsIndex {
       val listsDir = s"$warehouseDir/${name}_lists"
       val lists =
         if (graft.store.StoreIO.exists(spark, listsDir))
-          Some(spark.read.parquet(listsDir))
+          Some(spark.read.schema(ListsSchema).parquet(listsDir))
         else None
       // termstats may carry one row per (term, delta append) — sum to
       // the true df (appendDelta's doc sets are disjoint, so dfs add)
       Some(FtsIndex(
-        spark.read.parquet(s"$warehouseDir/${name}_postings"),
-        spark.read.parquet(s"$warehouseDir/${name}_termstats")
+        spark.read.schema(PostingsSchema).parquet(s"$warehouseDir/${name}_postings"),
+        spark.read.schema(TermstatsSchema).parquet(s"$warehouseDir/${name}_termstats")
           .groupBy("term").agg(sum("df").as("df")),
         (j \ "numDocs").extract[Long],
         (j \ "avgdl").extract[Double],

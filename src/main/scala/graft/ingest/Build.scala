@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.functions.Hash64
-import graft.store.Graph
+import graft.store.{Graph, Warehouse}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,8 +78,9 @@ object Build {
     graphFromQuads(spark, quads(spark, paths).toDF())
 
   /** Materialize a graph as a parquet warehouse (triples/iris/literals
-    * datasets). Refuses to overwrite an existing non-empty warehouse,
-    * matching the reference's build guard (main.py:143-147).
+    * datasets, whose schemas readers declare from [[Warehouse.schemas]]).
+    * Refuses to overwrite an existing non-empty warehouse, matching the
+    * reference's build guard (main.py:143-147).
     */
   def write(graph: Graph, warehouseDir: String): Unit = {
     val dir = new java.io.File(warehouseDir)
@@ -197,14 +198,18 @@ object Build {
     } finally { if (pinned) { quadsDf.unpersist() }; () }
   }
 
+  /** The base relations of a warehouse [[write]] made, with no delta
+    * composition (see [[graft.store.Warehouse.load]] for a mutated
+    * store). Reads declare their schemas ([[Warehouse.schemas]]), so
+    * opening runs no Spark job. */
   def load(spark: SparkSession, warehouseDir: String): Graph =
     Graph(
       spark,
-      spark.read.parquet(s"$warehouseDir/triples"),
-      spark.read.parquet(s"$warehouseDir/iris"),
-      spark.read.parquet(s"$warehouseDir/literals"),
+      Warehouse.read(spark, warehouseDir, "triples"),
+      Warehouse.read(spark, warehouseDir, "iris"),
+      Warehouse.read(spark, warehouseDir, "literals"),
       byS =
         if (new java.io.File(s"$warehouseDir/triples_by_s").exists())
-          Some(spark.read.parquet(s"$warehouseDir/triples_by_s"))
+          Some(Warehouse.read(spark, warehouseDir, "triples_by_s"))
         else None)
 }

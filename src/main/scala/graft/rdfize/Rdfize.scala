@@ -4,6 +4,7 @@ import graft.algebra.EngineContext
 import graft.fts.FtsIndex
 import graft.ingest.Build
 import graft.semantic.{HashingEmbedder, Semantic}
+import graft.store.Warehouse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -188,7 +189,7 @@ object Rdfize {
         try {
           Build.writeFromQuads(spark, quads(spark, sfDir), tmp)
           FtsIndex.write(FtsIndex.build(
-            spark.read.parquet(s"$tmp/literals")), tmp)
+            Warehouse.read(spark, tmp, "literals")), tmp)
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(tmp, "_complete"), "1")
           val whFile = new java.io.File(wh)
@@ -216,7 +217,7 @@ object Rdfize {
         if (complete.exists())
           (Build.load(serving, wh).persist(),
             FtsIndex.load(serving, wh).getOrElse(FtsIndex.build(
-              serving.read.parquet(s"$wh/literals"))))
+              Warehouse.read(serving, wh, "literals"))))
         else {
           val g = Build.graphFromQuads(serving, quads(serving, sfDir)).persist()
           (g, FtsIndex.build(g.literals))

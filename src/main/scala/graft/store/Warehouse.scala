@@ -4,6 +4,7 @@ import graft.functions.Hash64
 import graft.ingest.Quad
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Disk-backed graph with mutation support over immutable parquet
   * (SURVEY §2.1 insert/delete rows): the base datasets written by
@@ -29,6 +30,14 @@ import org.apache.spark.sql.functions._
   * (query.py:502-617) — while an o-wildcard (s,p,g) tombstone keeps
   * suppressing the pre-delete objects without blocking future inserts on
   * that (s,p,g).
+  *
+  * Every read DECLARES its schema ([[Warehouse.schemas]], defined in the
+  * companion next to the writers): a parquet read without one runs a
+  * footer-reading Spark job to infer it, which a context load would pay
+  * once per dir. Opening a store therefore reads footers only when a
+  * query scans data. The declared schemas are exactly what Spark infers
+  * from the writers' footers, so every analysed plan is the same;
+  * `WarehouseSpec` pins each writer's output against them.
   */
 final class Warehouse(val spark: SparkSession, val dir: String) {
 
@@ -38,13 +47,7 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
     StoreIO.exists(spark, s"$dir/$sub")
 
   private def read(sub: String): Option[DataFrame] =
-    if (exists(sub)) Some(spark.read.parquet(s"$dir/$sub")) else None
-
-  private def readOrUnion(base: String, delta: String): DataFrame = {
-    val parts = Seq(read(base), read(delta)).flatten
-    require(parts.nonEmpty, s"warehouse $dir has no $base data")
-    parts.reduce(_ union _)
-  }
+    if (exists(sub)) Some(Warehouse.read(spark, dir, sub)) else None
 
   /** Next mutation sequence number (single-writer counter file; the
     * reference's queue tier likewise serializes writers). Starts at 2 so
@@ -74,29 +77,16 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
     if (StoreIO.exists(spark, p)) StoreIO.readString(spark, p).trim.toLong else 1L
   }
 
-  /** Default `seq` for parts written before versioning: deltas sort as
-    * early inserts (1), tombstones as latest (MaxValue) — both reproduce
-    * the old unordered behavior. */
-  private def withSeq(df: DataFrame, default: Long): DataFrame =
-    if (df.columns.contains("seq")) df else df.withColumn("seq", lit(default))
-
   /** Read a seq-versioned delta/tombstone dir, tolerating a MIX of
     * pre-versioning files (no seq column) and seq-stamped ones in the
-    * same directory (a warehouse upgraded in place): mergeSchema unions
-    * the footers — a plain read samples ONE file, which either drops
-    * seq entirely (new rows regress to the legacy default) or surfaces
-    * legacy rows as seq=null (null fails the `T.seq < TS.seq` tombstone
-    * comparison and resurrects deleted quads) — and the legacy rows'
-    * nulls then take the pre-versioning default. */
+    * same directory (a warehouse upgraded in place). The declared schema
+    * carries a nullable `seq`, so a legacy file reads it as null, and
+    * the nulls take the pre-versioning default: deltas sort as early
+    * inserts (1), tombstones as latest (MaxValue) — both reproduce the
+    * old unordered behavior. A null left in place would fail the
+    * `T.seq < TS.seq` tombstone comparison and resurrect deleted quads. */
   private def readSeqDelta(sub: String, default: Long): Option[DataFrame] =
-    if (!exists(sub)) None
-    else {
-      val df = spark.read.option("mergeSchema", "true").parquet(s"$dir/$sub")
-      Some(
-        if (df.columns.contains("seq"))
-          df.withColumn("seq", coalesce(col("seq"), lit(default)))
-        else withSeq(df, default))
-    }
+    read(sub).map(_.withColumn("seq", coalesce(col("seq"), lit(default))))
 
   /** base ∪ delta minus seq-aware tombstones, from the given base copy. */
   private def composeTriples(baseSub: String): Option[DataFrame] = {
@@ -327,4 +317,33 @@ final class Warehouse(val spark: SparkSession, val dir: String) {
 object Warehouse {
   /** Name of the staging-complete marker inside `_pre_compact`. */
   val StagedMarker = "_STAGED"
+
+  private def longs(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType)))
+  private val triples = longs("s", "p", "o", "g")
+  private val seqTriples = longs("s", "p", "o", "g", "seq")
+  private val dict =
+    StructType(Seq(StructField("hash", LongType), StructField("value", StringType)))
+
+  /** The declared schema of every warehouse dir: columns, order and
+    * types exactly as Spark infers them from the writers' footers (all
+    * nullable, as a parquet read makes them). */
+  val schemas: Map[String, StructType] = Map(
+    // the base: graft.ingest.Build.write and compact()
+    "triples" -> triples,
+    "triples_by_s" -> triples,
+    "iris" -> dict,
+    "literals" -> dict,
+    // insert() and the streaming ingest's appends
+    "triples_delta" -> seqTriples,
+    "iris_delta" -> dict,
+    "literals_delta" -> dict,
+    // delete(): exact (s,p,o,g) and o-wildcard (s,p,g) markers
+    "tombstones" -> seqTriples,
+    "tombstones_spg" -> longs("s", "p", "g", "seq"))
+
+  /** Read warehouse dir `sub` of `dir` under its declared schema — no
+    * schema-inference job. */
+  def read(spark: SparkSession, dir: String, sub: String): DataFrame =
+    spark.read.schema(schemas(sub)).parquet(s"$dir/$sub")
 }

@@ -122,6 +122,51 @@ class BikidataApiSpec extends SparkSpec {
     assert(!healed.contains("\"numDocs\":1"), "meta must be rewritten by the rebuild")
   }
 
+  /** Spark jobs `body` starts on this thread, counted through a job
+    * group. The listener bus delivers events in order, so once a marker
+    * job started after `body` has been seen, every job of `body` has. */
+  private def jobsRunBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"counted-${System.nanoTime()}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counted.incrementAndGet(); ()
+          case Some(g) if g == s"$group-marker" => marker.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      counted.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("opening a context on a fresh build runs one job: the dictionary collect") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-ctxjobs").toString
+    new Bikidata(spark, s"$dir/wh").buildFromQuads(Fixture.quads.toDF())
+    val bk = new Bikidata(spark, s"$dir/wh")
+    // no schema-inference job for the warehouse's four base dirs or the
+    // stored FTS index's three, and no count of its own for the heal
+    // check (a count of the pinned literals runs three jobs: the cache
+    // fill and the aggregate's two adaptive stages): its literal count
+    // comes from the collect that fills the decode map
+    assert(jobsRunBy(bk.ctx) === 1)
+    assert(bk.ctx.dictBroadcast.isDefined && bk.ctx.fts.isDefined)
+  }
+
   test("buildFromQuads + async mutations round-trip") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-bfq").toString

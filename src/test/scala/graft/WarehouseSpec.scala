@@ -1,8 +1,10 @@
 package graft
 
+import graft.fts.FtsIndex
 import graft.ingest.{Build, Quad}
 import graft.store.{Graph, Warehouse}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Disk-backed warehouse round trip: build → load → insert (delta) →
   * delete (tombstone) → compact. */
@@ -198,6 +200,67 @@ class WarehouseSpec extends SparkSpec {
     assert(wh.insert(Seq(q)).error.isEmpty)
     assert(wh.load().triples.filter(col("s") === h).count() === 1,
       "seq-stamped re-insert lost its seq in a mixed-schema delta read")
+  }
+
+  /** Every parquet file of each subdir of `dir` named in `declared`,
+    * checked against the schema its reader declares: Spark's footer
+    * inference of the file must equal it field for field (names, order,
+    * types, nullability). A file at a time, so one drifting append among
+    * many cannot hide behind the others. */
+  private def assertFootersMatch(dir: String,
+      declared: Iterable[(String, StructType)]): Unit =
+    for ((sub, schema) <- declared) {
+      val files = Option(new java.io.File(dir, sub).listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".parquet"))
+      assert(files.nonEmpty, s"$sub/ has no parquet files to check")
+      for (f <- files)
+        assert(spark.read.parquet(f.getPath).schema === schema,
+          s"$sub/${f.getName} drifted from its declared schema")
+    }
+
+  test("every warehouse and FTS writer leaves the schema its reader declares") {
+    import spark.implicits._
+    val dir = freshDir()
+    Build.write(Build.graphFromQuads(spark, Fixture.quads.toDF()), dir)
+    FtsIndex.write(FtsIndex.build(Warehouse.read(spark, dir, "literals")), dir)
+    val base = Build.load(spark, dir)
+    FtsIndex.write(FtsIndex.build(FtsIndex.buildFtss(base.triples, base.literals),
+      "s", "values"), dir, name = "ftss")
+    val wh = new Warehouse(spark, dir)
+    val han = Quad("<http://ex/han>", Fixture.label, "\"Han Solo\"", "<http://ex/han_g>")
+    assert(wh.insert(Seq(han), lits => assert(FtsIndex.appendDelta(spark, dir, lits)))
+      .error.isEmpty)
+    assert(wh.delete(Seq((han.s, han.p, Some(han.o), han.g))).error.isEmpty)
+    val luke = Fixture.quads.head
+    assert(wh.delete(Seq((luke.s, luke.p, None, luke.g))).error.isEmpty)
+    assertFootersMatch(dir, Warehouse.schemas)
+    assertFootersMatch(dir,
+      for (name <- Seq("fts", "ftss"); (rel, schema) <- Seq(
+          "postings" -> FtsIndex.PostingsSchema,
+          "termstats" -> FtsIndex.TermstatsSchema,
+          "lists" -> FtsIndex.ListsSchema))
+        yield s"${name}_$rel" -> schema)
+
+    wh.compact()
+    assertFootersMatch(dir, Warehouse.schemas.filter { case (sub, _) =>
+      Seq("triples", "triples_by_s", "iris", "literals").contains(sub) })
+
+    // the streaming ingest's three delta appends, into an empty store
+    // and then against the one its first batch made
+    val root = java.nio.file.Files.createTempDirectory("graft-wh-stream").toString
+    val watch = s"$root/watch"
+    new java.io.File(watch).mkdirs()
+    val q = graft.streaming.Streaming.streamNt(spark, watch, s"$root/wh", s"$root/ckpt")
+    try {
+      for ((batch, i) <- Seq(
+          "<http://ex/a> <http://ex/p> \"v1\" .\n<http://ex/b> <http://ex/p> <http://ex/a> .\n",
+          "<http://ex/c> <http://ex/p> \"v2\" .\n").zipWithIndex) {
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(watch, s"b$i.nt"), batch)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assertFootersMatch(s"$root/wh", Warehouse.schemas.filter { case (sub, _) =>
+      Seq("triples_delta", "iris_delta", "literals_delta").contains(sub) })
   }
 
   test("random mutation walk matches a naive set model (tombstones, re-inserts, compact)") {
