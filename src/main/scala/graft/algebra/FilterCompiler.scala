@@ -193,6 +193,17 @@ object SimpleFilter {
       graphs: Option[Array[Long]]) extends SimpleFilter
 }
 
+/** The first step of a `regex` filter: triples whose o is a literal (a
+  * row of `graph.literals`) matching `pattern` anchored, and, with `p` or
+  * `graphs` set, whose p is `p` and whose g is one of those. */
+final case class RegexFilter(pattern: String, p: Option[Long], graphs: Option[Array[Long]])
+
+/** The match rule of a non-scoring filter
+  * ([[FilterCompiler.nonScoringFilter]]): the subjects of the triples
+  * `first` matches, then `hops` times the subjects of the triples whose o
+  * is in the set so far, in any graph and under any property. */
+final case class NonScoringFilter(first: Either[SimpleFilter, RegexFilter], hops: Int)
+
 /** Compiles one [[FilterQ]] into a subject-set DataFrame — the Spark
   * counterpart of the reference's `q_to_sql` (query.py:122-218). Every
   * filter produces `(s)` or, when `withScore` and the filter scores,
@@ -436,22 +447,35 @@ object FilterCompiler {
     * (fts/regex/semantic/sample/hops). A forest whose every filter is
     * simple can be evaluated in ONE scan+aggregate
     * ([[QueryEngine.fusedSubjects]]) instead of one distinct per branch
-    * plus set-operator joins, or on the driver ([[LocalStore]]). Must
-    * stay in exact agreement with the corresponding [[compile]]
-    * branches. */
-  def simpleFilter(f: FilterQ): Option[SimpleFilter] = {
+    * plus set-operator joins: a [[nonScoringFilter]] with a simple first
+    * step and no hops. */
+  def simpleFilter(f: FilterQ): Option[SimpleFilter] =
+    nonScoringFilter(f).collect { case NonScoringFilter(Left(sf), 0) => sf }
+
+  /** A filter that neither scores nor samples — a simple filter, a
+    * `regex` filter, or a property filter with hops — decomposed into its
+    * match rule, or None for fts/semantic/random/sample, a malformed hop
+    * count and unrecognized shapes. The driver tier ([[LocalStore]])
+    * answers these; must stay in exact agreement with the corresponding
+    * [[compile]] branches. */
+  def nonScoringFilter(f: FilterQ): Option[NonScoringFilter] = {
     val p = f.p.trim
     val o = f.o.trim
     val g = f.g.trim
-    val (hops, _, pHead) = parseHopsAndProp(p)
+    val (hops, pProp, pHead) = parseHopsAndProp(p)
     val graphs = if (g.isEmpty) None else Some(gHashes(g))
-    if (p.isEmpty && (o.startsWith("<") || o.startsWith("_:")))
-      Some(SimpleFilter.Refs(oHashes(o), graphs)) // reverse reference
-    else if (p == "id" && !(o.startsWith("random") || o.startsWith("sample")))
-      Some(SimpleFilter.Ids(oHashes(o), graphs)) // point lookup (or multi-point IN)
-    else if (p.startsWith("<") && hops == 0)
-      Some(SimpleFilter.Prop(h(pHead), if (o.nonEmpty) Some(oHashes(o)) else None, graphs))
-    else None
+    val first: Option[Either[SimpleFilter, RegexFilter]] =
+      if (hops < 0) None
+      else if (p.isEmpty && (o.startsWith("<") || o.startsWith("_:")))
+        Some(Left(SimpleFilter.Refs(oHashes(o), graphs))) // reverse reference
+      else if (p == "id")
+        if (o.startsWith("random") || o.startsWith("sample")) None
+        else Some(Left(SimpleFilter.Ids(oHashes(o), graphs))) // point lookup (or multi-point IN)
+      else if (p.startsWith("regex")) Some(Right(RegexFilter(o, pProp.map(h), graphs)))
+      else if (p.startsWith("<"))
+        Some(Left(SimpleFilter.Prop(h(pHead), if (o.nonEmpty) Some(oHashes(o)) else None, graphs)))
+      else None
+    first.map(NonScoringFilter(_, hops))
   }
 
   /** The triples-scan predicate of a [[simpleFilter]]. */

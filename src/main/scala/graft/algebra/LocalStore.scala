@@ -1,41 +1,52 @@
 package graft.algebra
 
 /** The driver-resident serving tier: the store's quads as sorted
-  * primitive arrays, answering simple-filter requests
+  * primitive arrays, answering non-scoring reads
   * ([[LocalStore.supports]]) with no Spark job and no Catalyst analysis.
   * The reference answers each JSON query as one in-process DuckDB
   * statement; a Spark job per stage costs more than the whole answer on a
   * store that fits the driver.
   *
   * Rows are kept sorted three ways: the columns themselves by s (id
-  * lookups, page hydration, facets), and two row-index permutations by
-  * (p, o, s) (property filters) and by (o, s) (reverse references).
-  * Keys compare as signed longs — Spark's `LongType` order — so subject
-  * sets are sorted distinct arrays in the order the Spark tier pages
-  * them, and AND/OR/NOT are merges. Terms decode through the context's
-  * `dictBroadcast` map. The output goes through the Spark tier's own
-  * [[QueryEngine.assemble]], so past the subject-set, page and facet
-  * stage the envelopes are identical by construction; the Spark tier is
-  * the oracle for the rest (AlgebraProps' differential). */
+  * lookups, page hydration, facets, parent lookups of paths), and two
+  * row-index permutations by (p, o, s) (property filters) and by (o, s)
+  * (reverse references, regex matches and hops). Keys compare as signed
+  * longs — Spark's `LongType` order — so subject sets are sorted distinct
+  * arrays in the order the Spark tier pages them, and AND/OR/NOT are
+  * merges. The literals sit in a fourth index sorted by value, so a
+  * regex's static prefix is a binary-searched range. Terms decode
+  * through the context's `dictBroadcast` map. The output goes through
+  * the Spark tier's own [[QueryEngine.assemble]], so past the
+  * subject-set, page, facet and path stage the envelopes are identical
+  * by construction; the Spark tier is the oracle for the rest
+  * (AlgebraProps' differentials). */
 final class LocalStore private (
     s: Array[Long], p: Array[Long], o: Array[Long], g: Array[Long],
-    byPos: Array[Int], byOs: Array[Int]) {
+    byPos: Array[Int], byOs: Array[Int],
+    litValue: Array[String], litHash: Array[Long]) {
 
   import LocalStore._
 
   private def n: Int = s.length
 
-  /** Answer `opts`, which must satisfy [[LocalStore.supports]]. */
-  def query(ctx: EngineContext, opts: QueryOpts): QueryResult = {
-    val sets = opts.filters.flatMap(f => FilterCompiler.simpleFilter(f).map(f.op -> subjectsOf(_)))
-    val subjects = QueryEngine.foldRoles(QueryEngine.setRoles(sets))(intersect, union, minus)
+  /** Answer `opts`, which must satisfy [[LocalStore.supports]], or None
+    * for what the Spark tier answers instead: a regex that does not
+    * compile, or a paths walk holding more than
+    * [[EngineContext.maxDriverChains]] chains. */
+  def query(ctx: EngineContext, opts: QueryOpts): Option[QueryResult] = {
+    val sets = opts.filters.map(f =>
+      FilterCompiler.nonScoringFilter(f).flatMap(subjectsOf).map(f.op -> _))
+    if (sets.exists(_.isEmpty)) return None
+    val subjects = QueryEngine.foldRoles(QueryEngine.setRoles(sets.flatten))(intersect, union, minus)
       .getOrElse(Array.emptyLongArray)
     val from = math.min(opts.start.toLong, subjects.length.toLong).toInt
     val until = math.min(opts.start.toLong + opts.size, subjects.length.toLong).toInt
     val page = java.util.Arrays.copyOfRange(subjects, from, math.max(from, until))
+    val walks = opts.paths.map(pad => walk(ctx, FilterCompiler.h(pad), page).map(pad -> _))
+    if (walks.exists(_.isEmpty)) return None
     val dict = ctx.dictBroadcast.get.value
-    QueryEngine.assemble(ctx, opts, hydrate(page, opts), Map.empty,
-      subjects.length.toLong, opts.aggregates.map(agg => agg -> facet(dict, agg, subjects)))
+    Some(QueryEngine.assemble(ctx, opts, hydrate(page, opts), walks.flatten.toMap,
+      subjects.length.toLong, opts.aggregates.map(agg => agg -> facet(dict, agg, subjects))))
   }
 
   // -------------------------------------------------------------- lookups
@@ -53,27 +64,104 @@ final class LocalStore private (
 
   private def subjectRows(subject: Long): (Int, Int) = range(0, n, i => s(i), subject)
 
-  /** Sorted distinct subjects of the triples `f` matches. */
-  private def subjectsOf(f: SimpleFilter): Array[Long] = {
+  /** Sorted distinct subjects of `f`: those of its first step, then
+    * one [[referrers]] set per hop, like the Spark tier's `hopUp`. None
+    * for a regex that does not compile. */
+  private def subjectsOf(f: NonScoringFilter): Option[Array[Long]] =
+    f.first.fold(sf => Some(simpleSubjects(sf)), regexSubjects)
+      .map(first => Iterator.iterate(first)(referrers(_, _ => true)).drop(f.hops).next())
+
+  private def inGraphs(graphs: Option[Array[Long]])(row: Int): Boolean =
+    graphs.forall(gs => contains(gs, g(row)))
+
+  /** Sorted distinct subjects of the triples a simple filter matches. */
+  private def simpleSubjects(f: SimpleFilter): Array[Long] = f match {
+    case SimpleFilter.Ids(subjects, graphs) =>
+      subjectsIn(subjects.toSeq.map(subjectRows), i => i, inGraphs(graphs))
+    case SimpleFilter.Refs(objects, graphs) => referrers(objects, inGraphs(graphs))
+    case SimpleFilter.Prop(ph, objects, graphs) =>
+      val (plo, phi) = range(0, n, i => p(byPos(i)), ph)
+      val spans = objects.fold(Seq((plo, phi)))(_.toSeq.map(k => range(plo, phi, i => o(byPos(i)), k)))
+      subjectsIn(spans, byPos(_), inGraphs(graphs))
+  }
+
+  /** Sorted distinct subjects of the triples whose o is one of
+    * `objects` and that `keep` admits. */
+  private def referrers(objects: Array[Long], keep: Int => Boolean): Array[Long] =
+    subjectsIn(objects.toSeq.map(k => range(0, n, i => o(byOs(i)), k)), byOs(_), keep)
+
+  /** Sorted distinct s of the rows `row(i)`, i in the `spans`, that
+    * `keep` admits. */
+  private def subjectsIn(spans: Seq[(Int, Int)], row: Int => Int, keep: Int => Boolean): Array[Long] = {
     val out = new scala.collection.mutable.ArrayBuilder.ofLong
-    def admit(row: Int): Unit =
-      if (f.graphs.forall(gs => contains(gs, g(row)))) out += s(row)
-    f match {
-      case SimpleFilter.Ids(subjects, _) =>
-        for (k <- subjects) { val (lo, hi) = subjectRows(k); var i = lo; while (i < hi) { admit(i); i += 1 } }
-      case SimpleFilter.Refs(objects, _) =>
-        for (k <- objects) {
-          val (lo, hi) = range(0, n, i => o(byOs(i)), k)
-          var i = lo; while (i < hi) { admit(byOs(i)); i += 1 }
-        }
-      case SimpleFilter.Prop(ph, objects, _) =>
-        val (plo, phi) = range(0, n, i => p(byPos(i)), ph)
-        val spans = objects match {
-          case None => Seq((plo, phi))
-          case Some(os) => os.toSeq.map(k => range(plo, phi, i => o(byPos(i)), k))
-        }
-        for ((lo, hi) <- spans) { var i = lo; while (i < hi) { admit(byPos(i)); i += 1 } }
+    for ((lo, hi) <- spans) {
+      var i = lo
+      while (i < hi) { val r = row(i); if (keep(r)) out += s(r); i += 1 }
     }
+    sortedDistinct(out.result())
+  }
+
+  /** The subjects of a [[RegexFilter]]: the literals that the Spark
+    * tier's `startsWith` pre-filter and anchored `rlike` (which runs
+    * `Matcher.find`) both admit, as objects of triples under `p` and in
+    * `graphs` when set. None when the pattern does not compile. */
+  private def regexSubjects(rx: RegexFilter): Option[Array[Long]] = {
+    val re =
+      try java.util.regex.Pattern.compile("^(?:" + rx.pattern + ")$")
+      catch { case _: java.util.regex.PatternSyntaxException => return None }
+    val m = re.matcher("")
+    val (lo, hi) = prefixRange(FilterCompiler.staticRegexPrefix(rx.pattern))
+    val matched = new scala.collection.mutable.ArrayBuilder.ofLong
+    var i = lo
+    while (i < hi) { if (m.reset(litValue(i)).find(0)) matched += litHash(i); i += 1 }
+    Some(referrers(matched.result(), row => rx.p.forall(_ == p(row)) && inGraphs(rx.graphs)(row)))
+  }
+
+  /** [lo, hi) of the literals whose value starts with `prefix` as
+    * Spark's `startsWith` compares it, on UTF-8 bytes: a lone surrogate
+    * left where the prefix cut a pair encodes as '?'. Over well-formed
+    * strings that is a `String.startsWith`, and under the index's
+    * `compareTo` order the values with one prefix are contiguous. */
+  private def prefixRange(prefix: String): (Int, Int) = {
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val pre = new String(prefix.getBytes(utf8), utf8)
+    var lo = 0; var hi = litValue.length
+    while (lo < hi) { val m = (lo + hi) >>> 1; if (litValue(m).compareTo(pre) < 0) lo = m + 1 else hi = m }
+    var end = lo
+    while (end < litValue.length && litValue(end).startsWith(pre)) end += 1
+    (lo, end)
+  }
+
+  /** [[QueryEngine.paths]] over the driver arrays: the chains from each
+    * page subject up the property's distinct (s → o) edges, merged
+    * across graphs. A chain ends at a node with no parent; one still
+    * walking after `maxPathIterations` parents is dropped, as a cycle;
+    * a node with several parents branches. None once the walk holds
+    * more than `maxDriverChains` chains. */
+  private def walk(ctx: EngineContext, prop: Long,
+      page: Array[Long]): Option[Array[(Long, Seq[Long])]] = {
+    val finished = Array.newBuilder[(Long, Seq[Long])]
+    var nFinished = 0
+    var frontier: Seq[(Long, Vector[Long])] = page.toSeq.map(x => (x, Vector(x)))
+    def held = nFinished + frontier.size
+    var level = 0
+    while (held <= ctx.maxDriverChains && frontier.nonEmpty && level < ctx.maxPathIterations) {
+      frontier = frontier.flatMap { case (src, path) =>
+        val parents = parentsOf(path.last, prop)
+        if (parents.isEmpty) { finished += ((src, path)); nFinished += 1 }
+        parents.toSeq.map(par => (src, path :+ par))
+      }
+      level += 1
+    }
+    if (held > ctx.maxDriverChains) None else Some(finished.result())
+  }
+
+  /** The distinct o of `node`'s triples under property `prop`. */
+  private def parentsOf(node: Long, prop: Long): Array[Long] = {
+    val (lo, hi) = subjectRows(node)
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
+    var r = lo
+    while (r < hi) { if (p(r) == prop) out += o(r); r += 1 }
     sortedDistinct(out.result())
   }
 
@@ -126,29 +214,32 @@ final class LocalStore private (
 
 object LocalStore {
 
-  /** Driver bytes per stored triple: four `Long` columns plus two `Int`
-    * permutation entries. */
-  private val BytesPerTriple = 4 * 8 + 2 * 4
+  /** Driver bytes per stored triple: four `Long` columns, two `Int`
+    * permutation entries, and one literal-index entry (a `Long` hash
+    * and a value reference; the value itself is the decode map's
+    * string). A store holds at most about one literal per triple. */
+  private val BytesPerTriple = 4 * 8 + 2 * 4 + 2 * 8
 
   /** The tier's size cap, in triples: the finished arrays may take at
     * most 1/16 of the driver's max heap,
-    * `Runtime.getRuntime.maxMemory / 16 / BytesPerTriple` (40 B/triple).
+    * `Runtime.getRuntime.maxMemory / 16 / BytesPerTriple` (56 B/triple).
     * The build's transient peak — the streamed column builders, one
     * reordered copy and the permutations — stays under ~3× the finished
     * size, so under a fifth of the heap, which in local mode also holds
-    * Spark's own cached blocks. A 4 GB heap admits ~6.7M triples. */
+    * Spark's own cached blocks. A 4 GB heap admits ~4.8M triples. */
   def maxTriples: Long = Runtime.getRuntime.maxMemory / 16 / BytesPerTriple
 
-  /** Whether the tier models `opts`: every filter simple
-    * ([[FilterCompiler.simpleFilter]]) — id, multi-id, p, p+o, reverse-o,
-    * each optionally graph-restricted, combined by any op — with
-    * only/exclude properties and facets allowed. Order, paths, fts,
-    * regex, hops, semantic and random/sample filters, an empty filter
+  /** Whether the tier models `opts`: every filter non-scoring
+    * ([[FilterCompiler.nonScoringFilter]]) — id, multi-id, p, p+o,
+    * reverse-o and regex, each optionally graph-restricted, p, p+o and
+    * regex with hops, combined by any op — with only/exclude
+    * properties, facets and paths allowed. Order, fts, semantic and
+    * random/sample filters, a malformed hop count, an empty filter
     * list, and negative size/start stay on the Spark tier. */
   def supports(opts: QueryOpts): Boolean =
-    opts.filters.nonEmpty && opts.order.isEmpty && opts.paths.isEmpty &&
+    opts.filters.nonEmpty && opts.order.isEmpty &&
       opts.size >= 0 && opts.start >= 0 &&
-      opts.filters.forall(f => FilterCompiler.simpleFilter(f).isDefined)
+      opts.filters.forall(f => FilterCompiler.nonScoringFilter(f).isDefined)
 
   /** The context's store, built at the first call (single-flight per
     * context), or None when the context has no decode map, the store is
@@ -168,7 +259,8 @@ object LocalStore {
 
   /** Stream the context's triples into sorted arrays, or None past
     * `cap` triples (also when the plan's row count already says so) or
-    * on a null column the tier does not model. */
+    * on a null column the tier does not model. The literal index holds
+    * the rows of `graph.literals`, their values from the decode map. */
   private[graft] def load(ctx: EngineContext, cap: Long): Option[LocalStore] = {
     val t = ctx.graph.triples
     val known = graft.store.Graph.planRowCount(t)
@@ -203,7 +295,27 @@ object LocalStore {
       val c = java.lang.Long.compare(o(a), o(b))
       if (c != 0) c else java.lang.Long.compare(s(a), s(b))
     })
-    Some(new LocalStore(s, p, o, g, byPos, byOs))
+    val (litValue, litHash) = literalIndex(ctx)
+    Some(new LocalStore(s, p, o, g, byPos, byOs, litValue, litHash))
+  }
+
+  /** The literals' (values, hashes), sorted by value: the hashes of
+    * `graph.literals` streamed like the triples, each decoded through
+    * the context's map (a null value matches no pattern and is left
+    * out). */
+  private def literalIndex(ctx: EngineContext): (Array[String], Array[Long]) = {
+    val dict = ctx.dictBroadcast.get.value
+    val hb = new scala.collection.mutable.ArrayBuilder.ofLong
+    val it = ctx.graph.literals.select("hash").toLocalIterator()
+    while (it.hasNext) {
+      val r = it.next()
+      if (!r.isNullAt(0) && dict.get(r.getLong(0)).exists(_ != null)) hb += r.getLong(0)
+    }
+    val hashes = hb.result()
+    val values = hashes.map(dict)
+    val byValue = identity(hashes.length)
+    sortIndices(byValue, (a, b) => values(a).compareTo(values(b)))
+    (byValue.map(values), byValue.map(hashes))
   }
 
   // --------------------------------------------------------- array helpers

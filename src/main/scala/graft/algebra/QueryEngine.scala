@@ -769,15 +769,15 @@ object QueryEngine {
   // ------------------------------------------------------------ full query
 
   /** The primary read path: full result assembly mirroring query.py's
-    * envelope. A simple-filter request ([[LocalStore.supports]]) on a
+    * envelope. A non-scoring request ([[LocalStore.supports]]) on a
     * context whose store fits the driver tier's cap is answered from the
-    * driver-resident copy, with no Spark job; everything else takes
-    * [[querySpark]]. Both tiers finish through [[assemble]]. */
+    * driver-resident copy, with no Spark job; everything else, and what
+    * that tier hands back, takes [[querySpark]]. Both tiers finish
+    * through [[assemble]]. */
   def query(ctx: EngineContext, opts: QueryOpts): QueryResult =
-    (if (LocalStore.supports(opts)) LocalStore.of(ctx) else None) match {
-      case Some(store) => store.query(ctx, opts)
-      case None => querySpark(ctx, opts)
-    }
+    (if (LocalStore.supports(opts)) LocalStore.of(ctx) else None)
+      .flatMap(_.query(ctx, opts))
+      .getOrElse(querySpark(ctx, opts))
 
   /** The Spark tier of [[query]]. Heavy stages stay distributed; only
     * the ≤size-row page, its decode dictionary slice, and facet rows are

@@ -7,7 +7,7 @@ import graft.ingest.{Build, Quad}
 import graft.semantic.{Embedder, HashingEmbedder, Semantic, SemanticMaintenance}
 import graft.store.{Graph, MutationResult, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.json4s.{DefaultFormats, Formats}
+import org.json4s.{DefaultFormats, Formats, JValue}
 import org.json4s.jackson.JsonMethods
 
 /** Public API facade — the Spark-native counterpart of the reference's
@@ -325,9 +325,12 @@ final class Bikidata(
     * for 7 days. The epoch is read BEFORE the context, so a result
     * computed on a context that a concurrent mutation retires is filed
     * under the retired epoch, where no later lookup finds it. */
-  def queryJson(optsJson: String, useCache: Boolean = true): String = {
+  def queryJson(optsJson: String, useCache: Boolean = true): String =
+    queryJson(JsonMethods.parse(optsJson), useCache)
+
+  /** [[queryJson]] for a request its transport already decoded. */
+  private[api] def queryJson(parsed: JValue, useCache: Boolean): String = {
     implicit val fmts: Formats = DefaultFormats
-    val parsed = JsonMethods.parse(optsJson)
     val opts = QueryOpts.fromJValue(parsed)
     val nondet = opts.filters.exists(f => f.p == "id" &&
       (f.o.startsWith("random") || f.o.startsWith("sample")))

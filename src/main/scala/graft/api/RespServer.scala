@@ -90,12 +90,13 @@ final class RespServer(bk: Bikidata, port: Int = 0, numWorkers: Int = 1,
     * (workers.py:83-85 logs and continues). */
   private def dispatch(optsJson: Array[Byte]): Unit = {
     val json = new String(optsJson, UTF_8)
-    val ticket =
-      try (JsonMethods.parse(json) \ "query_ticket") match {
-        case JString(t) if t.nonEmpty => Some(t)
-        case _ => None
-      } catch { case scala.util.control.NonFatal(_) => None }
-    pool.submitAsync(json).whenComplete { (res, err) =>
+    // decoded once here; a payload that does not parse goes to the pool
+    // as text, which answers it with the parse error's envelope
+    val parsed =
+      try Some(JsonMethods.parse(json))
+      catch { case scala.util.control.NonFatal(_) => None }
+    val ticket = parsed.map(_ \ "query_ticket").collect { case JString(t) if t.nonEmpty => t }
+    parsed.fold(pool.submitAsync(json))(j => pool.submitAsync(j)).whenComplete { (res, err) =>
       val envelope = if (err == null) res else WorkerPool.errorEnvelope(err)
       ticket match {
         case Some(t) => push(t, Seq(envelope.getBytes(UTF_8)), head = true)
@@ -182,7 +183,7 @@ final class RespServer(bk: Bikidata, port: Int = 0, numWorkers: Int = 1,
 
   /** Block on the first non-empty list among `keys` until `timeoutSec`
     * (0 = forever), scanning in key order like Redis BLPOP. The wait
-    * re-scans every 5 ms, where Redis wakes it on push (ROADMAP item 1). */
+    * re-scans every 5 ms, where Redis wakes it on push (ROADMAP item 4). */
   private def blockingPop(keys: Seq[String], timeoutSec: Double,
       head: Boolean): Option[(String, Array[Byte])] = {
     def firstHit = keys.iterator.map(k => k -> tryPop(k, head)).find(_._2 != null)

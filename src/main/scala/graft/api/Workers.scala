@@ -49,21 +49,30 @@ final class WorkerPool(bk: Bikidata, numWorkers: Int = 1) {
     * list, the way redis_manager/redis_worker lpush to `query_ticket`,
     * workers.py:54,108). After [[shutdown]] the future completes at once
     * with an error envelope. */
-  def submitAsync(optsJson: String): CompletableFuture[String] = {
+  def submitAsync(optsJson: String): CompletableFuture[String] =
+    enqueue(JsonMethods.parse(optsJson))
+
+  /** [[submitAsync]] for a request its transport already decoded. */
+  private[api] def submitAsync(request: JValue): CompletableFuture[String] =
+    enqueue(request)
+
+  private def enqueue(request: => JValue): CompletableFuture[String] = {
     val p = new CompletableFuture[String]()
-    try manager.execute(() => route(optsJson, p))
+    try manager.execute(() => route(request, p))
     catch { case _: RejectedExecutionException => p.complete(WorkerPool.shutDownEnvelope) }
     p
   }
 
-  /** On the manager thread: mutations run inline, so they are serialized
-    * in arrival order (the single writer); queries go to the workers. */
-  private def route(json: String, p: CompletableFuture[String]): Unit =
+  /** On the manager thread: the request decodes (once; a payload that
+    * does not parse gets an error envelope), then mutations run inline,
+    * so they are serialized in arrival order (the single writer), and
+    * queries go to the workers. */
+  private def route(request: => JValue, p: CompletableFuture[String]): Unit =
     try {
-      val parsed = JsonMethods.parse(json)
+      val parsed = request
       (parsed \ "action") match {
         case JString("insert") | JString("delete") => answer(p)(runMutation(parsed))
-        case _ => workers.execute(() => answer(p)(bk.queryJson(json)))
+        case _ => workers.execute(() => answer(p)(bk.queryJson(parsed, useCache = true)))
       }
     } catch {
       case _: RejectedExecutionException => p.complete(WorkerPool.shutDownEnvelope)

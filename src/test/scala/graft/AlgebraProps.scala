@@ -180,6 +180,112 @@ object AlgebraProps extends Properties("algebra") {
         (local == viaSpark) :| s"local $local\nspark $viaSpark"
     }
 
+  // --- regex, hop and paths reads on the driver tier ---------------------
+
+  private val literals = objs.filter(_.startsWith("\""))
+
+  /** Fixture-literal patterns: a static prefix then `.*`; the same with
+    * a quantifier right after the prefix; whole literals; a top-level
+    * `|`; no static prefix; one that closes the anchoring group early;
+    * and patterns that do not compile. */
+  private val genPattern: Gen[String] = {
+    val cut = for { l <- Gen.oneOf(literals); k <- Gen.choose(1, l.length) } yield l.take(k)
+    Gen.frequency(
+      3 -> cut.map(_ + ".*"),
+      2 -> (for { c <- cut; q <- Gen.oneOf("*", "?", "+", "{0,2}") } yield c + q + ".*"),
+      2 -> Gen.oneOf(literals),
+      2 -> (for { a <- Gen.oneOf(literals); b <- cut } yield s"$a|$b.*"),
+      2 -> Gen.oneOf(".*e.*", "[\"].*a.*", "\\\"[LD].*", ".*@(es|de)", "(\"T|\"D).*"),
+      1 -> Gen.const("\"Luke.*)|(.*Organa\""),
+      1 -> Gen.oneOf("\"Luke(", "[a-", "*x", "x{2,1}"))
+  }
+
+  private def compiles(pattern: String): Boolean =
+    scala.util.Try(java.util.regex.Pattern.compile("^(?:" + pattern + ")$")).isSuccess
+
+  private val genRegex: Gen[FilterQ] = for {
+    pattern <- genPattern
+    hops <- Gen.frequency(3 -> Gen.const(""), 1 -> Gen.choose(1, 2).map(h => s" $h"))
+    prop <- Gen.frequency(3 -> Gen.const(""), 2 -> Gen.oneOf(preds :+ absent).map(" " + _))
+  } yield FilterQ(p = s"regex$hops$prop", o = pattern)
+
+  private val genHop: Gen[FilterQ] = for {
+    p <- Gen.oneOf(preds)
+    hops <- Gen.choose(1, 2)
+    o <- Gen.frequency(1 -> Gen.const(""), 3 -> Gen.oneOf(objs))
+  } yield FilterQ(p = s"$p $hops", o = o)
+
+  private val genNonScoringOpts: Gen[QueryOpts] = for {
+    n <- Gen.choose(1, 4)
+    filters <- Gen.listOfN(n, for {
+      f <- Gen.frequency(3 -> genRegex, 2 -> genHop, 2 -> genSimple)
+      g <- genG
+      op <- Gen.oneOf("should", "or", "must", "and", "not", "xor")
+    } yield f.copy(g = g, op = op))
+    size <- Gen.choose(0, 12)
+    start <- Gen.choose(0, 4)
+    aggs <- Gen.someOf(Seq(Fixture.label, "graphs", "properties"))
+  } yield QueryOpts(filters = filters, size = size, start = start, aggregates = aggs.toSeq)
+
+  /** `opts` answered by the driver tier of `c` and by `querySpark`:
+    * byte-identical, or — for a regex that does not compile — handed to
+    * the Spark tier, which fails the same way whichever entry is used. */
+  private def matchesSpark(c: EngineContext, opts: QueryOpts): Prop = {
+    val local = LocalStore.of(c).flatMap(_.query(c, opts))
+    if (opts.filters.forall(f => !f.p.trim.startsWith("regex") || compiles(f.o.trim))) {
+      val viaSpark = QueryEngine.querySpark(c, opts).toJson
+      (LocalStore.supports(opts) && local.isDefined) :| "served locally" &&
+        local.exists(_.toJson == viaSpark) :| s"local ${local.map(_.toJson)}\nspark $viaSpark"
+    } else {
+      def failure(q: => QueryResult) = scala.util.Try(q).failed.toOption.map(_.getClass)
+      val viaSpark = failure(QueryEngine.querySpark(c, opts))
+      local.isEmpty :| "went to Spark" &&
+        (viaSpark.isDefined && failure(QueryEngine.query(c, opts)) == viaSpark) :| "same failure"
+    }
+  }
+
+  property("driver tier answers regex and hop reads exactly like the Spark tier") =
+    Prop.forAll(genNonScoringOpts)(matchesSpark(mapped, _))
+
+  /** Fixture plus `<http://ex/parent>` edges: a node with two parents
+    * whose chains differ in length, a cycle and a node entering it, a
+    * node with one finishing and one cycling parent, a chain of five
+    * edges, and one edge stored in two graphs. */
+  private val parent = "<http://ex/parent>"
+  private val extraQuads: Seq[graft.ingest.Quad] = {
+    def e(s: String, o: String, g: String = "") =
+      graft.ingest.Quad(s"<http://ex/$s>", parent, s"<http://ex/$o>", g)
+    Seq(e("x", "y1"), e("x", "y2"), e("y1", "r"), e("y2", "z"), e("z", "r"),
+      e("c1", "c2"), e("c2", "c1"), e("c3", "c1"), e("m", "r"), e("m", "c1"),
+      e("d0", "d1"), e("d1", "d2"), e("d2", "d3"), e("d3", "d4"), e("d4", "d5"),
+      e("e", "f"), e("e", "f", "<http://ex/graph2>"), e("f", "r", "<http://ex/graph2>"))
+  }
+
+  /** The extended graph's contexts under a small and the default
+    * `maxPathIterations`, each with its own driver tier. */
+  private lazy val pathCtxs: Seq[EngineContext] = {
+    val s = spark
+    import s.implicits._
+    val graph = graft.ingest.Build.graphFromQuads(spark, (quads ++ extraQuads).toDF()).persist()
+    val base = EngineContext.withDictBroadcast(EngineContext(graph))
+    Seq(2, 3, 50).map(i => base.copy(maxPathIterations = i))
+  }
+
+  private val genPathsOpts: Gen[QueryOpts] = {
+    val nodes = (subjects ++ extraQuads.flatMap(q => Seq(q.s, q.o))).distinct
+      .filter(_.startsWith("<"))
+    for {
+      ids <- Gen.choose(1, 3).flatMap(k => Gen.listOfN(k, Gen.oneOf(nodes)))
+      filter <- Gen.oneOf(FilterQ(p = "id", o = ids.mkString(" ")),
+        FilterQ(p = parent), FilterQ(p = Fixture.broader), FilterQ(p = s"$parent 1"))
+      pads <- Gen.nonEmptyListOf(Gen.oneOf(parent, Fixture.broader, Fixture.a, absent))
+      size <- Gen.choose(1, 12)
+    } yield QueryOpts(filters = Seq(filter), size = size, paths = pads.distinct)
+  }
+
+  property("driver tier walks paths exactly like the Spark tier") =
+    Prop.forAll(Gen.oneOf(0, 1, 2), genPathsOpts) { (i, opts) => matchesSpark(pathCtxs(i), opts) }
+
   property("hash round-trip: dictionary decodes every term") =
     Prop.forAll(Gen.oneOf(quads)) { q =>
       val dict = ctx.graph.dict

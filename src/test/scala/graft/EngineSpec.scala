@@ -203,6 +203,56 @@ class EngineSpec extends SparkSpec {
     * structures built yet. */
   private def freshLocalCtx: EngineContext = EngineContext.withDictBroadcast(ctx)
 
+  /** Spark jobs started while `body` runs, on any thread (the Spark
+    * tier runs its actions from futures). Jobs are counted between the
+    * starts of two marker jobs, each in a job group of its own; the
+    * listener bus delivers events in order. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"window-${System.nanoTime()}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger()
+    val open = new java.util.concurrent.atomic.AtomicBoolean()
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case g if g == s"$group-open" => open.set(true)
+          case g if g == s"$group-close" => open.set(false); closed.countDown()
+          case _ => if (open.get) { counted.incrementAndGet(); () }
+        }
+    }
+    def marker(tag: String): Unit = {
+      sc.setJobGroup(s"$group-$tag", tag)
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("open")
+      body
+      marker("close")
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      counted.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("below the cap, regex, hop and paths reads run no Spark job; fts and order still do") {
+    val c = freshLocalCtx
+    assert(LocalStore.of(c).isDefined, "the fixture fits the driver tier")
+    def jobs(opts: QueryOpts): Int = jobsDuring { QueryEngine.query(c, opts); () }
+    assert(jobs(QueryOpts(filters = Seq(FilterQ(p = "regex", o = "\"Tato.*")))) === 0)
+    assert(jobs(QueryOpts(filters = Seq(FilterQ(p = s"$broader 1", o = "<http://ex/tatooine>")))) === 0)
+    assert(jobs(QueryOpts(filters = Seq(FilterQ(p = "id", o = "<http://ex/mos_eisley>")),
+      paths = Seq(broader))) === 0)
+    assert(jobs(QueryOpts(filters = Seq(FilterQ(p = "fts", o = "skywalker")))) >= 1)
+    assert(jobs(QueryOpts(filters = Seq(FilterQ(p = a, o = human)),
+      order = Seq(OrderRule(by = "label")))) >= 1)
+  }
+
   test("8 concurrent first queries build the driver tier once") {
     val c = freshLocalCtx
     val opts = QueryOpts(filters = Seq(FilterQ(p = a, o = human)), aggregates = Seq("graphs"))
@@ -359,6 +409,16 @@ class EngineSpec extends SparkSpec {
     assert(e.paths(broader) === Seq("<http://ex/tatooine_desert>", "<http://ex/tatooine>"))
   }
 
+  test("a driver-tier paths walk past maxDriverChains is answered by the Spark tier") {
+    val c = freshLocalCtx.copy(maxDriverChains = 0)
+    val q = QueryOpts(
+      filters = Seq(FilterQ(p = "id", o = "<http://ex/mos_eisley>")),
+      paths = Seq(broader))
+    assert(LocalStore.of(c).exists(_.query(c, q).isEmpty), "the driver tier hands it back")
+    val e = QueryEngine.query(c, q).results("<http://ex/mos_eisley>")
+    assert(e.paths(broader) === Seq("<http://ex/tatooine_desert>", "<http://ex/tatooine>"))
+  }
+
   test("paths iteration cap drops/keeps the same chains on every walk") {
     val q = QueryOpts(
       filters = Seq(FilterQ(p = "id", o = "<http://ex/mos_eisley>")),
@@ -372,7 +432,8 @@ class EngineSpec extends SparkSpec {
     def walks(iter: Int) = Seq(
       ctx.copy(maxPathIterations = iter), // broadcast arrays
       noArraysCtx.copy(maxPathIterations = iter), // driver join walk
-      noArraysCtx.copy(maxPathIterations = iter, maxDriverChains = 0)) // distributed
+      noArraysCtx.copy(maxPathIterations = iter, maxDriverChains = 0), // distributed
+      freshLocalCtx.copy(maxPathIterations = iter)) // driver tier
     for (c <- walks(2)) {
       val e = QueryEngine.query(c, q).results("<http://ex/mos_eisley>")
       assert(e.paths.getOrElse(broader, Nil).isEmpty,
