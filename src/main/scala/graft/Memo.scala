@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 /** Values built at most once per key, on first use: the lifecycle of
@@ -22,18 +22,13 @@ import scala.jdk.CollectionConverters._
   * finishes after its entry was dropped hands its value to its callers
   * and releases it: nothing dropped stays pinned. [[retire]] clears and
   * stops keeping anything, for a memo whose inputs are gone.
+  * [[handOver]] moves built pinned entries to another memo, which from
+  * then on keeps and releases them.
   *
   * Past `maxEvictable` entries, every entry without a release action is
   * dropped (they cost only a rebuild); pinned entries never are. */
 final class Memo[K](maxEvictable: Int = Int.MaxValue) {
-  private final class Slot(build: => Any, val release: Option[Any => Unit]) {
-    @volatile private var built = false
-    private val released = new AtomicBoolean()
-    lazy val value: Any = { val v = build; built = true; v }
-    /** Release the value once, if it was built; never forces a build. */
-    def free(): Unit =
-      if (built && released.compareAndSet(false, true)) release.foreach(_(value))
-  }
+  import Memo.Slot
 
   private val slots = new ConcurrentHashMap[K, Slot]()
   @volatile private var closed = false
@@ -48,21 +43,34 @@ final class Memo[K](maxEvictable: Int = Int.MaxValue) {
     get(key, Some(release.asInstanceOf[Any => Unit]), build)
 
   private def get[A](key: K, release: Option[Any => Unit], build: => A): A = {
-    val fresh = new Slot({ buildCount.incrementAndGet(); build }, release)
+    val fresh = new Slot({ buildCount.incrementAndGet(); build }, release, this)
     val slot = if (closed) fresh else slots.computeIfAbsent(key, _ => fresh)
     if ((slot eq fresh) && !closed && release.isEmpty && slots.size > maxEvictable)
       slots.values.removeIf(s => s.release.isEmpty && (s ne fresh))
     val v = slot.value
     // retire() may have run its sweep before this slot went in
     if (closed) slots.remove(key, slot)
-    if (slots.get(key) ne slot) slot.free()
+    if (slots.get(key) ne slot) slot.free(this)
     v.asInstanceOf[A]
   }
 
   /** Drop every entry, releasing the built ones. */
   def clear(): Unit = {
     val it = slots.values.iterator()
-    while (it.hasNext) { val s = it.next(); it.remove(); s.free() }
+    while (it.hasNext) { val s = it.next(); it.remove(); s.free(this) }
+  }
+
+  /** Move the built pinned entries of `keys` to `to`, which from then on
+    * keeps them and releases them; this memo no longer does. An entry
+    * still building, or already released, stays here. */
+  def handOver(keys: Iterable[K], to: Memo[K]): Unit = keys.foreach { k =>
+    val s = slots.get(k)
+    if (s != null && s.release.isDefined && s.moveTo(to)) {
+      slots.remove(k, s)
+      if ((to.slots.putIfAbsent(k, s) ne null) || to.closed) {
+        to.slots.remove(k, s); s.free(to)
+      }
+    }
   }
 
   /** Stop keeping values and [[clear]]: later calls still get a value,
@@ -75,4 +83,35 @@ final class Memo[K](maxEvictable: Int = Int.MaxValue) {
   def builds: Long = buildCount.get
 
   def keys: Set[K] = slots.keySet.asScala.toSet
+}
+
+object Memo {
+  /** One entry: built at most once, released at most once, and only by
+    * the memo that owns it ([[Memo.handOver]] changes the owner). */
+  private final class Slot(build: => Any, val release: Option[Any => Unit],
+      private var owner: AnyRef) {
+    @volatile private var built = false
+    private var released = false
+    // not the slot's own monitor: the lazy val holds that while it builds
+    private val lock = new Object
+    lazy val value: Any = { val v = build; built = true; v }
+
+    /** Release the value once, if it was built and `by` owns it; never
+      * forces or waits on a build. */
+    def free(by: AnyRef): Unit = {
+      val now = lock.synchronized {
+        val go = built && (owner eq by) && !released
+        if (go) released = true
+        go
+      }
+      if (now) release.foreach(_(value))
+    }
+
+    /** Make `to` the owner of a built, unreleased value. */
+    def moveTo(to: AnyRef): Boolean = lock.synchronized {
+      val go = built && !released
+      if (go) owner = to
+      go
+    }
+  }
 }

@@ -396,7 +396,7 @@ object RdfQueries {
     "q_rdf_delete" -> ((s, dir) => {
       import s.implicits._
       val ctx = rctx(s, dir)
-      val (g2, res) = Mutations.delete(ctx.graph,
+      val (g2, res) = Mutations.delete(ctx.sparkGraph,
         Seq(("<urn:t:region:1>", LabelIri, None, graphIri("region"))))
       assert(res.error.isEmpty, res.error)
       Seq(g2.triples.count()).toDF("cnt")
@@ -406,7 +406,7 @@ object RdfQueries {
     "q_rdf_insert" -> ((s, dir) => {
       import s.implicits._
       val ctx = rctx(s, dir)
-      val (g2, res) = Mutations.insert(ctx.graph,
+      val (g2, res) = Mutations.insert(ctx.sparkGraph,
         Seq(Quad("<urn:t:region:99>", LabelIri, "\"NEWLAND\"", graphIri("region"))))
       assert(res.error.isEmpty, res.error)
       Seq(g2.triples.count()).toDF("cnt")
@@ -434,7 +434,7 @@ object RdfQueries {
         .collect().map(_.getLong(0)).toIndexedSeq
       val n = ids.length.toLong
       val nDistinct = ids.distinct.length.toLong
-      val nMembers = ctx.graph.triples.filter(col("s").isin(ids: _*))
+      val nMembers = ctx.sparkGraph.triples.filter(col("s").isin(ids: _*))
         .select("s").distinct().count()
       import s.implicits._
       Seq((n <= 50L, nMembers == n, nDistinct == n, n > 0L))
@@ -516,9 +516,9 @@ object RdfQueries {
       val ctx = rctx(s, dir)
       ctx.plan("q_rdf_flagship") {
       val seedHash = FilterCompiler.h("<urn:t:customer:1>")
-      val seedPairs = ctx.graph.triples.filter(col("s") === seedHash)
+      val seedPairs = ctx.sparkGraph.triples.filter(col("s") === seedHash)
         .select(col("p").as("sp"), col("o").as("so")).distinct()
-      val shared = ctx.graph.triples
+      val shared = ctx.sparkGraph.triples
         .join(broadcast(seedPairs), col("p") === col("sp") && col("o") === col("so"))
         .filter(col("s") =!= seedHash)
         .groupBy("s").agg(count(lit(1)).as("shared"))
@@ -536,7 +536,7 @@ object RdfQueries {
             .filter(col("s").isNotNull)
             .orderBy(col("shared").desc, col("s"))
         case None =>
-          shared.join(ctx.graph.iris, shared("s") === col("hash"))
+          shared.join(ctx.sparkGraph.iris, shared("s") === col("hash"))
             .select(col("value").as("s"), col("shared"))
             .orderBy(col("shared").desc, col("s"))
       } }

@@ -12,12 +12,21 @@ import org.apache.spark.sql.functions._
   * reference's `random N` is nondeterministic, query.py:155-164; a fixed
   * seed makes tests reproducible).
   *
-  * `dictBroadcast` is the decode fast path: when the term dictionary fits
-  * on the driver (serving sessions at test/warehouse scale), hash→string
-  * decode becomes a broadcast-map lookup instead of a per-query join —
-  * the join would re-broadcast (or shuffle) the whole dictionary for
-  * every page decode. At corpus scales where the dictionary cannot fit,
-  * leave it None and every decode falls back to the join path. */
+  * `graph` and `fts` are the frames as the caller made them. The Spark
+  * tier plans over [[sparkGraph]] and [[sparkFts]]: the same frames when
+  * the caller already cached them, otherwise cached copies that the
+  * first Spark-tier request builds and [[retire]] releases. A context
+  * loaded only to answer driver-tier reads ([[LocalStore]]) never caches
+  * a frame.
+  *
+  * `dict` is the decode fast path: when the term dictionary fits on the
+  * driver (serving sessions at test/warehouse scale), hash→string decode
+  * is a map lookup instead of a per-query join — the join would
+  * re-broadcast (or shuffle) the whole dictionary for every page decode.
+  * The driver tier and [[QueryEngine.assemble]] read the map directly;
+  * Spark plans read it through [[dictBroadcast]], made at the first plan
+  * that decodes. At corpus scales where the dictionary cannot fit, leave
+  * it None and every decode falls back to the join path. */
 final case class EngineContext(
     graph: Graph,
     fts: Option[FtsIndex] = None,
@@ -41,7 +50,7 @@ final case class EngineContext(
     // under this become an o-IN scan predicate on the triples probe —
     // batch min/max pruning instead of a join; above it, broadcast join
     isinProbeCap: Int = 1000,
-    dictBroadcast: Option[org.apache.spark.broadcast.Broadcast[Map[Long, String]]] = None) {
+    dict: Option[EngineContext.Dictionary] = None) {
 
   /** Every structure derived from this context's store: path edge sets,
     * whole-store stats and frames, plans, probe results and the driver
@@ -49,8 +58,51 @@ final case class EngineContext(
     * replaces the context (Bikidata.invalidate), so each is a constant
     * of this instance, built at first use. A body member, not a
     * parameter: a copy() starts empty and never sees, or releases, this
-    * instance's entries. */
+    * instance's entries ([[withSemantic]] hands some over explicitly). */
   private val memo = new graft.Memo[Any](EngineContext.maxServingEntries)
+
+  /** The graph the Spark tier plans over (see the class doc). */
+  private[graft] def sparkGraph: Graph =
+    cachedForSpark("sparkGraph", graph)(_.isPersisted, _.persist(), _.unpersist())
+
+  /** The FTS index the Spark tier matches against (see the class doc). */
+  private[graft] def sparkFts: Option[FtsIndex] =
+    fts.map(cachedForSpark("sparkFts", _)(
+      _.postingLists.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      _.persist(), _.unpersist()))
+
+  /** `a` itself when `isCached(a)`, else `persist(a)`, built once per
+    * context and released by `unpersist` on [[retire]]. A retired
+    * context caches nothing new and returns `a`. */
+  private def cachedForSpark[A](key: String, a: A)(isCached: A => Boolean,
+      persist: A => A, unpersist: A => Unit): A =
+    if (retired) a
+    else pinned(key, (own: Option[A]) => own.foreach(unpersist)) {
+      if (isCached(a)) None else Some(persist(a))
+    }.getOrElse(a)
+
+  /** [[dict]]'s decode map as a broadcast, for [[decodeExpr]]: made at
+    * the first call, unpersisted on [[retire]] without blocking, so a
+    * query still holding it completes. A retired context makes none (a
+    * retired memo would make one per call) and decodes by join. */
+  private[graft] def dictBroadcast: Option[org.apache.spark.broadcast.Broadcast[Map[Long, String]]] =
+    if (retired) None
+    else dict.map(d => pinned("dictBroadcast",
+      (b: org.apache.spark.broadcast.Broadcast[Map[Long, String]]) => b.unpersist(false)) {
+      graph.spark.sparkContext.broadcast(d.decode)
+    })
+
+  /** This context with a semantic index installed. The copy takes over
+    * the store tiers this context built ([[sparkGraph]], [[sparkFts]],
+    * [[dictBroadcast]], [[LocalStore]]): they derive from `graph`, `fts`
+    * and `dict`, which the copy shares. Every other entry stays here, to
+    * be released when this context retires. */
+  private[graft] def withSemantic(table: DataFrame,
+      ann: graft.semantic.SemanticAnn): EngineContext = {
+    val c = copy(semantic = Some(table), semanticAnn = Some(ann))
+    memo.handOver(EngineContext.storeTierKeys, c.memo)
+    c
+  }
 
   /** Decode column via the broadcast map (None => use the join path).
     *
@@ -144,27 +196,28 @@ object EngineContext {
   /** Overflow bound for [[EngineContext.cached]] entries. */
   private[algebra] val maxServingEntries = 1024
 
-  /** Collect + broadcast the dictionary when it is bounded (see
-    * [[collectDict]]); past the bound the context is returned as it is
-    * and every decode takes the join path. */
+  /** The memo keys of the store tiers (see [[EngineContext.withSemantic]]). */
+  private val storeTierKeys = Seq("sparkGraph", "sparkFts", "dictBroadcast", "localStore")
+
+  /** The term dictionary held on the driver ([[collectDict]]): the
+    * decode map, and the hash of every LITERAL row in it, in collect
+    * order. */
+  final case class Dictionary(decode: Map[Long, String], literals: Array[Long])
+
+  /** `ctx` decoding through its collected dictionary when it is bounded
+    * (see [[collectDict]]); past the bound the context is returned as it
+    * is and every decode takes the join path. */
   def withDictBroadcast(ctx: EngineContext, maxEntries: Long = 5000000L): EngineContext =
-    withDict(ctx, collectDict(ctx.graph, maxEntries))
+    collectDict(ctx.graph, maxEntries).fold(ctx)(d => ctx.copy(dict = Some(d)))
 
-  /** `ctx` decoding through `dict` from [[collectDict]], broadcast. */
-  def withDict(ctx: EngineContext, dict: Option[(Map[Long, String], Long)]): EngineContext =
-    dict.fold(ctx) { case (m, _) =>
-      ctx.copy(dictBroadcast = Some(ctx.graph.spark.sparkContext.broadcast(m)))
-    }
-
-  /** The whole dictionary as a decode map, plus the number of LITERAL
-    * entries in it, or None when it holds more than `maxEntries` rows.
-    * One limit-bounded collect decides AND delivers: reading
-    * maxEntries + 1 rows either proves the dictionary is too big
-    * (driver memory capped at one extra row) or already holds the whole
-    * map. Each row carries its origin, so the same job counts the
-    * literals a context load checks its stored FTS index against. */
-  def collectDict(graph: Graph,
-      maxEntries: Long = 5000000L): Option[(Map[Long, String], Long)] = {
+  /** The whole dictionary on the driver, or None when it holds more
+    * than `maxEntries` rows. One limit-bounded collect decides AND
+    * delivers: reading maxEntries + 1 rows either proves the dictionary
+    * is too big (driver memory capped at one extra row) or already holds
+    * the whole map. Each row carries its origin, so the same job yields
+    * the literal rows a context load checks its stored FTS index
+    * against and the driver tier indexes for regex reads. */
+  def collectDict(graph: Graph, maxEntries: Long = 5000000L): Option[Dictionary] = {
     val max = math.min(maxEntries, Int.MaxValue - 1L).toInt
     def tagged(d: DataFrame, literal: Boolean) =
       d.select(col("hash"), col("value"), lit(literal))
@@ -172,8 +225,8 @@ object EngineContext {
       .union(tagged(graph.literals, literal = true))
       .limit(max + 1).collect()
     if (rows.length > max) None
-    else Some((rows.map(r => r.getLong(0) -> r.getString(1)).toMap,
-      rows.count(_.getBoolean(2)).toLong))
+    else Some(Dictionary(rows.map(r => r.getLong(0) -> r.getString(1)).toMap,
+      rows.collect { case r if r.getBoolean(2) => r.getLong(0) }))
   }
 }
 
@@ -327,14 +380,14 @@ object FilterCompiler {
   private def hopUp(ctx: EngineContext, t0: DataFrame, hops: Int, extra: Seq[String]): DataFrame = {
     var acc = t0
     for (i <- 1 to hops) {
-      val t = ctx.graph.triples.as(s"T$i")
+      val t = ctx.sparkGraph.triples.as(s"T$i")
       // size-conditional probe: a small frontier (no score ride-along)
       // becomes an o-IN scan predicate, pruned by the (p,o,s)-sorted
       // batch stats; otherwise the frontier is the broadcast side so the
       // full triples relation never shuffles per hop
       acc =
         if (extra.isEmpty && ctx.isinProbeCap > 0)
-          oInOrJoin(ctx, ctx.graph.triples, acc.select("s").distinct())
+          oInOrJoin(ctx, ctx.sparkGraph.triples, acc.select("s").distinct())
         else
           t.join(broadcast(acc.as(s"A$i")), col(s"T$i.o") === col(s"A$i.s"))
             .select(col(s"T$i.s").as("s") +: extra.map(c => col(s"A$i.$c")): _*)
@@ -492,7 +545,7 @@ object FilterCompiler {
     }
 
   def compile(ctx: EngineContext, f: FilterQ, withScore: Boolean = false): Option[DataFrame] = {
-    val triples = ctx.graph.triples
+    val triples = ctx.sparkGraph.triples
     val p = f.p.trim
     val o = f.o.trim
     val g = f.g.trim
@@ -570,8 +623,8 @@ object FilterCompiler {
       // the same prune DuckDB applies to SIMILAR TO.
       val prefix = FilterCompiler.staticRegexPrefix(o)
       val preFiltered =
-        if (prefix.nonEmpty) ctx.graph.literals.filter(col("value").startsWith(prefix))
-        else ctx.graph.literals
+        if (prefix.nonEmpty) ctx.sparkGraph.literals.filter(col("value").startsWith(prefix))
+        else ctx.sparkGraph.literals
       val lits = preFiltered
         .filter(col("value").rlike("^(?:" + o + ")$"))
         .select(col("hash").as("lhash"))
@@ -582,7 +635,7 @@ object FilterCompiler {
       val t0 = oInOrJoin(ctx, propFilter(withG(triples)), lits)
       Some(hopUp(ctx, t0, hops, Nil))
     } else if (p.startsWith("fts")) {
-      ctx.fts.map { idx =>
+      ctx.sparkFts.map { idx =>
         val scored = idx.matchBm25(o).withColumnRenamed("hash", "mhash")
         if (withScore) {
           // size-conditional probe, like the set-only path below but

@@ -15,7 +15,7 @@ package graft.algebra
   * arrays in the order the Spark tier pages them, and AND/OR/NOT are
   * merges. The literals sit in a fourth index sorted by value, so a
   * regex's static prefix is a binary-searched range. Terms decode
-  * through the context's `dictBroadcast` map. The output goes through
+  * through the context's driver-side `dict` map. The output goes through
   * the Spark tier's own [[QueryEngine.assemble]], so past the
   * subject-set, page, facet and path stage the envelopes are identical
   * by construction; the Spark tier is the oracle for the rest
@@ -44,7 +44,7 @@ final class LocalStore private (
     val page = java.util.Arrays.copyOfRange(subjects, from, math.max(from, until))
     val walks = opts.paths.map(pad => walk(ctx, FilterCompiler.h(pad), page).map(pad -> _))
     if (walks.exists(_.isEmpty)) return None
-    val dict = ctx.dictBroadcast.get.value
+    val dict = ctx.dict.get.decode
     Some(QueryEngine.assemble(ctx, opts, hydrate(page, opts), walks.flatten.toMap,
       subjects.length.toLong, opts.aggregates.map(agg => agg -> facet(dict, agg, subjects))))
   }
@@ -249,7 +249,7 @@ object LocalStore {
   /** [[of]] under a given size cap. The "too big" verdict (None) is kept
     * like a store, so the first call's cap decides for the context. */
   private[graft] def of(ctx: EngineContext, cap: Long): Option[LocalStore] =
-    if (ctx.dictBroadcast.isEmpty || ctx.retired) None
+    if (ctx.dict.isEmpty || ctx.retired) None
     else {
       // the arrays go with the entry; a build that a mutation overtook
       // is released by the memo and not served
@@ -259,8 +259,10 @@ object LocalStore {
 
   /** Stream the context's triples into sorted arrays, or None past
     * `cap` triples (also when the plan's row count already says so) or
-    * on a null column the tier does not model. The literal index holds
-    * the rows of `graph.literals`, their values from the decode map. */
+    * on a null column the tier does not model. The triples are read from
+    * `ctx.graph`, the frames as loaded: the tier caches no Spark frame.
+    * The literal index holds the literal rows of the context's
+    * dictionary, their values from its decode map. */
   private[graft] def load(ctx: EngineContext, cap: Long): Option[LocalStore] = {
     val t = ctx.graph.triples
     val known = graft.store.Graph.planRowCount(t)
@@ -299,20 +301,14 @@ object LocalStore {
     Some(new LocalStore(s, p, o, g, byPos, byOs, litValue, litHash))
   }
 
-  /** The literals' (values, hashes), sorted by value: the hashes of
-    * `graph.literals` streamed like the triples, each decoded through
-    * the context's map (a null value matches no pattern and is left
-    * out). */
+  /** The literals' (values, hashes), sorted by value: the literal rows
+    * the dictionary collect already read ([[EngineContext.collectDict]]),
+    * each decoded through its map (a null value matches no pattern and
+    * is left out). */
   private def literalIndex(ctx: EngineContext): (Array[String], Array[Long]) = {
-    val dict = ctx.dictBroadcast.get.value
-    val hb = new scala.collection.mutable.ArrayBuilder.ofLong
-    val it = ctx.graph.literals.select("hash").toLocalIterator()
-    while (it.hasNext) {
-      val r = it.next()
-      if (!r.isNullAt(0) && dict.get(r.getLong(0)).exists(_ != null)) hb += r.getLong(0)
-    }
-    val hashes = hb.result()
-    val values = hashes.map(dict)
+    val dict = ctx.dict.get
+    val hashes = dict.literals.filter(h => dict.decode.get(h).exists(_ != null))
+    val values = hashes.map(dict.decode)
     val byValue = identity(hashes.length)
     sortIndices(byValue, (a, b) => values(a).compareTo(values(b)))
     (byValue.map(values), byValue.map(hashes))

@@ -56,8 +56,8 @@ object Ordering {
     * every subject of `sResults` (left join — unlabeled subjects sort per
     * the nulls rule). */
   def sortedSubjects(ctx: EngineContext, sResults: DataFrame, rule: OrderRule): (DataFrame, Seq[Column]) = {
-    val triples = ctx.graph.triples
-    val literals = ctx.graph.literals
+    val triples = ctx.sparkGraph.triples
+    val literals = ctx.sparkGraph.literals
 
     // The literals lookup is a DECODE restricted to literal hashes: with
     // the session decode map in hand it is a broadcast-map expression

@@ -166,7 +166,7 @@ object QueryEngine {
     val anyPred = roles.map(_._2).reduce(_ || _)
     val aggCols = roles.zipWithIndex.map { case ((_, p), i) =>
       max(when(p, lit(1)).otherwise(lit(0))).as(s"__f$i") }
-    val flags = ctx.graph.triples.filter(anyPred)
+    val flags = ctx.sparkGraph.triples.filter(anyPred)
       .groupBy(col("s")).agg(aggCols.head, aggCols.tail: _*)
     val expr = foldRoles(roles.zipWithIndex.map { case ((op, _), i) =>
       (op, col(s"__f$i") === 1) })(_ && _, _ || _, (a, b) => a && !b).get
@@ -245,7 +245,7 @@ object QueryEngine {
     * with only/exclude property filtering. Returns hash-level rows
     * (s, p, o, g, pos). The page side is tiny → broadcast. */
   def hydrate(ctx: EngineContext, opts: QueryOpts, wanted: DataFrame): DataFrame = {
-    val t = ctx.graph.triples
+    val t = ctx.sparkGraph.triples
     // the page is ≤ size rows BY CONSTRUCTION (wantedPage's limit), so
     // when size fits the probe cap the page rows are collected once per
     // (context, query) — a store-constant cached value — and the join
@@ -297,7 +297,7 @@ object QueryEngine {
         val d = df.withColumn(outCol, e)
         if (inner) d.filter(col(outCol).isNotNull) else d
       case None =>
-        val dict = ctx.graph.dict
+        val dict = ctx.sparkGraph.dict
           .withColumnRenamed("hash", s"__h_$outCol")
           .withColumnRenamed("value", outCol)
         df.join(dict, col(hashCol) === col(s"__h_$outCol"),
@@ -330,8 +330,7 @@ object QueryEngine {
     * (count: Long, val: String). */
   def facet(ctx: EngineContext, agg: String, sResults: DataFrame,
       sCount: Option[Long] = None): DataFrame = {
-    val t = ctx.graph.triples
-    val iris = ctx.graph.iris
+    val t = ctx.sparkGraph.triples
     // the filtered subject set is usually the small side (bounded by
     // filter selectivity) but carries no size stats after
     // persist/set-ops, so Spark would otherwise plan a two-sided shuffle
@@ -431,7 +430,7 @@ object QueryEngine {
       // Ordering before persist keeps the deterministic envelope order
       // (see facet()) inside the pinned frame.
       decoded(ctx,
-          ctx.graph.triples.groupBy(col(keyCol)).agg(count(lit(1)).as("count")),
+          ctx.sparkGraph.triples.groupBy(col(keyCol)).agg(count(lit(1)).as("count")),
           keyCol, "val", inner = true)
         .select(col("count"), col("val"))
         .orderBy(col("count").desc, col("val").asc)
@@ -503,7 +502,7 @@ object QueryEngine {
         // still complete; the blocks just stop being cached
         pe.parentArrays.foreach(_.unpersist(false))
       }) {
-      val e = ctx.graph.triples.filter(col("p") === h(propIri))
+      val e = ctx.sparkGraph.triples.filter(col("p") === h(propIri))
         .select(col("s").as("part"), col("o").as("parent")).distinct().persist()
       val maxMult = e.groupBy(col("part")).agg(count(lit(1)).as("c"))
         .agg(max(col("c"))).head().get(0)
@@ -675,20 +674,20 @@ object QueryEngine {
       size: Int = 1000, start: Int = 0): DataFrame = {
     // an s-bound lookup uses the s-sorted copy (file/row-group pruning);
     // p/o-bound lookups keep the (p,o,s)-clustered relation
-    var t = if (s.exists(_.nonEmpty)) ctx.graph.subjectAccess else ctx.graph.triples
+    var t = if (s.exists(_.nonEmpty)) ctx.sparkGraph.subjectAccess else ctx.sparkGraph.triples
     s.filter(_.nonEmpty).foreach(v => t = t.filter(col("s") === h(v)))
     p.filter(_.nonEmpty).foreach(v => t = t.filter(col("p") === h(v)))
     o.filter(_.nonEmpty).foreach(v => t = t.filter(col("o") === h(v)))
     g.filter(_.nonEmpty).foreach(v => t = t.filter(col("g") === h(v)))
-    ctx.dictBroadcast match {
+    ctx.dict match {
       case Some(_) =>
         val out = Seq(("s", "s_str"), ("p", "p_str"), ("o", "o_str"))
           .foldLeft(t) { case (df, (hc, oc)) => decoded(ctx, df, hc, oc) }
         out.select(col("s_str").as("s"), col("p_str").as("p"), col("o_str").as("o"))
           .offset(start).limit(size)
       case None =>
-        val iris = ctx.graph.iris
-        val lits = ctx.graph.literals
+        val iris = ctx.sparkGraph.iris
+        val lits = ctx.sparkGraph.literals
         t.as("T")
           .join(iris.as("U"), col("T.s") === col("U.hash"), "left")
           .join(iris.as("UU"), col("T.p") === col("UU.hash"), "left")
@@ -704,7 +703,7 @@ object QueryEngine {
   /** Batch subject+predicate lookup (query.py:38-57). */
   def sp(ctx: EngineContext, subjects: Seq[String], p: Option[String]): DataFrame = {
     val sHashes = subjects.map(h)
-    var t = ctx.graph.subjectAccess.filter(col("s").isin(sHashes: _*))
+    var t = ctx.sparkGraph.subjectAccess.filter(col("s").isin(sHashes: _*))
     p.foreach(v => t = t.filter(col("p") === h(v)))
     // both decodes ride the session map when available: the reference's
     // iris-then-literals coalesce for o IS the combined dictionary, and
@@ -716,8 +715,8 @@ object QueryEngine {
         t.select(ctx.decodeExpr(col("s")).get.as("s"),
           ctx.decodeExpr(col("o")).get.as("o"))
       case None =>
-        val iris = ctx.graph.iris
-        val lits = ctx.graph.literals
+        val iris = ctx.sparkGraph.iris
+        val lits = ctx.sparkGraph.literals
         t.as("T")
           .join(iris.as("U"), col("T.s") === col("U.hash"), "left")
           .join(iris.as("UUU"), col("T.o") === col("UUU.hash"), "left")
@@ -731,7 +730,7 @@ object QueryEngine {
     * constant between mutations, so computed once per context
     * ([[EngineContext.cached]]; mutations replace the context). */
   def total(ctx: EngineContext): Long =
-    ctx.cached("total")(ctx.graph.triples.select("s").distinct().count())
+    ctx.cached("total")(ctx.sparkGraph.triples.select("s").distinct().count())
 
   /** Distinct-subject count per predicate IRI (query.py:20-27).
     * Aggregates on the hash FIRST (map-side combine on a Long key), then
@@ -740,7 +739,7 @@ object QueryEngine {
   def properties(ctx: EngineContext): DataFrame =
     ctx.persisted("properties") {
       decoded(ctx,
-        ctx.graph.triples.groupBy(col("p"))
+        ctx.sparkGraph.triples.groupBy(col("p"))
           .agg(countDistinct(col("s")).as("count")),
         "p", "value", inner = true)
         .select(col("value"), col("count"))
@@ -750,16 +749,16 @@ object QueryEngine {
     * The inner decode keeps IRI objects only when falling back to the join
     * path; the broadcast path filters literals explicitly for parity. */
   def countByProperty(ctx: EngineContext, property: String): DataFrame = {
-    val counts = ctx.graph.triples
+    val counts = ctx.sparkGraph.triples
       .filter(col("p") === h(property))
       .groupBy(col("o"))
       .agg(countDistinct(col("s")).as("count"))
-    val d = ctx.dictBroadcast match {
+    val d = ctx.dict match {
       case Some(_) =>
         decoded(ctx, counts, "o", "value", inner = true)
           .filter(!col("value").startsWith("\""))
       case None =>
-        val iris = ctx.graph.iris
+        val iris = ctx.sparkGraph.iris
           .withColumnRenamed("hash", "__h").withColumnRenamed("value", "value")
         counts.join(iris, col("o") === col("__h")).drop("__h")
     }
@@ -872,16 +871,18 @@ object QueryEngine {
     val toFetch = scala.collection.mutable.HashSet.empty[Long]
     pageRows.foreach { case (s, p, o, _, _) => toFetch += s; toFetch += p; toFetch += o }
     pathRows.values.foreach(_.foreach(_._2.foreach(toFetch += _)))
-    val hv: Map[Long, String] = ctx.dictBroadcast match {
-      case Some(b) =>
-        toFetch.iterator.flatMap(h => b.value.get(h).map(h -> _)).toMap
+    // the driver-side map, never the broadcast: assembly runs on the
+    // driver, and a driver-tier answer must not make the broadcast
+    val hv: Map[Long, String] = ctx.dict match {
+      case Some(d) =>
+        toFetch.iterator.flatMap(h => d.decode.get(h).map(h -> _)).toMap
       case None =>
         if (toFetch.isEmpty) Map.empty
         else {
           val spark = ctx.graph.spark
           import spark.implicits._
           toFetch.toSeq.toDF("hash")
-            .join(ctx.graph.dict, "hash")
+            .join(ctx.sparkGraph.dict, "hash")
             .as[(Long, String)].collect().toMap
         }
     }

@@ -56,7 +56,16 @@ final class Bikidata(
     * the graph BEFORE a mutation reinstall its stale context AFTER the
     * mutation's invalidate() ran (the worker pool runs N query threads
     * against this facade), and two racing first-queries would each
-    * persist a graph + FTS index, leaking the loser's copies. */
+    * load a context, leaking the loser's.
+    *
+    * A load does only what the driver tier needs: it plans the
+    * warehouse frames, collects the dictionary from them (one job) and
+    * loads the stored FTS index. Nothing is cached: the graph persist,
+    * the posting-list persist and the decode-map broadcast are built by
+    * the context's first Spark-tier request ([[EngineContext.sparkGraph]],
+    * [[EngineContext.sparkFts]], [[EngineContext.dictBroadcast]]) and
+    * released when a mutation retires it; a semantic install hands them
+    * to the context it installs ([[EngineContext.withSemantic]]). */
   def ctx: EngineContext = synchronized {
     ctxOpt.getOrElse {
       // the serving context lives in its OWN session clone (the
@@ -66,7 +75,7 @@ final class Bikidata(
       // (a corpus ETL job sharing `spark` wants its own wide shuffles,
       // not this store's page-bounded reduce count)
       val serving = spark.newSession()
-      val graph = new Warehouse(serving, warehouseDir).load().persist()
+      val graph = new Warehouse(serving, warehouseDir).load()
       // serving sessions run page-bounded queries whose shuffles carry
       // subject sets bounded by the store — size reduce partitions to
       // the store, not the builder default (Graph.servingShufflePartitions)
@@ -74,8 +83,8 @@ final class Bikidata(
         graph.servingShufflePartitions.toString)
       // one-job bounded probe collects on small stores (see Rdfize.ctx)
       serving.conf.set("spark.sql.limit.initialNumPartitions", "1024")
-      // decode via one session-wide broadcast map while the dictionary is
-      // bounded; falls back to join-decode automatically past the cap
+      // decode via the driver-side map while the dictionary is bounded;
+      // falls back to join-decode automatically past the cap
       val dict = EngineContext.collectDict(graph)
       // prefer the warehouse-persisted FTS index (written at build time,
       // like the reference's in-database index); rebuild only if absent
@@ -86,12 +95,12 @@ final class Bikidata(
       // The doc count is the cheap exactness witness — appendDelta
       // writes meta LAST, so a meta whose numDocs matches the
       // dictionary implies the postings/lists appends completed too.
-      // The dictionary collect above already counted the literals; only
+      // The dictionary collect above already read the literals; only
       // a dictionary past its cap pays a count job of its own.
       var healedSettings: Option[graft.fts.FtsSettings] = None
       val fts = FtsIndex.load(serving, warehouseDir)
         .filter { idx =>
-          val nLiterals = dict.fold(graph.literals.count())(_._2)
+          val nLiterals = dict.fold(graph.literals.count())(_.literals.length.toLong)
           val ok = idx.numDocs == nLiterals
           if (!ok) {
             System.err.println(s"[bikidata] stored fts index covers ${idx.numDocs} " +
@@ -110,9 +119,8 @@ final class Bikidata(
           try FtsIndex.write(idx, warehouseDir)
           catch { case _: Exception => () } // read-only warehouse: keep in-memory
           idx
-        }.persist()
-      val c = EngineContext.withDict(
-        EngineContext(graph, fts = Some(fts), embedder = embedder), dict)
+        }
+      val c = EngineContext(graph, fts = Some(fts), embedder = embedder, dict = dict)
       ctxOpt = Some(c)
       c
     }
@@ -121,16 +129,15 @@ final class Bikidata(
   private def invalidate(dropFts: Boolean = true,
       dropSemantic: Boolean = true): Unit = synchronized {
     ctxOpt.foreach { c =>
-      // release EVERY frame the retiring context pinned — graph, FTS
-      // posting lists, semantic table, ANN cells; leaving any of them
+      // release EVERY frame the retiring context pinned — semantic
+      // table, ANN cells, and through retire() what its requests built:
+      // the cached graph and posting lists, the decode broadcast, paths()
+      // edge sets, stat frames, the driver tier. Leaving any of them
       // persisted strands one corpus-sized frame per mutation in the
-      // block manager for the session lifetime
-      c.graph.unpersist()
-      c.fts.foreach(_.unpersist())
+      // block manager for the session lifetime; the fresh context
+      // starts empty
       c.semantic.foreach(_.unpersist())
       c.semanticAnn.foreach(_.cells.unpersist())
-      // and what the context derived from them (paths() edge sets, stat
-      // frames, the driver tier); the fresh context starts empty
       c.retire()
     }
     ctxOpt = None
@@ -282,8 +289,6 @@ final class Bikidata(
     // score through the composed frame (SemanticAnn.authoritative)
     val served = if (gen > 0) ann.copy(authoritative = Some(persisted)) else ann
     served.cells.persist().count()
-    def attach(c: EngineContext) =
-      c.copy(semantic = Some(persisted), semanticAnn = Some(served))
     // install under the SAME lock ctx/invalidate use, and only if the
     // context this build composed against is still the live one: a
     // mutation's invalidate() racing this unlocked assignment could have
@@ -294,12 +299,14 @@ final class Bikidata(
     // cost of a read, so bail-and-release is correct, not wasteful.
     // A live install changes what `semantic` filters answer (no index
     // answered empty), so it retires cached results like a mutation does,
-    // and it retires c0's derived structures: the copy starts without
-    // them, and nothing else would release c0's persisted frames.
+    // and it retires c0's derived structures: the copy takes over only
+    // the store tiers (the cached graph and posting lists, the decode
+    // broadcast, the driver tier), and nothing else would release the
+    // rest of c0's persisted frames.
     val installed = synchronized {
       val live = ctxOpt.exists(_ eq c0)
       if (live) {
-        ctxOpt = Some(attach(c0))
+        ctxOpt = Some(c0.withSemantic(persisted, served))
         storeEpoch += 1
         c0.retire()
       }
@@ -462,7 +469,7 @@ final class Bikidata(
     // returning the root session would hand back a session where the
     // views are invisible
     val serving = ctx.graph.spark
-    ctx.graph.registerViews()
+    ctx.sparkGraph.registerViews()
     graft.functions.GraftFunctions.register(serving)
     serving
   }

@@ -70,27 +70,38 @@ final case class Graph(
     * re-clustering kicked in). */
   def persist(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Graph = {
     val cores = spark.sparkContext.defaultParallelism
-    // The np probe (Dataset.rdd) must not EXECUTE the plan: under AQE,
-    // building the final physical plan materializes every intermediate
-    // query stage — for a delta-composed load() (union + anti-joins)
-    // that runs the join shuffles as real jobs just to learn a partition
-    // count, then the cache build runs them again. Probing with adaptive
-    // planning off binds these frames' (lazily-created) physical plans
-    // non-adaptively — which is the serving-tier plan shape anyway
-    // (fixed, store-sized partition counts; see the Bench/serving conf).
-    val adaptiveWas = spark.conf.getOption("spark.sql.adaptive.enabled")
+    // The np probes and the cache registration run in a private clone
+    // of the session, so that the settings below never reach a request
+    // planning on `spark` meanwhile (a context persists its graph at its
+    // first Spark-tier request, while others are in flight). The np
+    // probe (Dataset.rdd) must not EXECUTE the plan: under AQE, building
+    // the final physical plan materializes every intermediate query
+    // stage — for a delta-composed load() (union + anti-joins) that runs
+    // the join shuffles as real jobs just to learn a partition count,
+    // then the cache build runs them again. So the clone probes with
+    // adaptive planning off and takes the caller's value back before it
+    // registers the caches: CacheManager plans a cached query adaptively
+    // when its session does (with spark.sql.optimizer.
+    // canChangeCachedPlanOutputPartitioning at its default, false, it
+    // turns off only the final-stage shuffle optimizations), so the
+    // cached plans are the ones the caller's session makes.
+    // Cache-batch granularity is read from the caching session: the
+    // default 10k-row batches cost a per-batch dispatch (stats check +
+    // vector handoff) every scan — ~37 batches per 4 MB quad partition.
+    // These relations take FULL scans on nearly every query, and their
+    // rows are fixed-width (4 longs / hash+string), so one batch per
+    // partition is safe (≤ ~32 MB of longs) and measurably faster
+    // (full-scan p-filter distinct 0.117 → 0.075 s on the sf0.1 store).
+    // Scoped to this clone, not session-wide: wide cached frames
+    // elsewhere (embedding arrays, doc text) keep the default batch size
+    // — 1M-row batches of 512 B rows would balloon builder memory.
+    val aqe = "spark.sql.adaptive.enabled"
+    val pinning = org.apache.spark.sql.GraftShims.cloneSession(spark)
+    pinning.conf.set(aqe, "false")
+    pinning.conf.set(Graph.cacheBatchSizeKey, "1048576")
     def sized(df: DataFrame, recluster: (DataFrame, Int) => DataFrame): DataFrame = {
       val target = Graph.sizedPartitions(df, cores)
-      val np =
-        try {
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-          df.rdd.getNumPartitions
-        } finally {
-          adaptiveWas match {
-            case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
-            case None => spark.conf.unset("spark.sql.adaptive.enabled")
-          }
-        }
+      val np = org.apache.spark.sql.GraftShims.rebind(pinning, df).rdd.getNumPartitions
       if (np < target) recluster(df, target)
       // only narrow SMALL stores (target below the core cap implies the
       // whole relation is under cores×4MB): a corpus-scale relation hits
@@ -106,28 +117,16 @@ final case class Graph(
         (df, n) => df.repartitionByRange(n, col("value")).sortWithinPartitions("value")),
       literals = sized(literals,
         (df, n) => df.repartitionByRange(n, col("value")).sortWithinPartitions("value")))
-    // cache-batch granularity is captured at persist() time: the default
-    // 10k-row batches cost a per-batch dispatch (stats check + vector
-    // handoff) every scan — ~37 batches per 4 MB quad partition. These
-    // relations take FULL scans on nearly every query, and their rows are
-    // fixed-width (4 longs / hash+string), so one batch per partition is
-    // safe (≤ ~32 MB of longs) and measurably faster (full-scan p-filter
-    // distinct 0.117 → 0.075 s on the sf0.1 store). Scoped here, not
-    // session-wide: wide cached frames elsewhere (embedding arrays, doc
-    // text) keep the default batch size — 1M-row batches of 512 B rows
-    // would balloon builder memory.
-    val bsWas = spark.conf.getOption(Graph.cacheBatchSizeKey)
-    try {
-      spark.conf.set(Graph.cacheBatchSizeKey, "1048576")
-      g.triples.persist(level); g.iris.persist(level); g.literals.persist(level)
-    } finally {
-      bsWas match {
-        case Some(v) => spark.conf.set(Graph.cacheBatchSizeKey, v)
-        case None => spark.conf.unset(Graph.cacheBatchSizeKey)
-      }
-    }
+    spark.conf.getOption(aqe).fold(pinning.conf.unset(aqe))(pinning.conf.set(aqe, _))
+    for (df <- Seq(g.triples, g.iris, g.literals))
+      org.apache.spark.sql.GraftShims.rebind(pinning, df).persist(level)
     g
   }
+
+  /** Whether the three relations [[persist]] pins are all cached
+    * already (looked up in the shared cache manager; runs no job). */
+  def isPersisted: Boolean =
+    Seq(triples, iris, literals).forall(_.storageLevel != StorageLevel.NONE)
 
   /** Shuffle partition count matched to this store for a SERVING session
     * (page-bounded interactive queries whose shuffles carry subject sets
@@ -170,8 +169,8 @@ object Graph {
     * large enough that per-task dispatch is noise. */
   val cacheBytesPerPartition: Long = 4L << 20
 
-  /** Session conf key for the columnar-cache batch row count (scoped
-    * override in [[Graph.persist]]). */
+  /** Session conf key for the columnar-cache batch row count (set on
+    * [[Graph.persist]]'s private session clone). */
   val cacheBatchSizeKey = "spark.sql.inMemoryColumnarStorage.batchSize"
 
   /** Catalyst's size estimate for a frame — file bytes for a parquet

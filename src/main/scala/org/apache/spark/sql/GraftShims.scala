@@ -24,6 +24,20 @@ object GraftShims {
       cdf.sparkSession, cdf.queryExecution.optimizedPlan)
   }
 
+  /** A copy of `spark` with its own SQL conf, cloned from the current
+    * one; `cloneSession` is `private[sql]`. Same SparkContext and shared
+    * cache manager, so a frame cached through the copy serves every
+    * session that plans the same query. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** `df`'s logical plan as a DataFrame of `spark`, which then plans
+    * and caches it under its own conf. */
+  def rebind(spark: SparkSession, df: DataFrame): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      df.asInstanceOf[org.apache.spark.sql.classic.DataFrame].logicalPlan)
+
   /** Register a temp function on a LIVE session (the public
     * `SparkSessionExtensions` route only applies at session build time;
     * `sessionState` is `private[sql]`, hence this shim). */

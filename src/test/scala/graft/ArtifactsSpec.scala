@@ -6,9 +6,9 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
 /** [[Artifacts]] and the [[Memo]] under it: one build per (name, dir)
-  * under nesting, concurrency and failure, release and retirement, the
-  * overflow bound, and the pinned set of artifact names the harness
-  * builds. */
+  * under nesting, concurrency and failure, release, retirement and
+  * hand-over, the overflow bound, and the pinned set of artifact names
+  * the harness builds. */
 class ArtifactsSpec extends SparkSpec {
 
   test("a nested build on the same registry does not throw, each key builds once") {
@@ -106,6 +106,21 @@ class ArtifactsSpec extends SparkSpec {
       pool.shutdown()
       pool.awaitTermination(10, TimeUnit.SECONDS)
     }
+  }
+
+  test("handOver moves built pinned entries: the receiver keeps and releases them") {
+    val from = new Memo[String]()
+    val to = new Memo[String]()
+    val released = new AtomicInteger(0)
+    from.pinned("a", (_: String) => { released.incrementAndGet(); () })("a")
+    from("plain")("p")
+    from.handOver(Seq("a", "plain", "absent"), to)
+    assert(to.keys == Set("a") && from.keys == Set("plain"))
+    assert(to.pinned("a", (_: String) => ())("rebuilt") == "a", "the receiver serves the built value")
+    from.retire()
+    assert(released.get == 0, "the giver released an entry it handed over")
+    to.retire()
+    assert(released.get == 1 && to.keys.isEmpty)
   }
 
   test("the overflow bound drops only entries without a release action") {

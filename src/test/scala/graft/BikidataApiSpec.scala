@@ -167,6 +167,59 @@ class BikidataApiSpec extends SparkSpec {
     assert(bk.ctx.dictBroadcast.isDefined && bk.ctx.fts.isDefined)
   }
 
+  /** A facade over a fresh warehouse of the fixture quads. */
+  private def fixtureFacade(prefix: String): Bikidata = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    new Bikidata(spark, s"$dir/wh").buildFromQuads(Fixture.quads.toDF())
+    new Bikidata(spark, s"$dir/wh")
+  }
+
+  /** The ids of the RDDs that hold cached blocks now. */
+  private def cachedRdds(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  test("a context load and driver-tier reads cache no frame and make no broadcast") {
+    import graft.algebra.LocalStore
+    import org.apache.spark.storage.StorageLevel
+    val bk = fixtureFacade("graft-lazy")
+    val rdds = cachedRdds()
+    val c = bk.ctx
+    for (read <- Seq("""{"filters":[{"p":"id","o":"<http://ex/luke>"}]}""",
+        """{"filters":[{"p":"regex","o":"\"Tato.*"}],"aggregates":["properties"]}"""))
+      assert(bk.queryJson(read).contains("<http://ex/"))
+    assert(LocalStore.of(c).isDefined, "the reads must be served by the driver tier")
+    // the cached graph, the cached posting lists and the decode
+    // broadcast are each an entry of the context's memo
+    assert(c.builds === 1, "the driver tier is the context's only build")
+    for (df <- Seq(c.graph.triples, c.graph.iris, c.graph.literals, c.fts.get.postingLists))
+      assert(df.storageLevel === StorageLevel.NONE)
+    assert(cachedRdds() === rdds, "no block was cached")
+  }
+
+  test("the first Spark-tier read caches the graph; a delete releases every block the context cached") {
+    import org.apache.spark.storage.StorageLevel
+    val bk = fixtureFacade("graft-lazy-release")
+    val c = bk.ctx
+    val rdds = cachedRdds()
+    val label = "<http://www.w3.org/2000/01/rdf-schema#label>"
+    assert(bk.queryJson(s"""{"filters":[{"p":"$label"}],"order":[{"by":"label"}]}""")
+      .contains("<http://ex/luke>"))
+    assert(bk.queryJson("""{"filters":[{"p":"fts","o":"skywalker"}]}""")
+      .contains("<http://ex/luke>"))
+    val built = c.builds
+    val cached = c.sparkGraph
+    assert(cached.isPersisted, "the order read cached the graph")
+    assert(c.builds === built, "and built it: the call above found it")
+    assert(c.fts.get.postingLists.storageLevel !== StorageLevel.NONE,
+      "the fts read cached the posting lists")
+    val pinned = cachedRdds() -- rdds
+    assert(pinned.nonEmpty)
+    assert(bk.delete(Seq(("<http://ex/luke>", label, None, ""))).error.isEmpty)
+    assert(c.retired)
+    assert((cachedRdds() intersect pinned).isEmpty, "the retired context left cached blocks")
+    assert(!cached.isPersisted && c.fts.get.postingLists.storageLevel === StorageLevel.NONE)
+  }
+
   test("buildFromQuads + async mutations round-trip") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-bfq").toString
@@ -246,6 +299,30 @@ class BikidataApiSpec extends SparkSpec {
     assert(fresh.contains("<http://ex/a>") && (fresh !== noIndex), fresh)
     assert(bk.queryJson(SemanticQ) === fresh,
       "pre-index answer served from the cache after buildSemantic")
+  }
+
+  test("a semantic install keeps the store tiers the replaced context built") {
+    import graft.algebra.LocalStore
+    import org.apache.spark.storage.StorageLevel
+    val bk = semanticStore()
+    val c0 = bk.ctx
+    val graph = c0.sparkGraph
+    val fts = c0.sparkFts.get
+    val broadcast = c0.dictBroadcast.get
+    val local = LocalStore.of(c0).get
+    assert(graph.isPersisted && fts.postingLists.storageLevel != StorageLevel.NONE)
+    bk.buildSemantic()
+    val c1 = bk.ctx
+    assert(c0.retired && !c1.retired)
+    val built = c1.builds
+    assert((c1.sparkGraph eq graph) && (c1.sparkFts.get eq fts) &&
+      (c1.dictBroadcast.get eq broadcast) && (LocalStore.of(c1).get eq local))
+    assert(c1.builds === built, "the installed context rebuilt a store tier")
+    assert(graph.isPersisted && fts.postingLists.storageLevel != StorageLevel.NONE,
+      "the install released what the installed context serves from")
+    assert(bk.delete(Seq(("<http://ex/a>", "<http://ex/rel>", None, ""))).error.isEmpty)
+    assert(c1.retired && !graph.isPersisted && fts.postingLists.storageLevel == StorageLevel.NONE,
+      "retiring the installed context releases the tiers it took over")
   }
 
   test("a query that straddles a mutation does not cache its stale answer") {

@@ -278,6 +278,75 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  test("8 concurrent first Spark-tier and driver-tier reads on a lazy context answer as an eager one") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    /** A context as a facade loads it, over a fresh warehouse of the
+      * fixture: nothing cached yet. */
+    def loaded(): EngineContext = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-lazy").toString
+      new graft.api.Bikidata(spark, s"$dir/wh").buildFromQuads(Fixture.quads.toDF())
+      new graft.api.Bikidata(spark, s"$dir/wh").ctx
+    }
+    val reads = Seq(
+      QueryOpts(filters = Seq(FilterQ(p = a, o = human)), order = Seq(OrderRule(by = "label"))),
+      QueryOpts(filters = Seq(FilterQ(p = "fts", o = "skywalker"))),
+      QueryOpts(filters = Seq(FilterQ(p = "fts 1", o = "tatooine")), aggregates = Seq("properties")),
+      QueryOpts(filters = Seq(FilterQ(p = label)),
+        order = Seq(OrderRule(by = "label", dir = "desc")), size = 3),
+      QueryOpts(filters = Seq(FilterQ(p = a, o = human)), aggregates = Seq("graphs")),
+      QueryOpts(filters = Seq(FilterQ(p = "regex", o = "\"Tato.*"))),
+      QueryOpts(filters = Seq(FilterQ(p = "id", o = "<http://ex/mos_eisley>")), paths = Seq(broader)),
+      QueryOpts(filters = Seq(FilterQ(p = s"$broader 1", o = "<http://ex/tatooine>"))))
+    assert(reads.count(LocalStore.supports) === 4)
+    val expected = {
+      val c = loaded()
+      val eager = c.copy(graph = c.graph.persist(), fts = c.fts.map(_.persist()))
+      try reads.map(QueryEngine.query(eager, _).toJson)
+      finally { eager.graph.unpersist(); eager.fts.foreach(_.unpersist()); () }
+    }
+    // the memo builds one reading after another makes: the graph
+    // persist, posting-list persist and broadcast among them
+    val sequentialBuilds = {
+      val c = loaded()
+      reads.foreach(QueryEngine.query(c, _))
+      try c.builds finally c.retire()
+    }
+    val c = loaded()
+    val conf = c.graph.spark.conf
+    def settings = (conf.get("spark.sql.adaptive.enabled"),
+      conf.getOption(graft.store.Graph.cacheBatchSizeKey))
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Any]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean()
+    val watcher = new Thread(() => while (!done.get) { seen.add(settings); () })
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    try {
+      val before = settings
+      watcher.start()
+      val calls = reads.map(opts => scala.concurrent.Future {
+        start.await()
+        QueryEngine.query(c, opts).toJson
+      })
+      start.countDown()
+      val answers = scala.concurrent.Await.result(
+        scala.concurrent.Future.sequence(calls), scala.concurrent.duration.Duration(120, "s"))
+      done.set(true)
+      watcher.join()
+      assert(answers === expected)
+      assert(c.builds === sequentialBuilds, "a memo entry was built twice")
+      assert(c.sparkGraph.isPersisted)
+      assert(seen.asScala === Set(before), "a request saw the persist's settings")
+    } finally {
+      done.set(true)
+      c.retire()
+      pool.shutdown()
+      pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+    }
+  }
+
   test("a store over the driver tier's cap answers through Spark with the same envelope") {
     val c = freshLocalCtx
     val n = ctx.graph.triples.count()
@@ -303,6 +372,20 @@ class EngineSpec extends SparkSpec {
     c.retire()
     assert(LocalStore.of(c).isEmpty)
     assert(c.builds === 1, "a retired context must not rebuild")
+  }
+
+  test("a retired context makes no decode broadcast and answers as a live one") {
+    val c = freshLocalCtx
+    val opts = QueryOpts(filters = Seq(FilterQ(p = a, o = human)),
+      order = Seq(OrderRule(by = "label", lang = Seq("de", "en"))))
+    val live = QueryEngine.query(c, opts).toJson
+    assert(c.dictBroadcast.isDefined, "the live context decodes through the broadcast")
+    c.retire()
+    val built = c.builds
+    for (_ <- 1 to 3)
+      assert(c.dictBroadcast.isEmpty && c.decodeExpr(org.apache.spark.sql.functions.col("s")).isEmpty)
+    assert(c.builds === built, "a retired context made a broadcast")
+    assert(QueryEngine.query(c, opts).toJson === live)
   }
 
   test("retiring a copy leaves the original's driver tier and plans") {
